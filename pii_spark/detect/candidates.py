@@ -633,43 +633,146 @@ _RX_TRUSTISH = re.compile(r"(?i)\s?\w{0,8}(trust|tryst|rust)")
 
 
 
-# every EMAIL pattern embeds the closed domain vocabulary (patterns._DOM
-# is a REQUIRED component of both EMAIL_CANON and EMAIL_OBF), so a text
-# without any domain stem cannot match either — a handful of C-level
-# substring probes replaces the backtracking-heavy EMAIL_OBF scan on the
-# (large) majority of docs that carry no email at all (r9; equivalence
-# pinned by tests/test_detect.py::test_email_domain_prefilter).
-# 'yaho' covers yahoo/yahooo; stems are lowercase, probed on a lowered
-# copy because the patterns compile IGNORECASE.
-# every _MONTH alternative (full names AND 3-letter abbreviations,
-# patterns.py) starts with one of these stems — the DATE month gate's
-# soundness argument (see format_candidates)
+# Letter-led scans run anchored (patterns.py docstring): every _DOM
+# alternative starts with a domain stem ('yaho' covers yahoo/yahooo) and
+# every _MONTH alternative starts with a month stem (full names and
+# 3-letter abbreviations alike). Stems are lowercase and found on a
+# lowered copy, because the patterns compile IGNORECASE. A doc with no
+# stem skips the scan; otherwise only starts that can reach a stem are
+# tried, in ascending order and resuming after each match as finditer
+# does, so the result is exactly rx.finditer(text) (pinned by
+# tests/test_format_anchors.py).
 _MONTH_STEMS = ("jan", "feb", "mar", "apr", "may", "jun", "jul", "aug",
                 "sep", "oct", "nov", "dec")
 _DATE_MONTH_RX = frozenset(
     id(rx) for rx, _cf in P.DATE_PATTERNS if "january" in rx.pattern
 )
+_MONTH_LED_RX = frozenset(
+    id(rx) for rx, _cf in P.DATE_PATTERNS if rx.pattern.startswith(P._MONTH)
+)
 
 _EMAIL_DOMAIN_STEMS = ("gmail", "gmial", "gmal", "yaho", "outlook",
                        "hotmail", "aol", "protonmail", "icloud")
+
+# İ ı ſ K match an ASCII letter under IGNORECASE that text.lower() does
+# not yield ('ıcloud' is an EMAIL domain, 'ſeptember' a month), and 'İ'
+# lowers to two chars, shifting every later offset of the lowered copy:
+# a doc holding any of them skips the stems and scans in full.
+_FOLDS_TO_ASCII = re.compile("[\u0130\u0131\u017f\u212a]").search
+
+# chars no local part can hold: for EMAIL_CANON anything outside atoms
+# and '.'; for EMAIL_OBF anything outside atoms and separators, and a
+# whitespace run between two atoms that is not part of a ' dot '
+_CANON_BREAK = re.compile(r"[^A-Za-z0-9_%+\-.]")
+_OBF_BREAK = re.compile(
+    r"[^A-Za-z0-9_%+\-.\[\]\s]"
+    r"|(?<=[A-Za-z0-9_%+\-])(?<!\sdot)\s+(?!dot\s)(?=[A-Za-z0-9_%+\-])",
+    re.IGNORECASE,
+)
+
+
+def _stem_starts(low: str, stems: tuple[str, ...]) -> list[int]:
+    """Ascending start offsets of every occurrence of every stem."""
+    found = []
+    for stem in stems:
+        i = low.find(stem)
+        while i >= 0:
+            found.append(i)
+            i = low.find(stem, i + 1)
+    found.sort()
+    return found
+
+
+def _after_last_break(brk: re.Pattern, text: str, lo: int, lim: int,
+                      d: int) -> int:
+    """End of the last `brk` match that starts in [lo, lim), capped at
+    lim; lo if there is none. The 32 chars before lim are searched
+    first, since in prose a space is that close. The search stops at
+    d + 4, past the 4-char lookahead of a whitespace run ending at d
+    (text[d] is a letter, so no run starting before lim ends later)."""
+    for start in (max(lo, lim - 32), lo):
+        last = -1
+        for b in brk.finditer(text, start, d + 4):
+            if b.start() >= lim:
+                break
+            last = b.end()
+        if last >= 0:
+            return min(last, lim)
+        if start == lo:
+            break
+    return lo
+
+
+def _email_scan(rx: re.Pattern, text: str, doms: list[int], reach: int,
+                final: int, brk: re.Pattern) -> list[re.Match]:
+    """rx.finditer(text) for a bounded EMAIL pattern whose matches start
+    at most `reach` chars before their domain, one of `doms`. Before
+    each domain only the window its local part can span is tried: the
+    last `final` chars are the final separator, and the local part
+    starts after every `brk` char ahead of them."""
+    out = []
+    pos = tried = 0  # finditer's cursor; no start below `tried` matches
+    for d in doms:
+        if d <= pos:
+            continue
+        lo = max(pos, tried, d - reach)
+        lo = _after_last_break(brk, text, lo, d - final, d)
+        for q in range(lo, d):
+            m = rx.match(text, q)
+            if m is not None:
+                out.append(m)
+                pos = m.end()
+                break
+        else:
+            tried = d
+    return out
+
+
+def _month_scan(rx: re.Pattern, text: str, months: list[int]) -> list[re.Match]:
+    """rx.finditer(text) for a pattern whose matches start at a month
+    stem, one of the ascending offsets `months`."""
+    out = []
+    pos = 0
+    for q in months:
+        if q >= pos:
+            m = rx.match(text, q)
+            if m is not None:
+                out.append(m)
+                pos = m.end()
+    return out
+
+
+def _anchorable(text: str) -> bool:
+    """Whether stems found on text.lower() place every letter-led match."""
+    return text.isascii() or _FOLDS_TO_ASCII(text) is None
+
+
+def _email_scans(text: str, low: str) -> tuple[list, list]:
+    """EMAIL_CANON and EMAIL_OBF matches, as their finditer gives them."""
+    if not _anchorable(text):
+        return (list(P.EMAIL_CANON.finditer(text)),
+                list(P.EMAIL_OBF.finditer(text)))
+    doms = _stem_starts(low, _EMAIL_DOMAIN_STEMS)
+    at_doms = [d for d in doms if text[d - 1 : d] == "@"]
+    return (
+        _email_scan(P.EMAIL_CANON, text, at_doms, P.EMAIL_CANON_REACH, 1,
+                    _CANON_BREAK),
+        _email_scan(P.EMAIL_OBF, text, doms, P.EMAIL_OBF_REACH, P.SEP_MAX,
+                    _OBF_BREAK),
+    )
 
 
 def format_candidates(text: str) -> list[Candidate]:
     out: list[Candidate] = []
 
     low = text.lower()
-    if any(d in low for d in _EMAIL_DOMAIN_STEMS):
-        if "@" in text:  # canonical form requires a literal '@'
-            for m in P.EMAIL_CANON.finditer(text):
-                out.append(
-                    Candidate(_trim_email_start(text, m.start(), m.end()),
-                              m.end(), "EMAIL", 0.98)
-                )
-        for m in P.EMAIL_OBF.finditer(text):
-            out.append(
-                Candidate(_trim_email_start(text, m.start(), m.end()),
-                          m.end(), "EMAIL", 0.96)
-            )
+    canon, obf = _email_scans(text, low)
+    for m in canon:
+        out.append(Candidate(_trim_email_start(text, m.start(), m.end()),
+                             m.end(), "EMAIL", 0.98))
+    for m in obf:
+        out.append(Candidate(_trim_email_start(text, m.start(), m.end()),
+                             m.end(), "EMAIL", 0.96))
 
     if _DIGIT_SEARCH(text) is None:
         # every remaining format family (SSN/PHONE/CC/DATE/AGE/IP/ZIP/
@@ -752,17 +855,18 @@ def format_candidates(text: str) -> list[Candidate]:
                 else:
                     out.append(Candidate(s, e, "SSN", 0.89))
 
-    # month-led DATE scans (the 4 _MONTH patterns are the costliest
-    # scans in the battery: IGNORECASE word alternations defeat sre's
-    # first-char skip) only fire when a month surface form is present;
-    # every _MONTH alternative begins with one of the 12 three-letter
-    # stems, so a stem-free lowered text provably cannot match (r9;
-    # pinned by tests/test_detect.py::test_month_date_prefilter)
-    has_month = any(s in low for s in _MONTH_STEMS)
+    # month DATE scans: the _MONTH alternation defeats sre's first-char
+    # skip, so the month-led patterns are tried only at month stems, and
+    # the one with a digit-led prefix only runs when a stem is present
+    months = _stem_starts(low, _MONTH_STEMS) if _anchorable(text) else None
     for rx, conf in P.DATE_PATTERNS:
-        if not has_month and id(rx) in _DATE_MONTH_RX:
+        if months is not None and id(rx) in _MONTH_LED_RX:
+            found = _month_scan(rx, text, months)
+        elif months == [] and id(rx) in _DATE_MONTH_RX:
             continue
-        for m in rx.finditer(text):
+        else:
+            found = rx.finditer(text)
+        for m in found:
             out.append(Candidate(m.start(), m.end(), "DATE", conf))
     for m in P.YEAR_RE.finditer(text):
         s, e = m.start(1), m.end(1)

@@ -18,6 +18,19 @@ anchors would silently drop ~7% of spans, so instead:
   * _G1 allows at most ONE trailing glued letter, so "23Mx " matches
     while "23martinez" (a digit-prefixed username) does not.
 
+Letter-led scans run anchored (candidates.format_candidates): every
+_MONTH-led DATE match starts at a month stem, and every EMAIL match
+starts within a fixed reach before its domain stem, so only those
+windows are tried. The reach is finite because the EMAIL patterns are
+bounded: a local part holds at most LOCAL_OCTETS units (RFC 5321's 64
+octets, each obfuscated separator counting as the one '.' it stands
+for) and separator whitespace is at most SEP_WS chars per side. An
+unbounded local part made both scans quadratic on a long dotted run.
+The anchors are found on text.lower(); four non-ASCII code points
+(U+0130 İ, U+0131 ı, U+017F ſ, U+212A K) match an ASCII letter under
+IGNORECASE without lowering to it (and İ lowers to two chars), so a doc
+holding any of them is scanned in full instead.
+
 Dotted/spaced 3-3-4 runs are genuinely ambiguous between the SSN branches
 (generation.py:138-141) and PHONE branches (:186-187); they are exported
 as AMBIG_334_* and resolved by template context in candidates.py.
@@ -43,17 +56,33 @@ _G1 = r"(?=$|[^A-Za-z0-9]|[A-Za-z](?:$|[^A-Za-z0-9]))"
 # (generation.py:690-694: gmail→gmial/gmal, yahoo→yaho/yahooo, com→con)
 _DOM = r"(?:gmail|gmial|gmal|yahoo|yaho|yahooo|outlook|hotmail|aol|protonmail|icloud)"
 _TLD = r"(?:com|con)"
-_LOCAL_ATOM = r"[A-Za-z0-9_%+\-]+"
-_AT_SEP = r"(?:\s*\[at\]\s*|\s*\(at\)\s*|\s+at\s+|\s*@\s*)"
-_DOT_SEP = r"(?:\s*\[dot\]\s*|\s+dot\s+|\s*\.\s*)"
+_LOCAL_CHAR = r"[A-Za-z0-9_%+\-]"
+LOCAL_OCTETS = 64  # RFC 5321 §4.5.3.1.1
+SEP_WS = 4         # whitespace allowed on each side of a separator
+_W0 = rf"\s{{0,{SEP_WS}}}"
+_W1 = rf"\s{{1,{SEP_WS}}}"
+_AT_SEP = rf"(?:{_W0}\[at\]{_W0}|{_W0}\(at\){_W0}|{_W1}at{_W1}|{_W0}@{_W0})"
+_DOT_SEP = rf"(?:{_W0}\[dot\]{_W0}|{_W1}dot{_W1}|{_W0}\.{_W0})"
+SEP_MAX = 2 * SEP_WS + len("[dot]")  # longest _AT_SEP/_DOT_SEP
 
-# no trailing guard: '@domain.' anchors precision and noise glues
-# arbitrary chars onto the tld ("…gmail.com7or")
-EMAIL_CANON = _c(rf"{_LOCAL_ATOM}(?:\.{_LOCAL_ATOM})*@{_DOM}\.{_TLD}")
+# A local part is atom chars with single separators between them, one
+# char or separator per repetition, so the bound counts octets. No
+# trailing guard: '@domain.' anchors precision and noise glues
+# arbitrary chars onto the tld ("…gmail.com7or").
+EMAIL_CANON = _c(
+    rf"{_LOCAL_CHAR}(?:{_LOCAL_CHAR}|\.(?={_LOCAL_CHAR})){{0,{LOCAL_OCTETS - 1}}}"
+    rf"@{_DOM}\.{_TLD}"
+)
 EMAIL_OBF = _c(
-    rf"{_LOCAL_ATOM}(?:{_DOT_SEP}{_LOCAL_ATOM})*?"
+    rf"{_LOCAL_CHAR}(?:{_LOCAL_CHAR}|{_DOT_SEP}(?={_LOCAL_CHAR})){{0,{LOCAL_OCTETS - 1}}}?"
     rf"(?:{_AT_SEP}|{_DOT_SEP}){_DOM}{_DOT_SEP}{_TLD}"
 )
+# Farthest a match can start before its domain: the local part plus
+# '@', and for EMAIL_OBF the most separators a local part can hold,
+# each at full width, plus the final separator.
+EMAIL_CANON_REACH = LOCAL_OCTETS + 1
+_MAX_SEPS = (LOCAL_OCTETS - 1) // 2
+EMAIL_OBF_REACH = (LOCAL_OCTETS - _MAX_SEPS) + (_MAX_SEPS + 1) * SEP_MAX
 
 # ----------------------------------------------------------------- PHONE
 

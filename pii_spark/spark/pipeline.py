@@ -5,16 +5,16 @@ Plan shape (all declarative; Catalyst handles pushdown/pruning):
   read corpus (url, warc_ts, text[, html pruned away])
     → salted repartition           (defuse domain skew before UDF stages)
     → native heuristic columns     (whole-stage codegen, no Python)
-    → fused Arrow UDF #1           (langid + perplexity in ONE crossing)
-    → fused Arrow UDF #2           (two-stage PII detect + scrub in ONE)
+    → fused Arrow UDF              (langid + perplexity + two-stage PII
+                                    detect + scrub in ONE crossing)
     → keep / drop_reason           (native boolean expressions)
 
-Exactly two JVM↔Python crossings per row batch, both Arrow-vectorized —
-the reference's per-example driver loop (model_evaluation.py:233-299,
-batch size 1) becomes two batched stages. PII scrubbing runs on EVERY
-row (dropped rows still get scrubbed text — the output contract is
-scrubbed text per url), while language-ID/perplexity/heuristics feed
-only the keep decision.
+Exactly one JVM↔Python crossing per row batch, Arrow-vectorized — the
+reference's per-example driver loop (model_evaluation.py:233-299, batch
+size 1) becomes one batched stage. PII scrubbing runs on EVERY row
+(dropped rows still get scrubbed text — the output contract is scrubbed
+text per url), while language-ID/perplexity/heuristics feed only the
+keep decision.
 
 Unicode note: the native ratio expressions use \\p{L}/\\p{Nd} so they
 agree with Python's str.isalpha()/isdigit() on the non-English rows
@@ -22,6 +22,8 @@ agree with Python's str.isalpha()/isdigit() on the non-English rows
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from typing import Iterator
 
 import pandas as pd
@@ -101,35 +103,6 @@ from pyspark.sql import types as T  # noqa: E402
 
 from ..schema import SPAN_SRC  # noqa: E402
 
-_QUALITY_STRUCT = T.StructType(
-    [
-        T.StructField("lang_pred", T.StringType()),
-        T.StructField("lang_prob", T.DoubleType()),
-        T.StructField("ppl", T.DoubleType()),
-    ]
-)
-
-
-def _quality_fn(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """Fused langid + perplexity: one Arrow crossing for both models
-    (SURVEY §4: fuse per-doc stages into one UDF per pipeline leg).
-    Iterator form — models are module-level singletons built once per
-    executor interpreter."""
-    from ..quality.langid import classify_batch
-    from ..quality.perplexity import perplexity_batch
-
-    for texts in batches:
-        langs, probs = classify_batch(texts)
-        ppls = perplexity_batch(texts)
-        yield pd.DataFrame(
-            {"lang_pred": langs, "lang_prob": probs, "ppl": ppls}
-        )
-
-
-def quality_udf():
-    return F.pandas_udf(_quality_fn, _QUALITY_STRUCT)
-
-
 _ENRICH_STRUCT = T.StructType(
     [
         T.StructField("lang_pred", T.StringType()),
@@ -141,12 +114,25 @@ _ENRICH_STRUCT = T.StructType(
 )
 
 
+def _drop_nested_zip_finders() -> None:
+    """Before every task pyspark's worker calls importlib.invalidate_caches(),
+    which on Python 3.11 makes each zipimporter in sys.path_importer_cache
+    re-read its archive's central directory — one per nested package of
+    pyspark.zip that was ever imported from. Drop those nested finders
+    (non-empty prefix), keeping one per archive; zipimport rebuilds a
+    nested finder from its directory cache when an import needs it."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and finder.prefix:
+            del sys.path_importer_cache[path]
+
+
 def _enrich_fn(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     """ALL Python stages in ONE Arrow crossing: langid + perplexity +
     two-stage PII detect + scrub. One crossing means one Python worker
     per task — two chained ArrowEvalPython stages would double the
     worker count and oversubscribe the host at high parallelism
     (measured: local[32] ran 2× slower than local[8] with split UDFs)."""
+    _drop_nested_zip_finders()
     from ..detect.scrub import scrub_text
     from ..detect.serving import serve_batch
     from ..quality.langid import classify_batch
@@ -186,45 +172,7 @@ def enrich_udf():
     return F.pandas_udf(_enrich_fn, _ENRICH_STRUCT)
 
 
-_SCRUB_STRUCT = T.StructType(
-    [
-        T.StructField("spans", T.ArrayType(SPAN_SRC)),
-        T.StructField("scrubbed_text", T.StringType()),
-    ]
-)
 _REGEX_STAGE_LABELS = {"EMAIL", "PHONE", "SSN", "IP"}
-
-
-def _scrub_fn(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """Fused two-stage PII detection + scrub: regex stage (EMAIL / PHONE
-    / SSN / IP format matchers) and the batched token-classification
-    stage (tokenize → logits → softmax → threshold 0.3 → BILOU decode,
-    serving.py) run inside one Arrow batch, then the merged spans are
-    replaced with typed placeholders."""
-    from ..detect.scrub import scrub_text
-    from ..detect.serving import serve_batch
-
-    for texts in batches:
-        spans_col, scrubbed_col = [], []
-        for text, doc in zip(texts, serve_batch(list(texts))):
-            spans = [
-                {
-                    "start": cs,
-                    "end": ce,
-                    "label": lab,
-                    "source": "regex" if lab in _REGEX_STAGE_LABELS else "model",
-                }
-                for lab, _a, _b, cs, ce in doc.entities
-            ]
-            spans_col.append(spans)
-            scrubbed_col.append(scrub_text(text or "", doc.entities))
-        yield pd.DataFrame(
-            {"spans": spans_col, "scrubbed_text": scrubbed_col}
-        )
-
-
-def scrub_udf():
-    return F.pandas_udf(_scrub_fn, _SCRUB_STRUCT)
 
 
 # ------------------------------------------------------------ pipeline
