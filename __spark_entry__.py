@@ -48,9 +48,12 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # file layout via os.stat (bytes / 128 MB split size, the same
 # arithmetic Spark's FilePartition packing uses), NOT df.rdd — the RDD
 # conversion costs a full analysis/planning pass inside the timed
-# query. The estimate is memoized per (path, parallelism): an
-# environment fact (file layout), never query state or results.
-_SCAN_NARROW_MEMO: dict[tuple[str, int], bool] = {}
+# query. The estimate is memoized per (path, parallelism, layout stamp):
+# an environment fact (file layout), never query state or results. The
+# stamp is the path's mtime and size, so a path rewritten with another
+# layout (a directory's mtime moves when files come and go) is
+# re-estimated instead of answered from the old layout.
+_SCAN_NARROW_MEMO: dict[tuple[str, int, int, int], bool] = {}
 _SPLIT_BYTES = 128 << 20  # spark.sql.files.maxPartitionBytes default
 
 
@@ -58,7 +61,11 @@ def _scan_is_narrow(path: str, target: int) -> bool:
     import glob
     import os
 
-    memo_key = (path, target)
+    try:
+        st = os.stat(path)
+        memo_key = (path, target, st.st_mtime_ns, st.st_size)
+    except OSError:
+        memo_key = (path, target, 0, 0)
     narrow = _SCAN_NARROW_MEMO.get(memo_key)
     if narrow is not None:
         return narrow
@@ -1446,7 +1453,7 @@ def q_quality_heuristics(spark, sf_dir):
         & ((n_ns - n_alpha) / n_ns <= 0.4)
         & (rep <= 0.8)
     )
-    tox = toxicity_exprs(F.col("text"), n_words)
+    tox = toxicity_exprs("text")  # n_words: the same ASCII word count
     toxic = tox["tox_score"] > F.lit(QUALITY["max_tox_score"])
     # _spread (r9): the per-doc regex battery is the entire leg cost and
     # ran on the scan's single input split; the groupBy's partial agg

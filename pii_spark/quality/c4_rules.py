@@ -14,10 +14,13 @@ sentences and only retained lines that contained at least 5 words"):
 
 Two pinned-equal implementations:
   * ``c4_clean`` — pure Python: (kept_text, n_kept, n_dropped, keep);
-  * ``c4_exprs`` — native Catalyst expressions building the SAME
+  * ``c4_sql`` — native Catalyst expressions building the SAME
     cleaned text in-row (split → filter → array_join; a doc's line
     count is small, so in-row is the right plan here — unlike the
-    n-gram census, see quality/gopher.py's measured lesson).
+    n-gram census, see quality/gopher.py's measured lesson). They are
+    written as SQL text and parsed once per column (``c4_exprs`` wraps
+    them as Columns): spelled with the Column API, each call would
+    cost Py4J round trips (pii_spark/sqltext.py).
 
 Like the Gopher extension, these rules are policy-exposed, not wired
 into the shipped keep chain (byte-stability of the committed pipeline).
@@ -32,7 +35,8 @@ rules on such corpora, as the tests do for the generated texts.
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from ..sqltext import as_sql, exprs, lit
 
 _TERMINAL = (".", "!", "?", '"')
 _BOILERPLATE = ("javascript", "cookie policy", "terms of use",
@@ -78,36 +82,36 @@ def c4_clean(text: str) -> dict:
     }
 
 
-def c4_exprs(text: Column) -> dict[str, Column]:
-    """The same cleaning as in-row Catalyst expressions. NULL text is
-    pinned to '' first so the twins agree on null rows (bare F.split
-    would propagate NULL into every output — review r4c)."""
-    text = F.coalesce(text, F.lit(""))
-    lines = F.split(text, "\n")
-
-    def ok(ln: Column) -> Column:
-        # strip the ASCII \s class, matching the pure twin (F.trim
-        # removes only spaces)
-        s = F.regexp_replace(ln, r"^\s+|\s+$", "")
-        low = F.lower(s)
-        terminal = F.substring(s, -1, 1).isin(*_TERMINAL)
-        words = F.size(F.filter(F.split(s, r"\s+"), lambda w: w != ""))
-        boiler = None
-        for b in _BOILERPLATE:
-            c = F.contains(low, F.lit(b))
-            boiler = c if boiler is None else (boiler | c)
-        return terminal & (words >= _MIN_LINE_WORDS) & ~boiler
-
-    kept = F.filter(lines, ok)
-    low_doc = F.lower(text)
-    doc_ok = (
-        ~F.contains(low_doc, F.lit("lorem ipsum"))
-        & ~F.contains(text, F.lit("{"))
-        & (F.size(kept) >= _MIN_LINES)
+def c4_sql(text: str = "text") -> dict[str, str]:
+    """The same cleaning as in-row Catalyst expressions, written as SQL
+    text. NULL text is pinned to '' first so the twins agree on null
+    rows (bare split would propagate NULL into every output). Lines
+    strip the ASCII \\s class, matching the pure twin
+    (trim removes only spaces)."""
+    t = f"coalesce({text}, '')"
+    s = r"regexp_replace(_ln, r'^\s+|\s+$', '')"
+    boiler = " OR ".join(
+        f"contains(lower({s}), {lit(b)})" for b in _BOILERPLATE
     )
+    ok = (
+        f"substring({s}, -1, 1) IN ({', '.join(map(lit, _TERMINAL))})"
+        rf" AND size(filter(split({s}, r'\s+'), _w -> _w != ''))"
+        f" >= {_MIN_LINE_WORDS} AND NOT ({boiler})"
+    )
+    lines = f"split({t}, {lit(chr(10))})"
+    kept = f"filter({lines}, _ln -> {ok})"
     return {
-        "cleaned_text": F.array_join(kept, "\n"),
-        "n_kept_lines": F.size(kept),
-        "n_dropped_lines": F.size(lines) - F.size(kept),
-        "keep": doc_ok,
+        "cleaned_text": f"array_join({kept}, {lit(chr(10))})",
+        "n_kept_lines": f"size({kept})",
+        "n_dropped_lines": f"size({lines}) - size({kept})",
+        "keep": (
+            f"NOT contains(lower({t}), 'lorem ipsum')"
+            f" AND NOT contains({t}, {lit('{')})"
+            f" AND size({kept}) >= {_MIN_LINES}"
+        ),
     }
+
+
+def c4_exprs(text: str | Column = "text") -> dict[str, Column]:
+    """``c4_sql`` as Columns; ``text`` is SQL text or a Column."""
+    return exprs(c4_sql(as_sql(text)))

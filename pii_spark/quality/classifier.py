@@ -121,8 +121,7 @@ def weak_labels(
     junk = F.contains(low, F.lit("lorem ipsum")) | F.contains(
         t, F.lit("{")
     )
-    n_words = F.size(_tokens(t))
-    tox = toxicity_exprs(t, n_words)["tox_hits"]
+    tox = toxicity_exprs(f"coalesce({text_col}, '')")["tox_hits"]
     return df.withColumn(
         "label",
         (

@@ -16,8 +16,9 @@ module completes the published rule set:
 Every metric exists twice, pinned equal by tests/test_gopher.py:
 
   * ``gopher_stats`` — pure Python (the policy twin);
-  * ``gopher_line_exprs`` — the line/paragraph metrics as in-row
-    Catalyst expressions (arrays are small — a doc has few lines);
+  * ``gopher_line_sql`` — the line/paragraph metrics as in-row
+    Catalyst expressions (arrays are small — a doc has few lines),
+    wrapped as Columns by ``gopher_line_exprs``;
   * ``gopher_ngram_metrics`` — the top-n-gram metrics as ONE explode +
     ONE aggregation + a per-(doc, n) window (the q_gopher_repetition
     plan shape). This was MEASURED, not assumed: an in-row
@@ -27,9 +28,15 @@ Every metric exists twice, pinned equal by tests/test_gopher.py:
     plan that survives 100 TB.
 
 Thresholds (Gopher's published ones as defaults) are exposed via
-``gopher_flags`` but NOT wired into the pipeline's keep decision —
-enabling them is a config policy choice; the shipped keep chain stays
-byte-stable.
+``gopher_flags`` and enforced only by run_pipeline's strict profile;
+the default keep chain stays byte-stable.
+
+Every Spark expression here — the in-row metrics and the census's
+projections and aggregates — is written as SQL text and parsed once
+(``F.expr`` / ``selectExpr``). The strict plan is built again for
+every job group and streaming micro-batch, and spelled with the
+Column API each call costs Py4J round trips (pii_spark/sqltext.py).
+A gram's n words are taken with one ``slice``, not n ``element_at``.
 """
 
 from __future__ import annotations
@@ -38,6 +45,8 @@ from collections import Counter
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..sqltext import as_sql, exprs, lit
 
 # Gopher table A1 thresholds
 THRESHOLDS = {
@@ -134,38 +143,31 @@ def gopher_stats(text: str) -> dict[str, float]:
     return out
 
 
-def gopher_line_exprs(text: Column) -> dict[str, Column]:
+def gopher_line_sql(text: str = "text") -> dict[str, str]:
     """Line/paragraph repetition metrics as in-row Catalyst
-    expressions. The per-element occurrence count in dup_char_frac is
-    quadratic in the LINE count of one document — lines per doc are
-    dozens, not millions, so this stays cheap and shuffle-free. NULL
-    text pins to ''; blank detection is rlike(\\S) on both twins
-    (F.trim strips only spaces — review r4c)."""
-    text = F.coalesce(text, F.lit(""))
-    lines = F.filter(F.split(text, "\n"),
-                     lambda x: x.rlike(r"\S"))
-    paras = F.filter(F.split(text, "\n\n"),
-                     lambda x: x.rlike(r"\S"))
+    expressions, written as SQL text. The per-element occurrence count
+    in dup_char_frac is quadratic in the LINE count of one document —
+    lines per doc are dozens, not millions, so this stays cheap and
+    shuffle-free. NULL text pins to ''; blank detection is rlike(\\S)
+    on both twins (trim strips only spaces)."""
+    t = f"coalesce({text}, '')"
+    lines = rf"filter(split({t}, {lit(chr(10))}), _e -> _e rlike r'\S')"
+    paras = rf"filter(split({t}, {lit(chr(10) * 2)}), _e -> _e rlike r'\S')"
 
     def dup_frac(items):
-        n = F.size(items)
-        return F.when(
-            n > 0, 1.0 - F.size(F.array_distinct(items)) / n
-        ).otherwise(F.lit(0.0))
+        n = f"size({items})"
+        return (f"CASE WHEN {n} > 0 THEN 1.0D - size(array_distinct({items}))"
+                f" / {n} ELSE 0.0D END")
 
     def dup_char_frac(items):
-        total = F.aggregate(
-            items, F.lit(0), lambda acc, x: acc + F.length(x)
+        total = f"aggregate({items}, 0, (_acc, _x) -> _acc + length(_x))"
+        dup_chars = (
+            f"aggregate({items}, 0, (_acc, _x) -> _acc + CASE WHEN"
+            f" size(filter({items}, _y -> _y = _x)) > 1 THEN length(_x)"
+            " ELSE 0 END)"
         )
-        dup_chars = F.aggregate(
-            items,
-            F.lit(0),
-            lambda acc, x: acc + F.when(
-                F.size(F.filter(items, lambda y: y == x)) > 1,
-                F.length(x),
-            ).otherwise(F.lit(0)),
-        )
-        return F.when(total > 0, dup_chars / total).otherwise(F.lit(0.0))
+        return (f"CASE WHEN {total} > 0 THEN {dup_chars} / {total}"
+                " ELSE 0.0D END")
 
     return {
         "dup_line_frac": dup_frac(lines),
@@ -175,62 +177,49 @@ def gopher_line_exprs(text: Column) -> dict[str, Column]:
     }
 
 
+def gopher_line_exprs(text: str | Column = "text") -> dict[str, Column]:
+    """``gopher_line_sql`` as Columns; ``text`` is SQL text or a Column."""
+    return exprs(gopher_line_sql(as_sql(text)))
+
+
 def _word_base(df, id_col: str, text_col: str):
     """(id, text) → (_id, w array, _chars) — shared scaffolding of the
     relational n-gram metrics (one definition, review r4d: the copies
     had already started drifting)."""
-    words = F.filter(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                     lambda w: w != "")
-    return df.select(
-        F.col(id_col).alias("_id"), words.alias("w")
-    ).withColumn(
-        "_chars",
-        F.greatest(
-            F.aggregate("w", F.lit(0), lambda a, x: a + F.length(x)),
-            F.lit(1),
-        ),
+    return df.selectExpr(
+        f"{id_col} AS _id",
+        f"filter(split(lower({text_col}), '[^a-z0-9]+'), _w -> _w != '') AS w",
+    ).selectExpr(
+        "_id", "w",
+        "greatest(aggregate(w, 0, (_a, _x) -> _a + length(_x)), 1) AS _chars",
     )
 
 
 def _gram_census(base, ns):
     """word base → exploded (_id, _chars, n, i, g): every n-gram of
-    every requested size with its start position, one explode."""
-
-    def grams(n):
-        return F.when(
-            F.size("w") >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size("w") - n),
-                lambda i: F.struct(
-                    F.lit(n).alias("n"),
-                    i.alias("i"),
-                    F.concat_ws(
-                        " ",
-                        *[F.element_at("w", i + j + 1) for j in range(n)]
-                    ).alias("g"),
-                ),
-            ),
-        ).otherwise(F.array())
-
-    return base.select(
-        "_id", "_chars",
-        F.explode(F.concat(*[grams(n) for n in ns])).alias("gr"),
-    ).select("_id", "_chars", "gr.n", "gr.i", "gr.g")
+    every requested size with its start position, one explode. A gram
+    is ``concat_ws(' ', slice(w, i + 1, n))``."""
+    grams = ", ".join(
+        f"CASE WHEN size(w) >= {n} THEN transform(sequence(0, size(w) - {n}),"
+        f" _i -> named_struct('n', {n}, 'i', _i,"
+        f" 'g', concat_ws(' ', slice(w, _i + 1, {n})))) ELSE array() END"
+        for n in ns
+    )
+    return base.selectExpr(
+        "_id", "_chars", f"explode(concat({grams})) AS gr"
+    ).selectExpr("_id", "_chars", "gr.n", "gr.i", "gr.g")
 
 
 def _attach_fracs(df, id_col: str, pivoted, ns, name_fmt: str):
     """left-join the pivoted per-(doc, n) fractions back onto every doc
     id, defaulting absent cells (no qualifying gram) to 0.0."""
     return (
-        df.select(F.col(id_col).alias("_id"))
+        df.selectExpr(f"{id_col} AS _id")
         .join(pivoted, "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            *[
-                F.coalesce(F.col(str(n)), F.lit(0.0))
-                .alias(name_fmt.format(n=n))
-                for n in ns
-            ],
+        .selectExpr(
+            f"_id AS {id_col}",
+            *[f"coalesce(`{n}`, 0.0D) AS {name_fmt.format(n=n)}"
+              for n in ns],
         )
     )
 
@@ -244,24 +233,20 @@ def gopher_ngram_metrics(
     relational shape that scales (see module docstring for the
     measured in-row disaster). Docs with no qualifying gram (too
     short, or top count < 2 — the rule measures repetition) get 0.0."""
-    from pyspark.sql import Window
-
     counts = _gram_census(_word_base(df, id_col, text_col), ns).groupBy(
         "_id", "_chars", "n", "g"
-    ).agg(F.count("*").alias("c"))
-    w = Window.partitionBy("_id", "n").orderBy(
-        F.col("c").desc(), F.col("g").desc()
-    )
+    ).agg(F.expr("count(*) AS c"))
     top = (
-        counts.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col("c") >= 2))
-        .withColumn(
-            "frac",
-            F.col("c") * (F.length("g") - (F.col("n") - 1)) / F.col("_chars"),
+        counts.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY _id, n ORDER BY c DESC, g DESC)"
+            " AS _rn",
         )
+        .where("_rn = 1 AND c >= 2")
+        .selectExpr("*", "c * (length(g) - (n - 1)) / _chars AS frac")
         .groupBy("_id")
         .pivot("n", list(ns))
-        .agg(F.first("frac"))
+        .agg(F.expr("first(frac)"))
     )
     return _attach_fracs(df, id_col, top, ns, "top_{n}gram_char_frac")
 
@@ -283,27 +268,24 @@ def gopher_dup_ngram_metrics(
     # occurrences of grams seen >1 times, with their start positions
     dup_starts = (
         exploded.groupBy("_id", "_chars", "n", "g")
-        .agg(F.count("*").alias("c"), F.collect_list("i").alias("starts"))
-        .filter(F.col("c") > 1)
-        .select("_id", "_chars", "n",
-                F.explode("starts").alias("start"))
+        .agg(F.expr("count(*) AS c"), F.expr("collect_list(i) AS starts"))
+        .where("c > 1")
+        .selectExpr("_id", "_chars", "n", "explode(starts) AS start")
     )
-    covered = dup_starts.select(
+    covered = dup_starts.selectExpr(
         "_id", "_chars", "n",
-        F.explode(
-            F.sequence(F.col("start"), F.col("start") + F.col("n") - 1)
-        ).alias("idx"),
+        "explode(sequence(start, start + n - 1)) AS idx",
     ).distinct()
-    word_lens = base.select(
-        "_id", F.posexplode("w").alias("idx", "_wv")
-    ).select("_id", "idx", F.length("_wv").alias("wl"))
+    word_lens = base.selectExpr(
+        "_id", "posexplode(w) AS (idx, _wv)"
+    ).selectExpr("_id", "idx", "length(_wv) AS wl")
     frac = (
         covered.join(word_lens, ["_id", "idx"])
         .groupBy("_id", "n")
-        .agg((F.sum("wl") / F.first("_chars")).alias("frac"))
+        .agg(F.expr("sum(wl) / first(_chars) AS frac"))
         .groupBy("_id")
         .pivot("n", list(ns))
-        .agg(F.first("frac"))
+        .agg(F.expr("first(frac)"))
     )
     return _attach_fracs(df, id_col, frac, ns, "dup_{n}gram_char_frac")
 

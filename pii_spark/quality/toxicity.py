@@ -12,7 +12,8 @@ linearly with zero shuffle.
 Three coordinated implementations, pinned equal by tests:
   * ``toxicity_stats`` — pure Python (the keep/drop twin used by
     tests/test_pipeline_e2e.py);
-  * ``toxicity_exprs`` — native Spark columns (the pipeline path);
+  * ``toxicity_sql`` — native Spark columns written as SQL text (the
+    pipeline path; ``toxicity_exprs`` wraps them as Columns);
   * the DuckDB SQL fragment in ``__spark_entry__.oracle_sql()``
     (quality_heuristics oracle) — same ASCII lexicon and
     ``\\b``-bounded regex.
@@ -37,7 +38,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from ..sqltext import as_sql, exprs, lit
 
 # ASCII-only so lower() agrees across Python/Java/RE2; word-boundary
 # matched, so substrings ("skill", "trashy") never count
@@ -66,14 +68,26 @@ def toxicity_stats(text: str) -> dict[str, float]:
     return {"tox_hits": float(hits), "tox_score": hits / n_words}
 
 
-def toxicity_exprs(text: Column, n_words: Column) -> dict[str, Column]:
-    """Native-expression toxicity columns: two regexp_extract_all
-    passes (one per weight class) over the lowered text."""
-    low = F.lower(text)
-    h1 = F.size(F.regexp_extract_all(low, F.lit(TOX_RE_W1), F.lit(0)))
-    h2 = F.size(F.regexp_extract_all(low, F.lit(TOX_RE_W2), F.lit(0)))
-    hits = (h1 + 2 * h2).cast("int")
-    return {
-        "tox_hits": hits,
-        "tox_score": hits / F.greatest(n_words, F.lit(1)),
-    }
+def toxicity_sql(
+    text: str = "text", n_words: str | None = None,
+) -> dict[str, str]:
+    """The toxicity columns as SQL text: two regexp_extract_all passes
+    (one per weight class) over the lowered text. ``n_words`` defaults
+    to the ASCII-whitespace word count the pure twin divides by."""
+    n_words = n_words or (
+        rf"size(filter(split({text}, r'\s+'), _w -> _w != ''))"
+    )
+    low = f"lower({text})"
+    hits = (f"CAST(size(regexp_extract_all({low}, {lit(TOX_RE_W1)}, 0))"
+            f" + 2 * size(regexp_extract_all({low}, {lit(TOX_RE_W2)}, 0))"
+            " AS INT)")
+    return {"tox_hits": hits, "tox_score": f"{hits} / greatest({n_words}, 1)"}
+
+
+def toxicity_exprs(
+    text: str | Column = "text", n_words: str | Column | None = None,
+) -> dict[str, Column]:
+    """``toxicity_sql`` as Columns; SQL text or Column arguments."""
+    return exprs(toxicity_sql(
+        as_sql(text), None if n_words is None else as_sql(n_words)
+    ))

@@ -16,6 +16,15 @@ size 1) becomes one batched stage. PII scrubbing runs on EVERY row
 text per url), while language-ID/perplexity/heuristics feed only the
 keep decision.
 
+Every native column — the quality statistics, the strict profile's
+gates, keep / drop_reason and the output projection — is written as
+SQL text and parsed once (``F.expr`` / ``selectExpr``): this plan is
+built again for every job group and streaming micro-batch, and
+under PySpark's default DataFrame debugging each Column-API call costs
+Py4J round trips (pii_spark/sqltext.py). Spelled call by call, one
+build took ~1.5k round trips on the default profile and ~9k on the
+strict one; tests/test_pipeline_build.py holds the budget.
+
 Unicode note: the native ratio expressions use \\p{L}/\\p{Nd} so they
 agree with Python's str.isalpha()/isdigit() on the non-English rows
 (tests/test_quality.py pins native == pure)."""
@@ -31,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import QUALITY
+from ..sqltext import exprs, lit
 
 _SALT = 0x5CA1AB1E
 
@@ -45,56 +55,59 @@ def salted_repartition(df: DataFrame, partitions: int | None = None) -> DataFram
     exchanges by byte size, and web-text rows are tiny in bytes but
     expensive in UDF compute — without the pin, AQE collapses the PII
     stage to one task and serializes the whole pipeline."""
-    key = F.xxhash64(F.col("url"), F.lit(_SALT))
     if not partitions:
         partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    return df.repartition(partitions, key)
+    return df.repartition(partitions, F.expr(f"xxhash64(url, {_SALT})"))
 
 
 # ------------------------------------------------------------ native exprs
 
-def quality_exprs() -> dict[str, Column]:
+def quality_sql(text: str = "text") -> dict[str, str]:
     """C4/Gopher heuristic + toxicity statistics as pure Catalyst
-    expressions (same semantics as quality.heuristics.quality_stats
-    and quality.toxicity.toxicity_stats)."""
-    from ..quality.toxicity import toxicity_exprs
+    expressions written as SQL text (same semantics as
+    quality.heuristics.quality_stats and quality.toxicity.toxicity_stats)."""
+    from ..quality.toxicity import toxicity_sql
 
-    text = F.col("text")
-    nonspace = F.regexp_replace(text, r"\s", "")
-    n_ns = F.greatest(F.length(nonspace), F.lit(1))
-    words = F.filter(F.split(text, r"\s+"), lambda w: w != "")
-    n_words = F.size(words)
-    n_alpha = F.length(F.regexp_replace(nonspace, r"[^\p{L}]", ""))
-    n_digit = F.length(F.regexp_replace(nonspace, r"[^\p{Nd}]", ""))
+    nonspace = rf"regexp_replace({text}, r'\s', '')"
+    n_ns = f"greatest(length({nonspace}), 1)"
+    words = rf"filter(split({text}, r'\s+'), _w -> _w != '')"
+    n_words = f"size({words})"
+    n_alpha = rf"length(regexp_replace({nonspace}, r'[^\p{{L}}]', ''))"
+    n_digit = rf"length(regexp_replace({nonspace}, r'[^\p{{Nd}}]', ''))"
     return {
         "n_words": n_words,
-        "mean_word_len": F.when(n_words > 0, F.length(nonspace) / n_words)
-        .otherwise(F.lit(0.0)),
-        "symbol_ratio": (n_ns - n_alpha - n_digit) / n_ns,
-        "digit_ratio": n_digit / n_ns,
-        "alpha_ratio": n_alpha / n_ns,
-        "rep_ratio": F.when(
-            n_words > 0,
-            1.0
-            - F.size(F.array_distinct(F.transform(words, F.lower)))
-            / n_words,
-        ).otherwise(F.lit(1.0)),
-        **toxicity_exprs(text, n_words),
+        "mean_word_len": f"CASE WHEN {n_words} > 0 THEN length({nonspace})"
+        f" / {n_words} ELSE 0.0D END",
+        "symbol_ratio": f"({n_ns} - {n_alpha} - {n_digit}) / {n_ns}",
+        "digit_ratio": f"{n_digit} / {n_ns}",
+        "alpha_ratio": f"{n_alpha} / {n_ns}",
+        "rep_ratio": f"CASE WHEN {n_words} > 0 THEN 1.0D - size("
+        f"array_distinct(transform({words}, _x -> lower(_x)))) / {n_words}"
+        " ELSE 1.0D END",
+        **toxicity_sql(text, n_words),
     }
 
 
-def heuristics_pass_expr(q: dict | None = None) -> Column:
+def quality_exprs() -> dict[str, Column]:
+    return exprs(quality_sql())
+
+
+def heuristics_pass_sql(q: dict | None = None) -> str:
     q = q or QUALITY
     return (
-        F.col("n_words").between(q["min_words"], q["max_words"])
-        & F.col("mean_word_len").between(
-            q["min_mean_word_len"], q["max_mean_word_len"]
-        )
-        & (F.col("symbol_ratio") <= q["max_symbol_ratio"])
-        & (F.col("rep_ratio") <= q["max_rep_ratio"])
-        & (F.col("digit_ratio") <= q["max_digit_ratio"])
-        & (F.col("alpha_ratio") >= q["min_alpha_ratio"])
+        f"n_words >= {lit(q['min_words'])}"
+        f" AND n_words <= {lit(q['max_words'])}"
+        f" AND mean_word_len >= {lit(q['min_mean_word_len'])}"
+        f" AND mean_word_len <= {lit(q['max_mean_word_len'])}"
+        f" AND symbol_ratio <= {lit(q['max_symbol_ratio'])}"
+        f" AND rep_ratio <= {lit(q['max_rep_ratio'])}"
+        f" AND digit_ratio <= {lit(q['max_digit_ratio'])}"
+        f" AND alpha_ratio >= {lit(q['min_alpha_ratio'])}"
     )
+
+
+def heuristics_pass_expr(q: dict | None = None) -> Column:
+    return F.expr(heuristics_pass_sql(q))
 
 
 # ------------------------------------------------------------ Arrow UDFs
@@ -117,13 +130,31 @@ _ENRICH_STRUCT = T.StructType(
 def _drop_nested_zip_finders() -> None:
     """Before every task pyspark's worker calls importlib.invalidate_caches(),
     which on Python 3.11 makes each zipimporter in sys.path_importer_cache
-    re-read its archive's central directory — one per nested package of
-    pyspark.zip that was ever imported from. Drop those nested finders
-    (non-empty prefix), keeping one per archive; zipimport rebuilds a
-    nested finder from its directory cache when an import needs it."""
+    re-read its archive's central directory. Two kinds pay that for
+    nothing:
+
+    * the nested finders, one per nested package of pyspark.zip that
+      was ever imported from (non-empty prefix): dropped, keeping one
+      per archive — zipimport rebuilds a nested finder from its
+      directory cache when an import needs it;
+    * archives that hold no Python module at all — Spark puts
+      spark-core's jar (5k entries) on every worker's sys.path: dropped
+      from sys.path as well, since a None cache entry would not stick
+      (PathFinder.invalidate_caches deletes those)."""
     for path, finder in list(sys.path_importer_cache.items()):
-        if isinstance(finder, zipimport.zipimporter) and finder.prefix:
+        if not isinstance(finder, zipimport.zipimporter):
+            continue
+        if finder.prefix:
             del sys.path_importer_cache[path]
+            continue
+        # the directory zipimport already parsed: no re-read here
+        files = zipimport._zip_directory_cache.get(finder.archive)
+        if files is not None and not any(
+            f.endswith((".py", ".pyc")) for f in files
+        ):
+            del sys.path_importer_cache[path]
+            while path in sys.path:
+                sys.path.remove(path)
 
 
 def _enrich_fn(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
@@ -209,23 +240,28 @@ def run_pipeline(
     q = QUALITY
     cols = ["url", "text"] + (["doc_id"] if with_doc_id else [])
     df = corpus.select(*cols)
+    checks = [
+        (f"e.lang_pred IN ({', '.join(map(lit, q['langs_kept']))})", "langid"),
+        (f"e.ppl <= {lit(q['max_ppl'])}", "perplexity"),
+        (heuristics_pass_sql(q), "heuristics"),
+        (f"tox_score <= {lit(q['max_tox_score'])}", "toxicity"),
+    ]
     if profile == "strict":
-        from ..quality.c4_rules import c4_exprs
+        from ..quality.c4_rules import c4_sql
         from ..quality.gopher import (
             THRESHOLDS,
             gopher_dup_ngram_metrics,
-            gopher_line_exprs,
+            gopher_line_sql,
             gopher_ngram_metrics,
         )
 
-        gl = gopher_line_exprs(F.col("text"))
-        line_flag = None
-        for k in ("dup_line_frac", "dup_para_frac",
-                  "dup_line_char_frac", "dup_para_char_frac"):
-            c = gl[k] > THRESHOLDS[k]
-            line_flag = c if line_flag is None else (line_flag | c)
-        df = df.withColumn("_c4_ok", c4_exprs(F.col("text"))["keep"])
-        df = df.withColumn("_gl_flag", line_flag)
+        gl = gopher_line_sql()
+        line_flag = " OR ".join(
+            f"{gl[k]} > {lit(THRESHOLDS[k])}" for k in gl
+        )
+        df = df.selectExpr(
+            "*", f"{c4_sql()['keep']} AS _c4_ok", f"{line_flag} AS _gl_flag"
+        )
         # n-gram census: relational by necessity (explode → count →
         # window), computed from 2-column scans of the source and
         # joined back; flags reduced per url before the join so row
@@ -242,19 +278,15 @@ def run_pipeline(
         # its census flag — the filtered plan is output-identical
         # (gated by tests/test_strict_profile.py) while the explode
         # only pays for the surviving fraction (on the sf0.1 drive,
-        # ~6% of pages — BENCH/strict_profile.json).
-        census_src = corpus.select("url", "text").where(
-            c4_exprs(F.col("text"))["keep"] & ~line_flag
-        )
+        # ~6% of pages — BENCH/strict_profile.json). The filter reads
+        # the two gate columns above, so each is built once.
+        census_src = df.where("_c4_ok AND NOT _gl_flag").select("url", "text")
         ng = gopher_ngram_metrics(census_src, id_col="url").join(
             gopher_dup_ngram_metrics(census_src, id_col="url"), "url"
         )
-        ng_flag = None
-        for k, v in THRESHOLDS.items():
-            if "gram" not in k:
-                continue
-            c = F.col(k) > v
-            ng_flag = c if ng_flag is None else (ng_flag | c)
+        ng_flag = " OR ".join(
+            f"{k} > {lit(v)}" for k, v in THRESHOLDS.items() if "gram" in k
+        )
         # join ONLY the flagged urls (measured r5: joining the full
         # per-doc flag frame made the corpus — text column included —
         # shuffle+sort by url for the SMJ, which was the entire strict
@@ -263,65 +295,42 @@ def run_pipeline(
         # broadcast, so the corpus side never moves for this join.
         flagged = (
             ng.groupBy("url")
-            .agg(F.max(ng_flag.cast("boolean")).alias("f"))
-            .filter("f")
-            .select("url", F.lit(True).alias("_ng_flag"))
+            .agg(F.expr(f"max({ng_flag}) AS f"))
+            .where("f")
+            .selectExpr("url", "true AS _ng_flag")
         )
-        df = df.join(flagged, "url", "left").withColumn(
-            "_ng_flag", F.coalesce(F.col("_ng_flag"), F.lit(False))
-        )
+        df = df.join(flagged, "url", "left")
+        checks += [
+            ("_c4_ok", "c4"),
+            ("NOT _gl_flag", "gopher_lines"),
+            ("NOT coalesce(_ng_flag, false)", "gopher_ngrams"),
+        ]
     df = salted_repartition(df, partitions)
-    df = df.withColumns(quality_exprs())
-    enriched = enrich_udf()(F.col("text"))
-    df = df.withColumn("e", enriched)
-    df = df.withColumn("q", F.struct(
-        F.col("e.lang_pred").alias("lang_pred"),
-        F.col("e.lang_prob").alias("lang_prob"),
-        F.col("e.ppl").alias("ppl"),
-    )).withColumn("s", F.struct(
-        F.col("e.spans").alias("spans"),
-        F.col("e.scrubbed_text").alias("scrubbed_text"),
-    ))
-
-    heur_ok = heuristics_pass_expr(q)
-    lang_ok = F.col("q.lang_pred").isin(*q["langs_kept"])
-    ppl_ok = F.col("q.ppl") <= F.lit(q["max_ppl"])
-    tox_ok = F.col("tox_score") <= F.lit(q["max_tox_score"])
-    keep = lang_ok & ppl_ok & heur_ok & tox_ok
-    reason = (
-        F.when(~lang_ok, F.lit("langid"))
-        .when(~ppl_ok, F.lit("perplexity"))
-        .when(~heur_ok, F.lit("heuristics"))
-        .when(~tox_ok, F.lit("toxicity"))
+    df = df.selectExpr(
+        "*", *(f"{v} AS {k}" for k, v in quality_sql().items())
     )
-    if profile == "strict":
-        c4_ok = F.col("_c4_ok")
-        gl_ok = ~F.col("_gl_flag")
-        ng_ok = ~F.col("_ng_flag")
-        keep = keep & c4_ok & gl_ok & ng_ok
-        reason = (
-            reason.when(~c4_ok, F.lit("c4"))
-            .when(~gl_ok, F.lit("gopher_lines"))
-            .when(~ng_ok, F.lit("gopher_ngrams"))
-        )
-    drop_reason = reason.otherwise(F.lit(None).cast("string"))
+    df = df.withColumn("e", enrich_udf()("text"))
 
-    out_cols = [
-        F.col("url"),
-        keep.alias("keep"),
-        drop_reason.alias("drop_reason"),
-        F.col("q.lang_pred").alias("lang_pred"),
-        F.col("q.ppl").alias("ppl"),
-        F.struct(
-            F.col("n_words").cast("int").alias("n_words"),
-            F.col("mean_word_len").cast("double").alias("mean_word_len"),
-            F.col("symbol_ratio").cast("double").alias("symbol_ratio"),
-            F.col("rep_ratio").cast("double").alias("rep_ratio"),
-            F.col("tox_score").cast("double").alias("tox_score"),
-        ).alias("quality"),
-        F.col("s.spans").alias("spans"),
-        F.col("s.scrubbed_text").alias("scrubbed_text"),
-    ]
-    if with_doc_id:
-        out_cols.insert(0, F.col("doc_id"))
-    return df.select(*out_cols)
+    keep = " AND ".join(f"({c})" for c, _ in checks)
+    drop_reason = " ".join(
+        ["CASE"] + [f"WHEN NOT ({c}) THEN {lit(r)}" for c, r in checks]
+        + ["ELSE CAST(NULL AS STRING) END"]
+    )
+    quality = ", ".join(
+        f"{lit(k)}, CAST({k} AS {t})" for k, t in (
+            ("n_words", "INT"), ("mean_word_len", "DOUBLE"),
+            ("symbol_ratio", "DOUBLE"), ("rep_ratio", "DOUBLE"),
+            ("tox_score", "DOUBLE"),
+        )
+    )
+    return df.selectExpr(
+        *(["doc_id"] if with_doc_id else []),
+        "url",
+        f"{keep} AS keep",
+        f"{drop_reason} AS drop_reason",
+        "e.lang_pred AS lang_pred",
+        "e.ppl AS ppl",
+        f"named_struct({quality}) AS quality",
+        "e.spans AS spans",
+        "e.scrubbed_text AS scrubbed_text",
+    )

@@ -39,8 +39,8 @@ def quality_report(
         F.col(id_col),
     )
     base = base.withColumns(quality_exprs())
-    g = gopher_line_exprs(F.col("text"))
-    c4 = c4_exprs(F.col("text"))
+    g = gopher_line_exprs()
+    c4 = c4_exprs()
     tox_flag = F.col("tox_score") > F.lit(QUALITY["max_tox_score"])
     heur_ok = heuristics_pass_expr()
 

@@ -1,4 +1,4 @@
-"""The enrich UDF's trim of nested zipimport finders."""
+"""The enrich UDF's trim of zipimport finders that cost every task time."""
 
 from __future__ import annotations
 
@@ -6,6 +6,8 @@ import importlib
 import sys
 import zipfile
 import zipimport
+
+import pytest
 
 from pii_spark.spark.pipeline import _drop_nested_zip_finders
 
@@ -40,3 +42,38 @@ def test_drop_nested_zip_finders(tmp_path):
             del sys.modules[name]
         for p in [p for p in sys.path_importer_cache if p.startswith(root)]:
             del sys.path_importer_cache[p]
+
+
+def test_drop_python_free_archives(tmp_path):
+    """An archive without a Python module (Spark puts spark-core's jar on
+    every worker's sys.path) leaves sys.path and the finder cache, so
+    invalidate_caches() stops re-reading its directory; an archive that
+    holds Python stays importable."""
+    jar = tmp_path / "core.jar"
+    with zipfile.ZipFile(jar, "w") as z:
+        z.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
+        for i in range(50):
+            z.writestr(f"org/example/C{i}.class", b"\xca\xfe\xba\xbe")
+    mods = tmp_path / "mods.zip"
+    with zipfile.ZipFile(mods, "w") as z:
+        z.writestr("zmod_kept.py", "X = 3\n")
+    paths = [str(jar), str(mods)]
+    sys.path[:0] = paths
+    try:
+        # a lookup that misses walks both archives, caching a finder each
+        with pytest.raises(ModuleNotFoundError):
+            importlib.import_module("zmod_absent")
+        assert all(isinstance(sys.path_importer_cache.get(p),
+                              zipimport.zipimporter) for p in paths)
+        _drop_nested_zip_finders()
+        assert str(jar) not in sys.path
+        assert str(jar) not in sys.path_importer_cache
+        assert str(mods) in sys.path
+        importlib.invalidate_caches()
+        assert importlib.import_module("zmod_kept").X == 3
+    finally:
+        for p in paths:
+            while p in sys.path:
+                sys.path.remove(p)
+            sys.path_importer_cache.pop(p, None)
+        sys.modules.pop("zmod_kept", None)
