@@ -11,10 +11,8 @@ has no keep/drop decision; these are this engine's own semantics).
 
 from __future__ import annotations
 
-# ---- dataset size / split (config_and_labels.py:6-8) ----
+# ---- dataset size (config_and_labels.py:6) ----
 N_SAMPLES_DEFAULT = 120_000
-TRAIN_RATIO = 0.8
-VAL_RATIO = 0.1  # test = 0.1
 
 # ---- corpus mix (config_and_labels.py:12-14) ----
 O_ONLY_RATIO = 0.50

@@ -29,6 +29,7 @@ from __future__ import annotations
 import re
 from typing import NamedTuple
 
+from ..memo import Memo
 from ..tokenizer import tokenize_with_offsets
 from . import patterns as P
 from .gazetteer import (
@@ -55,7 +56,6 @@ _RE_D14_TAIL = re.compile(r"\d{1,4}$")
 _RE_D5 = re.compile(r"^\d{5}")
 _RE_D4 = re.compile(r"^\d{4}")
 _RE_INI = re.compile(r"^([A-Z]{2,4})(\d{0,2})$")
-_INI_BLOCK_CACHE: dict[str, bool] = {}
 
 
 class Candidate(NamedTuple):
@@ -156,7 +156,7 @@ def _ctx_dist(
         consider(m.start(), m.end() - m.start())
     for m in _WORD_RE.finditer(window):
         w = m.group()
-        if len(w) >= 2 and _ctx_word_fuzzy(label, w):
+        if len(w) >= 2 and _ctx_word_fuzzy[label, w]:
             consider(m.start(), len(w))
     return best
 
@@ -166,26 +166,18 @@ def _ctx_dist(
 # across docs, so the per-word keyword×edit-1 scan collapses to a dict
 # hit (the scan ran ~150 _edit1 calls per doc before). `consider` still
 # runs per occurrence, so (side, distance) ranking is unchanged.
-_CTX_FUZZY_CACHE: dict[tuple[str, str], bool] = {}
+def _ctx_word_fuzzy(key: tuple[str, str]) -> bool:
+    label, w = key
+    for kw in _CTX_WORDS[label]:
+        # 'ssn'/'age' are only 3 chars but too load-bearing to skip
+        if len(w) >= 3 and len(kw) >= 4 and _edit1(w, kw):
+            return True
+        if kw in ("ssn", "age") and _edit1(w, kw):
+            return True
+    return False
 
 
-def _ctx_word_fuzzy(label: str, w: str) -> bool:
-    key = (label, w)
-    v = _CTX_FUZZY_CACHE.get(key)
-    if v is None:
-        v = False
-        for kw in _CTX_WORDS[label]:
-            # 'ssn'/'age' are only 3 chars but too load-bearing to skip
-            if len(w) >= 3 and len(kw) >= 4 and _edit1(w, kw):
-                v = True
-                break
-            if kw in ("ssn", "age") and _edit1(w, kw):
-                v = True
-                break
-        if len(_CTX_FUZZY_CACHE) > 300_000:
-            _CTX_FUZZY_CACHE.clear()
-        _CTX_FUZZY_CACHE[key] = v
-    return v
+_ctx_word_fuzzy = Memo(_ctx_word_fuzzy, 300_000)
 
 
 def _ctx(text: str, start: int, end: int, label: str, width: int = 36) -> bool:
@@ -217,24 +209,17 @@ def _ctx_fuzzy2(text: str, start: int, end: int, label: str,
 _PHONEISH = ("phone", "contact", "call", "callback", "tel", "dial")
 _SSNISH = ("ssn", "social", "socialnumber")
 
-# difflib ratio memo: every call site compares a window word against a
-# FIXED keyword list, and the word vocabulary repeats massively across
-# docs — caching collapses ~0.7s/400 docs of SequenceMatcher work (the
-# profile's top non-loop entry) into dict hits. Pure function of (a, b).
-_RATIO_CACHE: dict[tuple[str, str], float] = {}
+# difflib ratio of (a, b): every call site compares a window word
+# against a FIXED keyword list, and the word vocabulary repeats
+# massively across docs — memoizing collapses ~0.7s/400 docs of
+# SequenceMatcher work (the profile's top non-loop entry) into dict hits.
+def _ratio(key: tuple[str, str]) -> float:
+    import difflib
+
+    return difflib.SequenceMatcher(None, *key).ratio()
 
 
-def _ratio(a: str, b: str) -> float:
-    key = (a, b)
-    v = _RATIO_CACHE.get(key)
-    if v is None:
-        import difflib
-
-        v = difflib.SequenceMatcher(None, a, b).ratio()
-        if len(_RATIO_CACHE) > 300_000:
-            _RATIO_CACHE.clear()
-        _RATIO_CACHE[key] = v
-    return v
+_ratio = Memo(_ratio, 300_000)
 
 
 def _ratio_ge(a: str, b: str, thr: float) -> bool:
@@ -245,7 +230,7 @@ def _ratio_ge(a: str, b: str, thr: float) -> bool:
     intersection — when even that bound misses the threshold, the
     SequenceMatcher run is skipped (most novel-word × keyword pairs)."""
     key = (a, b)
-    v = _RATIO_CACHE.get(key)
+    v = _ratio.get(key)
     if v is not None:
         return v >= thr
     la, lb = len(a), len(b)
@@ -263,7 +248,7 @@ def _ratio_ge(a: str, b: str, thr: float) -> bool:
             counts[ch] = c - 1
     if 2.0 * common / denom < thr:
         return False
-    return _ratio(a, b) >= thr
+    return _ratio[key] >= thr
 
 
 def _label_word_vote(text: str, start: int) -> str | None:
@@ -282,8 +267,8 @@ def _label_word_vote(text: str, start: int) -> str | None:
     w = words[-1].lstrip("0123456789")  # shed glued digits ('960Cnalp')
     if len(w) < 3:
         return None
-    pr = max(_ratio(w, k) for k in _PHONEISH)
-    sr = max(_ratio(w, k) for k in _SSNISH)
+    pr = max(_ratio[w, k] for k in _PHONEISH)
+    sr = max(_ratio[w, k] for k in _SSNISH)
     if max(pr, sr) < 0.55 or abs(pr - sr) < 0.08:
         return None
     return "PHONE" if pr > sr else "SSN"
@@ -461,36 +446,26 @@ _EMAIL_GLUE_WORDS = ("email", "mail", "via", "phone", "reply", "contact")
 # r9: the glue-word fuzzy scans below are pure functions of the
 # lowercased atom and loop difflib/edit-1 over the fixed glue list —
 # memoized so novel atoms pay the scan once and Zipf-repeated ones hit
-# the dict (same pattern as _RATIO_CACHE; bounded by wholesale clear).
-_GLUE_RATIO_CACHE: dict[str, bool] = {}
-_GLUE_EDIT_CACHE: dict[str, bool] = {}
-
-
+# the dict.
 def _glue_ratio_any(low: str) -> bool:
     """len(low) >= 4 and any glue word within difflib ratio 0.7."""
-    v = _GLUE_RATIO_CACHE.get(low)
-    if v is None:
-        v = len(low) >= 4 and any(
-            _ratio_ge(low, w, 0.7) for w in _EMAIL_GLUE_WORDS
-        )
-        if len(_GLUE_RATIO_CACHE) > 100_000:
-            _GLUE_RATIO_CACHE.clear()
-        _GLUE_RATIO_CACHE[low] = v
-    return v
+    return len(low) >= 4 and any(
+        _ratio_ge(low, w, 0.7) for w in _EMAIL_GLUE_WORDS
+    )
+
+
+_glue_ratio_any = Memo(_glue_ratio_any, 100_000).__getitem__
 
 
 def _glue_edit_any(low: str) -> bool:
     """any glue word within edit-1 of low or low[:-1]."""
-    v = _GLUE_EDIT_CACHE.get(low)
-    if v is None:
-        v = any(
-            _edit1(low, w) or _edit1(low[:-1], w)
-            for w in _EMAIL_GLUE_WORDS
-        )
-        if len(_GLUE_EDIT_CACHE) > 100_000:
-            _GLUE_EDIT_CACHE.clear()
-        _GLUE_EDIT_CACHE[low] = v
-    return v
+    return any(
+        _edit1(low, w) or _edit1(low[:-1], w)
+        for w in _EMAIL_GLUE_WORDS
+    )
+
+
+_glue_edit_any = Memo(_glue_edit_any, 100_000).__getitem__
 
 
 def _trim_email_start(text: str, s: int, e: int) -> int:
@@ -1120,23 +1095,9 @@ _TEMPLATE_WORDS = frozenset(
 )
 
 
-_TEMPLATE_WORDISH_CACHE: dict[str, bool] = {}
-
-
 def _template_wordish(alpha: str) -> bool:
     # pure function of alpha; the edit-1/ratio scan over the template
-    # vocabulary is the expensive part — memoized (r9)
-    v = _TEMPLATE_WORDISH_CACHE.get(alpha)
-    if v is not None:
-        return v
-    v = _template_wordish_uncached(alpha)
-    if len(_TEMPLATE_WORDISH_CACHE) > 100_000:
-        _TEMPLATE_WORDISH_CACHE.clear()
-    _TEMPLATE_WORDISH_CACHE[alpha] = v
-    return v
-
-
-def _template_wordish_uncached(alpha: str) -> bool:
+    # vocabulary is the expensive part
     if alpha in _TEMPLATE_WORDS or alpha[:-1] in _TEMPLATE_WORDS or (
         len(alpha) >= 7 and alpha[:-2] in _TEMPLATE_WORDS
     ):
@@ -1153,6 +1114,10 @@ def _template_wordish_uncached(alpha: str) -> bool:
             for w in _TEMPLATE_WORDS
         )
     return False
+
+
+_template_wordish = Memo(_template_wordish, 100_000).__getitem__
+
 
 # first-token index for 2-token place sequences (hot path: _seq2_hit)
 def _seq2_index(seqs: frozenset) -> dict[str, tuple[str, ...]]:
@@ -1184,8 +1149,6 @@ _SEQ2_FIRSTS_ALL = frozenset(
 # byte-stability A/B over 9k docs + the full detect test suite).
 (B_SEQ2, B_PLACE1, B_STREET, B_UNIT, B_ZIP, B_ABBR, B_ORG, B_FIRSTS,
  B_STEM, B_UNAME, B_FUSED, B_INI, B_DIGITS) = (1 << i for i in range(13))
-
-_TOK_MASK_CACHE: dict[str, int] = {}
 
 # r9: the seven per-gazetteer _gaz_span_rel probes in the mask builder
 # all enumerate the SAME substring space (full / prefix-cut / strip /
@@ -1234,10 +1197,8 @@ def _gaz_bits(text: str, low: str) -> int:
     return acc
 
 
-def _tok_mask(text: str, low: str) -> int:
-    m = _TOK_MASK_CACHE.get(text)
-    if m is not None:
-        return m
+def _tok_mask(text: str) -> int:
+    low = text.lower()
     m = _gaz_bits(text, low)
     if low in _SEQ2_FIRSTS_ALL:
         m |= B_SEQ2
@@ -1245,7 +1206,7 @@ def _tok_mask(text: str, low: str) -> int:
         m |= B_ZIP
     if _RX_STATE_ABBR.match(text):
         m |= B_ABBR
-    if not m & B_ORG and _org_anchor_rel(text, low) is not None:
+    if not m & B_ORG and _ORG_ANCHOR[text] is not None:
         m |= B_ORG
     if _stem_rel(low) >= 0:
         m |= B_STEM
@@ -1257,14 +1218,14 @@ def _tok_mask(text: str, low: str) -> int:
         m |= B_INI
     if any(c.isdigit() for c in low):
         m |= B_DIGITS
-    if len(_TOK_MASK_CACHE) > 300_000:
-        _TOK_MASK_CACHE.clear()
-    _TOK_MASK_CACHE[text] = m
     return m
 
 
-# hoisted: building this union per token defeated _GAZ_CACHE (the cache
-# keys on id(gaz), fresh per union) and allocated a large frozenset in
+_tok_mask = Memo(_tok_mask, 300_000).__getitem__
+
+
+# hoisted: building this union per token defeated the _gaz_span memo (a
+# fresh union per call is a new key) and allocated a large frozenset in
 # the hot loop
 _PLACE_1 = CITY_1 | STATE_1 | COUNTRY_1
 # hoisted: the single-word company suffixes, iterated per org-anchor
@@ -1299,9 +1260,6 @@ def _toks(text: str) -> list[_Tok]:
     return out
 
 
-_GAZ_CACHE: dict[tuple[str, int], tuple[int, int] | None] = {}
-
-
 def _gaz_span(tok: _Tok, gaz: frozenset) -> tuple[int, int] | None:
     """Tight char range of a gazetteer hit inside a possibly noise-glued
     token: ≤2 trailing junk chars, a gazetteer prefix with an
@@ -1309,16 +1267,10 @@ def _gaz_span(tok: _Tok, gaz: frozenset) -> tuple[int, int] | None:
     chars (any case) / more when the word restarts uppercase.
 
     Results are memoized per (token text, gazetteer): the corpus draws
-    from closed vocabularies, so the hit rate is high and the cache
-    stays small (cleared at 1M entries as a safety valve)."""
-    key = (tok.text, id(gaz))
-    try:
-        rel = _GAZ_CACHE[key]
-    except KeyError:
-        rel = _gaz_span_rel(tok.text, tok.low, gaz)
-        if len(_GAZ_CACHE) > 300_000:
-            _GAZ_CACHE.clear()
-        _GAZ_CACHE[key] = rel
+    from closed vocabularies, so the hit rate is high. The gazetteers
+    are module-level frozensets, which cache their hash, so a hit
+    compares the same object."""
+    rel = _GAZ_REL[tok.text, gaz]
     if rel is None:
         return None
     return (tok.start + rel[0], tok.start + rel[1])
@@ -1350,6 +1302,10 @@ def _gaz_span_rel(text: str, low: str, gaz: frozenset) -> tuple[int, int] | None
     return None
 
 
+# keyed on (token text, gazetteer): a token's low is always text.lower()
+_GAZ_REL = Memo(lambda k: _gaz_span_rel(k[0], k[0].lower(), k[1]), 300_000)
+
+
 def _gaz_glued(tok: _Tok, gaz: frozenset) -> bool:
     return _gaz_span(tok, gaz) is not None
 
@@ -1371,65 +1327,43 @@ def _last_span_loose(tok: _Tok) -> tuple[int, int] | None:
 _YEAR_USER_RE = re.compile(r"(?:19|20)\d{2}[a-z]+\d{0,6}")
 
 
-_INI_BLOCKED_CACHE: dict[tuple[str, bool], bool] = {}
-
-
-def _ini_blocked(ini: str, formlabel: bool) -> bool:
+def _ini_blocked(key: tuple[str, bool]) -> bool:
     """Initials-blocklist scan (exact / anagram / edit-1 with the
-    form-label 3-letter relaxation) — pure function of (initials,
-    form-label position), memoized; the uncached scan runs _edit1
-    against the whole blocklist per token."""
-    key = (ini, formlabel)
-    v = _INI_BLOCKED_CACHE.get(key)
-    if v is None:
-        v = any(
-            ini == b
-            or sorted(ini) == sorted(b)
-            or (max(len(b), len(ini)) >= 4 and _edit1(ini, b))
-            # a noised form label ('ESN:', 'SS0') sits in label
-            # position; only then does edit-1 apply to 3-letter words
-            or (len(b) == 3 and formlabel and _edit1(ini, b))
-            for b in INITIALS_BLOCKLIST
-        )
-        if len(_INI_BLOCKED_CACHE) > 100_000:
-            _INI_BLOCKED_CACHE.clear()
-        _INI_BLOCKED_CACHE[key] = v
-    return v
+    form-label 3-letter relaxation) of (initials, form-label position);
+    the scan runs _edit1 against the whole blocklist."""
+    ini, formlabel = key
+    return any(
+        ini == b
+        or sorted(ini) == sorted(b)
+        or (max(len(b), len(ini)) >= 4 and _edit1(ini, b))
+        # a noised form label ('ESN:', 'SS0') sits in label
+        # position; only then does edit-1 apply to 3-letter words
+        or (len(b) == 3 and formlabel and _edit1(ini, b))
+        for b in INITIALS_BLOCKLIST
+    )
 
 
-_ORG_ANCHOR_CACHE: dict[str, int | None] = {}
+_ini_blocked = Memo(_ini_blocked, 100_000)
 
 
 def _org_anchor_rel(text: str, low: str) -> int | None:
     """Latest uppercase-handover LASTS suffix inside the token (the ORG
     grammar anchor), as a relative offset — pure function of the token
-    text, memoized."""
-    try:
-        return _ORG_ANCHOR_CACHE[text]
-    except KeyError:
-        pass
-    rel = None
+    text."""
     for k in range(min(17, len(low) - 2), 0, -1):
         if low[k:] in LASTS and text[k].isupper():
-            rel = k
-            break
-    if len(_ORG_ANCHOR_CACHE) > 300_000:
-        _ORG_ANCHOR_CACHE.clear()
-    _ORG_ANCHOR_CACHE[text] = rel
-    return rel
+            return k
+    return None
 
 
-_STEM_CACHE: dict[str, int] = {}
+# keyed on the token text alone: a token's low is always text.lower()
+_ORG_ANCHOR = Memo(lambda t: _org_anchor_rel(t, t.lower()), 300_000)
 
 
 def _stem_rel(low: str) -> int:
     """first.last stem start (optional year/digit prefix behind ≤2
     glued chars, else glue before a trailing first name), as a relative
-    offset or -1 — pure function of the lowercased token, memoized."""
-    v = _STEM_CACHE.get(low)
-    if v is not None:
-        return v
-    rel = -1
+    offset or -1 — pure function of the lowercased token."""
     for strip in (0, 1, 2):
         alpha1 = low[strip:]
         if len(alpha1) < 3:
@@ -1437,44 +1371,28 @@ def _stem_rel(low: str) -> int:
         ym = _YEARPFX.match(alpha1) or _DIGPFX.match(alpha1)
         stem = alpha1[ym.end():] if ym and alpha1[ym.end():] else alpha1
         if stem in FIRSTS or (ym and stem in LASTS):
-            rel = strip
-            break
-    if rel < 0:
-        # arbitrary glue ending before a trailing first name
-        # ('Thanks5kelly.adams' → 'kelly')
-        mt = _RX_TRAIL_ALPHA.search(low)
-        if mt and mt.group(1) in FIRSTS and mt.start() > 0:
-            rel = mt.start()
-    if len(_STEM_CACHE) > 300_000:
-        _STEM_CACHE.clear()
-    _STEM_CACHE[low] = rel
-    return rel
+            return strip
+    # arbitrary glue ending before a trailing first name
+    # ('Thanks5kelly.adams' → 'kelly')
+    mt = _RX_TRAIL_ALPHA.search(low)
+    if mt and mt.group(1) in FIRSTS and mt.start() > 0:
+        return mt.start()
+    return -1
 
 
-_USERNAME_CACHE: dict[tuple[str, bool], tuple[float, int, int]] = {}
+# _tok_mask, itself memoized per token text, calls the body directly:
+# memoizing there too would store a second lowered copy of every token
+_STEM = Memo(_stem_rel, 300_000)
 
 
-def _username_shape(low: str, first_upper: bool = False) -> tuple[float, int, int]:
-    """Single-token username hit: (confidence, start_off, end_off) —
-    offsets are TIGHT (glued trail chars excluded) so the fine metric
-    tokens around noise glue align with the generator's exact spans.
-    Shapes per generation.py:51-118; trailing glue may be arbitrarily
-    long (it is never part of the span). Pure function of its inputs —
-    memoized (Zipf token reuse across a web corpus)."""
-    key = (low, first_upper)
-    v = _USERNAME_CACHE.get(key)
-    if v is not None:
-        return v
-    v = _username_shape_uncached(low, first_upper)
-    if len(_USERNAME_CACHE) > 300_000:
-        _USERNAME_CACHE.clear()
-    _USERNAME_CACHE[key] = v
-    return v
-
-
-def _username_shape_uncached(
-    low: str, first_upper: bool
-) -> tuple[float, int, int]:
+def _username_shape(key: tuple[str, bool]) -> tuple[float, int, int]:
+    """Single-token username hit of (low, first_upper): (confidence,
+    start_off, end_off) — offsets are TIGHT (glued trail chars excluded)
+    so the fine metric tokens around noise glue align with the
+    generator's exact spans. Shapes per generation.py:51-118; trailing
+    glue may be arbitrarily long (it is never part of the span). Pure
+    function of its inputs (Zipf token reuse across a web corpus)."""
+    low, first_upper = key
     # year-prefixed usernames first, possibly after leading glue
     # ('havef1970jhamilton', 'PaTiente2004stephanie70'): a gazetteer name
     # behind a year beats any generic shape match on the glued prefix
@@ -1549,6 +1467,9 @@ def _username_shape_uncached(
     return (0.0, 0, 0)
 
 
+_username_shape = Memo(_username_shape, 300_000)
+
+
 def token_candidates(text: str) -> list[Candidate]:
     toks = _toks(text)
     out: list[Candidate] = []
@@ -1592,7 +1513,7 @@ def token_candidates(text: str) -> list[Candidate]:
         )
 
     for i, tk in enumerate(toks):
-        mask = _tok_mask(tk.text, tk.low)
+        mask = _tok_mask(tk.text)
         # ---- multi-token gazetteer places (longest first);
         # single-token hits tolerate noise glue via _gaz_glued
         if mask & B_SEQ2 and i + 2 <= n:
@@ -1797,7 +1718,7 @@ def token_candidates(text: str) -> list[Candidate]:
         # name belongs to a preceding person.
         org_anchor = None
         if mask & B_ORG:
-            ok = _org_anchor_rel(tk.text, tk.low)
+            ok = _ORG_ANCHOR[tk.text]
             if ok is not None:
                 org_anchor = (tk.start + ok, tk.end)
             else:
@@ -1873,7 +1794,7 @@ def token_candidates(text: str) -> list[Candidate]:
         # ---- PERSON: first.last / first_last (+digits), optional year
         # prefix (with ≤2 leading glued chars: 'g1951heather.dixon')
         stem_start = (
-            tk.start + _stem_rel(tk.low) if mask & B_STEM else -1
+            tk.start + _STEM[tk.low] if mask & B_STEM else -1
         )
         if (
             stem_start >= 0
@@ -1916,16 +1837,16 @@ def token_candidates(text: str) -> list[Candidate]:
         # leading glued chars stripped: 'Inathan334', 'g1951heather')
         if mask & B_UNAME and not handle_tok:
             # (B_UNAME = alnum token, len <= 26 — SHA1/GUIDs are longer)
-            conf, a, b = _username_shape(tk.low, tk.text[0].isupper())
+            conf, a, b = _username_shape[tk.low, tk.text[0].isupper()]
             if conf == 0 and mask & B_DIGITS:
                 # retry with 1-2 leading glued chars stripped — but only
                 # for digit-bearing shapes (pure-alpha retries would turn
                 # 'hiking' into initial+'king')
                 for strip in (1, 2):
                     if len(tk.low) >= strip + 3:
-                        c2, a2, b2 = _username_shape(
+                        c2, a2, b2 = _username_shape[
                             tk.low[strip:], tk.text[strip].isupper()
-                        )
+                        ]
                         if c2 > 0:
                             conf, a, b = c2 - 0.03, strip + a2, strip + b2
                             break
@@ -2012,7 +1933,7 @@ def token_candidates(text: str) -> list[Candidate]:
         )
         if (
             ini_m
-            and not _ini_blocked(ini_m.group(1), bool(ini_formlabel))
+            and not _ini_blocked[ini_m.group(1), bool(ini_formlabel)]
             and ini_m.group(1) not in STATE_ABBRS
             and ini_m.group(1) not in COUNTRY_CODES
             and prev_char(i) != "@"

@@ -21,6 +21,7 @@ import re
 
 import numpy as np
 
+from ..memo import Memo
 from .gazetteer import (
     CITY_1,
     COUNTRY_CODES,
@@ -33,29 +34,18 @@ from .gazetteer import (
 )
 
 DIM = 1 << 18
-# memo caps sized for OPEN vocabulary (real web text): with dict/key/
-# ndarray overhead the worst case stays ~100-200 MB per Python worker;
-# the closed template corpus never reaches them. Wholesale clear() at
-# the cap is deliberate — an LRU would put bookkeeping on every hit.
 FEATURE_VERSION = 2  # bump on ANY change to hashing/feature families
 _MASK = DIM - 1
 
 
-_H_CACHE: dict[str, int] = {}
-
-
 def _h(s: str) -> int:
-    v = _H_CACHE.get(s)
-    if v is not None:
-        return v
     h = 2166136261
     for ch in s.encode("utf-8"):
         h = ((h ^ ch) * 16777619) & 0xFFFFFFFF
-    v = h & _MASK
-    if len(_H_CACHE) > 1_000_000:
-        _H_CACHE.clear()
-    _H_CACHE[s] = v
-    return v
+    return h & _MASK
+
+
+_h = Memo(_h, 1_000_000)
 
 
 _SHAPE_RE = [
@@ -69,42 +59,21 @@ _SHAPE_RE = [
 ]
 
 
-_SHAPE_CACHE: dict[str, str] = {}
-
-
 def _shape(tok: str) -> str:
-    v = _SHAPE_CACHE.get(tok)
-    if v is not None:
-        return v
-    v = None
     for rx, name in _SHAPE_RE:
         if rx.match(tok):
-            v = f"{name}{min(len(tok), 9)}"
-            break
-    if v is None:
-        if len(tok) == 1 and not tok.isalnum():
-            v = f"p{tok}"
-        else:
-            v = f"m{min(len(tok), 9)}"
-    if len(_SHAPE_CACHE) > 200_000:
-        _SHAPE_CACHE.clear()
-    _SHAPE_CACHE[tok] = v
-    return v
+            return f"{name}{min(len(tok), 9)}"
+    if len(tok) == 1 and not tok.isalnum():
+        return f"p{tok}"
+    return f"m{min(len(tok), 9)}"
 
 
-_GRAM_CACHE: dict[tuple[str, str], list[str]] = {}
+_shape = Memo(_shape, 200_000).__getitem__
 
 
 def _grams(tok: str, pre: str) -> list[str]:
-    key = (pre, tok)
-    v = _GRAM_CACHE.get(key)
-    if v is None:
-        s = f"^{tok.lower()}$"
-        v = [f"{pre}{s[i:i+3]}" for i in range(min(len(s) - 2, 12))]
-        if len(_GRAM_CACHE) > 200_000:
-            _GRAM_CACHE.clear()
-        _GRAM_CACHE[key] = v
-    return v
+    s = f"^{tok.lower()}$"
+    return [f"{pre}{s[i:i+3]}" for i in range(min(len(s) - 2, 12))]
 
 
 def _gaz_feats(low: str) -> list[str]:
@@ -129,16 +98,6 @@ def _gaz_feats(low: str) -> list[str]:
     return out
 
 
-# block caches: the self/neighbor feature strings are pure functions of
-# the token (resp. (tag, token)), and the token vocabulary repeats
-# massively across documents — precomputing each block's hash array
-# collapses most of the per-token string formatting + FNV hashing into
-# one dict hit. FEATURE ORDER inside each block matches the original
-# inline construction exactly, so the concatenated index array — and
-# therefore the reduceat float summation order in serving — is
-# byte-identical to the uncached path (FEATURE_VERSION unchanged).
-_SELF_F: dict[str, np.ndarray] = {}
-_CTX_F: dict[tuple[str, str], np.ndarray] = {}
 _MISS_F = {
     tag: None for tag in ("pp", "p", "n", "nn")
 }
@@ -146,59 +105,43 @@ _MISS_F = {
 
 def _hash_arr(strs: list[str]) -> np.ndarray:
     # list-comp + np.array beats fromiter-over-genexpr for these short
-    # blocks (one C-level pass, no generator frame per element); the
-    # memo probe is inlined so cache hits skip the _h call frame
-    g = _H_CACHE.get
-    return np.array(
-        [v if (v := g(x)) is not None else _h(x) for x in strs],
-        dtype=np.int32,
-    )
+    # blocks (one C-level pass, no generator frame per element)
+    return np.array([_h[x] for x in strs], dtype=np.int32)
 
 
+# per-block builders: the reference that _ctx_blocks must equal
 def _self_feats(tok: str) -> np.ndarray:
-    v = _SELF_F.get(tok)
-    if v is None:
-        low = tok.lower()
-        f = ["b", f"t={low}", f"s={_shape(tok)}",
-             f"tp={low[:4]}",   # prefix/suffix stubs survive
-             f"ts={low[-4:]}"]  # trailing glue better than ids
-        f.extend(_grams(tok, "g3="))
-        f.extend(_gaz_feats(low))
-        v = _hash_arr(f)
-        if len(_SELF_F) > 150_000:
-            _SELF_F.clear()
-        _SELF_F[tok] = v
-    return v
+    low = tok.lower()
+    f = ["b", f"t={low}", f"s={_shape(tok)}",
+         f"tp={low[:4]}",   # prefix/suffix stubs survive
+         f"ts={low[-4:]}"]  # trailing glue better than ids
+    f.extend(_grams(tok, "g3="))
+    f.extend(_gaz_feats(low))
+    return _hash_arr(f)
 
 
 def _ctx_feats(tag: str, tok: str, with_gaz: bool) -> np.ndarray:
-    key = (tag, tok)
-    v = _CTX_F.get(key)
-    if v is None:
-        low = tok.lower()
-        f = [f"{tag}={low}", f"{tag}s={_shape(tok)}"]
-        f.extend(_grams(tok, f"{tag}3="))
-        if with_gaz:
-            f.extend(f"{tag}{x}" for x in _gaz_feats(low))
-        v = _hash_arr(f)
-        if len(_CTX_F) > 400_000:
-            _CTX_F.clear()
-        _CTX_F[key] = v
-    return v
+    low = tok.lower()
+    f = [f"{tag}={low}", f"{tag}s={_shape(tok)}"]
+    f.extend(_grams(tok, f"{tag}3="))
+    if with_gaz:
+        f.extend(f"{tag}{x}" for x in _gaz_feats(low))
+    return _hash_arr(f)
 
 
 # r9: all four context-tag arrays AND the self array of one token under
 # ONE string key — featurize's inner loop then pays a single cached-hash
 # str lookup per token instead of five tuple/str-keyed gets (tuple
 # hashes recompute on every call; str hashes are cached in the object).
-# The per-tag feature strings, their ORDER, and the hash values are
-# byte-identical to _ctx_feats/_self_feats: the builder shares
+# The token vocabulary repeats massively across documents, so this
+# collapses most of the per-token string formatting + FNV hashing into
+# one dict hit. The per-tag feature strings, their ORDER, and the hash
+# values are byte-identical to _ctx_feats/_self_feats, so the
+# concatenated index array — and the reduceat float summation order in
+# serving — is unchanged (FEATURE_VERSION unchanged): the builder shares
 # low/shape/gram-core/gaz work but emits the exact same f-strings per
 # block (pp/nn without gaz, p/n/self with — matching featurize's call
 # pattern).
-_CTX_TOK: dict[str, tuple] = {}
-
-
 def _ctx_blocks(tok: str) -> tuple:
     low = tok.lower()
     sh = _shape(tok)
@@ -224,11 +167,10 @@ def _ctx_blocks(tok: str) -> tuple:
     # exact same order as five per-block arrays would
     arr = _hash_arr(f)
     a, b, c, d = cuts
-    v = (arr[:a], arr[a:b], arr[b:c], arr[c:d], arr[d:])
-    if len(_CTX_TOK) > 150_000:
-        _CTX_TOK.clear()
-    _CTX_TOK[tok] = v
-    return v
+    return (arr[:a], arr[a:b], arr[b:c], arr[c:d], arr[d:])
+
+
+_ctx_blocks = Memo(_ctx_blocks, 150_000).__getitem__
 
 
 def _miss_feats(tag: str) -> np.ndarray:
@@ -239,33 +181,26 @@ def _miss_feats(tag: str) -> np.ndarray:
     return v
 
 
-_TAIL_F: dict[tuple, np.ndarray] = {}
+def _tail_feats(key: tuple[str, str, str, bool, str, str]) -> np.ndarray:
+    """Separator-char + rule-overlay feature block of
+    ``(pc, nc, tag, conf_hi, prev_tag, next_tag)`` (low cardinality:
+    chars × BILOU tags). Feature ORDER matches the original inline
+    construction exactly, so the reduceat summation order in serving
+    stays byte-identical."""
+    pc, nc, tag, conf_hi, prev_tag, next_tag = key
+    f = [f"pc={pc}", f"nc={nc}"]
+    if tag:
+        f.append(f"c={tag}")
+        f.append(f"cl={tag.split('-')[-1]}")
+        f.append(f"cc={tag}:{'hi' if conf_hi else 'lo'}")
+    else:
+        f.append("c=~")
+    f.append(f"cp={prev_tag or '~'}")
+    f.append(f"cn={next_tag or '~'}")
+    return _hash_arr(f)
 
 
-def _tail_feats(
-    pc: str, nc: str, tag: str, conf_hi: bool, prev_tag: str, next_tag: str
-) -> np.ndarray:
-    """Separator-char + rule-overlay feature block, memoized on its
-    6-tuple of inputs (low cardinality: chars × BILOU tags). Feature
-    ORDER matches the original inline construction exactly, so the
-    reduceat summation order in serving stays byte-identical."""
-    key = (pc, nc, tag, conf_hi, prev_tag, next_tag)
-    v = _TAIL_F.get(key)
-    if v is None:
-        f = [f"pc={pc}", f"nc={nc}"]
-        if tag:
-            f.append(f"c={tag}")
-            f.append(f"cl={tag.split('-')[-1]}")
-            f.append(f"cc={tag}:{'hi' if conf_hi else 'lo'}")
-        else:
-            f.append("c=~")
-        f.append(f"cp={prev_tag or '~'}")
-        f.append(f"cn={next_tag or '~'}")
-        v = _hash_arr(f)
-        if len(_TAIL_F) > 400_000:
-            _TAIL_F.clear()
-        _TAIL_F[key] = v
-    return v
+_tail_feats = Memo(_tail_feats, 400_000)
 
 
 def featurize_doc_flat(
@@ -286,23 +221,14 @@ def featurize_doc_flat(
     n = len(tokens)
     lens_l = [0] * n
     parts: list[np.ndarray] = []
-    # r9: the loop body is the serve path's hot inner loop — cache
-    # lookups are inlined (one dict.get instead of a function call per
-    # block; the miss path still routes through the builder functions,
-    # so feature content and ORDER are byte-identical to the original
-    # per-block construction)
+    # r9: the loop body is the serve path's hot inner loop
     ap = parts.append
-    ctxc, tailc = _CTX_TOK, _TAIL_F
+    tail = _tail_feats
     miss_pp, miss_p = _miss_feats("pp"), _miss_feats("p")
     miss_n, miss_nn = _miss_feats("n"), _miss_feats("nn")
     text_len = len(text)
-    # one str-keyed get per token (cached str hash) replaces five
-    # tuple/str-keyed gets per center token; blocks[j] holds the
-    # (pp, p, n, nn, self) arrays of token j
-    blocks = [ctxc.get(t) for t in tokens]
-    for j, bl in enumerate(blocks):
-        if bl is None:
-            blocks[j] = _ctx_blocks(tokens[j])
+    # blocks[j] holds the (pp, p, n, nn, self) arrays of token j
+    blocks = list(map(_ctx_blocks, tokens))
     for i in range(n):
         s0, e0 = offsets[i]
         if s0 == 0 and e0 == 0:
@@ -325,18 +251,15 @@ def featurize_doc_flat(
         ap(b)
         ln += b.shape[0]
         # adjacent raw chars (separator signals) + rule-candidate
-        # overlay, as one memoized block (low-cardinality key)
-        key = (
+        # overlay, as one block (low-cardinality key)
+        b = tail[
             text[s0 - 1] if s0 > 0 else "^",
             text[e0] if e0 < text_len else "$",
             cand_tags[i],
             cand_confs[i] >= 0.8,
             cand_tags[i - 1] if i > 0 else "^",
             cand_tags[i + 1] if i + 1 < n else "$",
-        )
-        b = tailc.get(key)
-        if b is None:
-            b = _tail_feats(*key)
+        ]
         ap(b)
         lens_l[i] = ln + b.shape[0]
     flat = (np.concatenate(parts) if parts

@@ -256,7 +256,7 @@ def _logits_for_doc(
     return logits
 
 
-def serve_doc(text: str, scrub_ip: bool = True) -> DocResult:
+def serve_doc(text: str) -> DocResult:
     tokens, offsets, _ = tokenize_with_offsets(text, with_ids=False)
     cands = detect_spans(text)
     ip_cands = [c for c in cands if c.label == "IP"]
@@ -350,22 +350,21 @@ def serve_doc(text: str, scrub_ip: bool = True) -> DocResult:
     entities = [
         (lab, a, b, offsets[a][0], offsets[b][1]) for lab, a, b in ents
     ]
-    if scrub_ip:
-        # the model covers the 9 entity labels; IP spans (north-rule
-        # scrub type) come from the regex stage directly — on BOTH the
-        # head path and the rule-only fallback
-        for c in ip_cands:
-            toks_in = tindex.overlapping(c.start, c.end)
-            if len(toks_in) and not any(
-                a <= toks_in[-1] and b >= toks_in[0]
-                for _l, a, b, _cs, _ce in entities
-            ):
-                entities.append(
-                    ("IP", int(toks_in[0]), int(toks_in[-1]), c.start, c.end)
-                )
+    # the model covers the 9 entity labels; IP spans (north-rule scrub
+    # type) come from the regex stage directly — on BOTH the head path
+    # and the rule-only fallback
+    for c in ip_cands:
+        toks_in = tindex.overlapping(c.start, c.end)
+        if len(toks_in) and not any(
+            a <= toks_in[-1] and b >= toks_in[0]
+            for _l, a, b, _cs, _ce in entities
+        ):
+            entities.append(
+                ("IP", int(toks_in[0]), int(toks_in[-1]), c.start, c.end)
+            )
     return DocResult(tokens, offsets, tags, entities)
 
 
-def serve_batch(texts, scrub_ip: bool = True) -> list[DocResult]:
+def serve_batch(texts) -> list[DocResult]:
     """Arrow-batch serving entry point (called from mapInPandas)."""
-    return [serve_doc(t or "", scrub_ip) for t in texts]
+    return [serve_doc(t or "") for t in texts]

@@ -130,13 +130,3 @@ def decode_bilou(tags: list[str]) -> list[Entity]:
     if cur_label is not None:
         entities.append((cur_label, cur_start, len(tags) - 1))
     return entities
-
-
-def entities_with_char_spans(
-    entities: list[Entity], offsets: list[Offset]
-) -> list[tuple[str, int, int, int, int]]:
-    """Attach char boundaries: (label, tok_first, tok_last, char_start, char_end)."""
-    out = []
-    for label, a, b in entities:
-        out.append((label, a, b, offsets[a][0], offsets[b][1]))
-    return out

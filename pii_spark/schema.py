@@ -38,15 +38,6 @@ CORPUS = T.StructType(
     ]
 )
 
-TRUTH = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("kind", T.StringType()),
-        T.StructField("spans", T.ArrayType(SPAN)),
-    ]
-)
-
 QUALITY_STRUCT = T.StructType(
     [
         T.StructField("n_words", T.IntegerType()),

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..memo import Memo
+
 _EMB_SCHEMA = T.StructType([
     T.StructField("vec_id", T.LongType()),
     T.StructField("embedding", T.ArrayType(T.FloatType())),
@@ -36,19 +38,13 @@ _EMB_SCHEMA = T.StructType([
 
 # r9: the blake2b digest (bucket int + sign) is a pure function of the
 # gram, and the 3-gram vocabulary is tiny vs its occurrence count —
-# memoize per gram (dim applied at use, so one cache serves every dim).
-_GRAM_DIGEST_CACHE: dict[str, tuple[int, float]] = {}
-
-
+# memoize per gram (dim applied at use, so one memo serves every dim).
 def _gram_digest(g: str) -> tuple[int, float]:
-    t = _GRAM_DIGEST_CACHE.get(g)
-    if t is None:
-        h = hashlib.blake2b(g.encode("utf-8"), digest_size=8).digest()
-        t = (int.from_bytes(h[:4], "big"), 1.0 if h[4] & 1 else -1.0)
-        if len(_GRAM_DIGEST_CACHE) > 500_000:
-            _GRAM_DIGEST_CACHE.clear()
-        _GRAM_DIGEST_CACHE[g] = t
-    return t
+    h = hashlib.blake2b(g.encode("utf-8"), digest_size=8).digest()
+    return (int.from_bytes(h[:4], "big"), 1.0 if h[4] & 1 else -1.0)
+
+
+_gram_digest = Memo(_gram_digest, 500_000).__getitem__
 
 
 def embed_text(text: str, dim: int = 64) -> np.ndarray:

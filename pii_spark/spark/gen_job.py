@@ -21,7 +21,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schema import CORPUS, TRUTH
+from ..schema import CORPUS
 
 _GEN_SCHEMA = (
     "doc_id long, url string, warc_ts timestamp, html binary, text string,"
@@ -55,11 +55,4 @@ def generate_corpus(spark: SparkSession, n: int, seed: int = 42,
     """Input-table view: exactly the BASELINE.json input_hint columns."""
     return generate_full(spark, n, seed, partitions).select(
         *[f.name for f in CORPUS.fields]
-    )
-
-
-def generate_truth(spark: SparkSession, n: int, seed: int = 42,
-                   partitions: int | None = None) -> DataFrame:
-    return generate_full(spark, n, seed, partitions).select(
-        *[f.name for f in TRUTH.fields]
     )

@@ -375,24 +375,3 @@ def kmeans_assign(
     return _assign_ex(ex, cents) if with_sqdist else _assign_only(
         ex, cents)
 
-
-def kmeans_summary(df: DataFrame, k: int = 8, iters: int = 5) -> DataFrame:
-    """(cluster, n_vecs, inertia) census — the rows-only driver view.
-    Materializes the k-row census and releases the fit's cached frames
-    so repeated calls don't accumulate storage."""
-    assign, cents = kmeans_fit(df, k, iters)
-    out = (
-        assign.groupBy("cluster")
-        .agg(
-            F.count("*").cast("long").alias("n_vecs"),
-            F.round(F.sum("sqdist"), 4).alias("inertia"),
-        )
-        .orderBy("cluster")
-    )
-    # k collected rows -> fresh frame: releases the fit's caches with no
-    # storage entry left behind per call
-    rows = out.collect()
-    schema = out.schema
-    assign.unpersist()
-    cents.unpersist()
-    return df.sparkSession.createDataFrame(rows, schema)

@@ -15,6 +15,7 @@ from __future__ import annotations
 import re
 
 from .config import MAX_TOKENS
+from .memo import Memo
 
 # subword-ish segmentation, mirroring how the reference's BPE tokenizer
 # (build_datasets.py:40) isolates noise-glued chars into their own
@@ -30,23 +31,16 @@ EOS_ID = 2
 _VOCAB_HASH_BUCKETS = 2**20
 
 
-_ID_CACHE: dict[str, int] = {}
-
-
 def token_id(tok: str) -> int:
-    """Stable hashed vocab id (FNV-1a over the lowercased token),
-    memoized — the token vocabulary repeats massively (Zipf)."""
-    v = _ID_CACHE.get(tok)
-    if v is not None:
-        return v
+    """Stable hashed vocab id (FNV-1a over the lowercased token); the
+    token vocabulary repeats massively (Zipf)."""
     h = 2166136261
     for ch in tok.lower().encode("utf-8"):
         h = ((h ^ ch) * 16777619) & 0xFFFFFFFF
-    v = 3 + h % _VOCAB_HASH_BUCKETS
-    if len(_ID_CACHE) > 500_000:
-        _ID_CACHE.clear()
-    _ID_CACHE[tok] = v
-    return v
+    return 3 + h % _VOCAB_HASH_BUCKETS
+
+
+token_id = Memo(token_id, 500_000).__getitem__
 
 
 def tokenize_with_offsets(
@@ -67,26 +61,13 @@ def tokenize_with_offsets(
     budget = max_tokens - 2
     tok_append = tokens.append
     off_append = offsets.append
-    if with_ids:
-        ids: list[int] = [BOS_ID]
-        id_append = ids.append
-        for m in _TOKEN_RE.finditer(text):
-            if budget <= 0:
-                break
-            g = m.group()
-            tok_append(g)
-            off_append(m.span())
-            id_append(token_id(g))
-            budget -= 1
-        id_append(EOS_ID)
-    else:
-        ids = []
-        for m in _TOKEN_RE.finditer(text):
-            if budget <= 0:
-                break
-            tok_append(m.group())
-            off_append(m.span())
-            budget -= 1
+    for m in _TOKEN_RE.finditer(text):
+        if budget <= 0:
+            break
+        tok_append(m.group())
+        off_append(m.span())
+        budget -= 1
+    ids = [BOS_ID, *map(token_id, tokens[1:]), EOS_ID] if with_ids else []
     tok_append("</s>")
     off_append((0, 0))
     return tokens, offsets, ids
