@@ -43,9 +43,12 @@ maintenance composes with resume.
 from __future__ import annotations
 
 import json
+import logging
+import re
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +56,47 @@ from pyspark.sql import functions as F
 
 from ..icelite.catalog import IceliteTable
 from .pipeline import run_pipeline
+
+
+def _audit_counts():
+    """docs_in / docs_kept / spans_scrubbed over an output relation —
+    the one aggregate every lineage row is built from."""
+    return (
+        F.count("*").alias("docs_in"),
+        F.sum(F.col("keep").cast("long")).alias("docs_kept"),
+        F.sum(F.size("spans").cast("long")).alias("spans_scrubbed"),
+    )
+
+
+def _append_audit(spark, audit: IceliteTable, run_id: str, snapshot_id,
+                  rows, summary: dict) -> None:
+    """Append one lineage row per ``(partition_id, input_files,
+    docs_in, docs_kept, spans_scrubbed, wall_ms)`` tuple, stamped with
+    the commit time. A NULL sum (no rows) counts as 0."""
+    from ..schema import AUDIT
+
+    adf = spark.createDataFrame(
+        [
+            (run_id, snapshot_id, pid, files, int(n), int(kept or 0),
+             int(n - (kept or 0)), int(spans or 0), wall_ms, None)
+            for pid, files, n, kept, spans, wall_ms in rows
+        ],
+        schema=AUDIT,
+    ).withColumn("committed_at", F.current_timestamp())
+    audit.append(adf, summary=summary)
+
+
+def _part_index(fname: str) -> int:
+    """Write-task index from a parquet ``part-NNNNN-…`` file name; -1
+    (with a warning, never silent) when the name has none."""
+    m = re.search(r"part-(\d+)", fname.rsplit("/", 1)[-1])
+    if not m:
+        logging.getLogger(__name__).warning(
+            "audit lineage: file name %r has no part-NNNNN "
+            "index; recording partition_id=-1", fname,
+        )
+        return -1
+    return int(m.group(1))
 
 
 def _backfill_missing_audit(spark, out: IceliteTable, audit: IceliteTable,
@@ -66,8 +110,6 @@ def _backfill_missing_audit(spark, out: IceliteTable, audit: IceliteTable,
     missing = done - audit.committed_groups()
     if not missing:
         return
-    from ..schema import AUDIT
-
     by_group = {
         s.summary.get("group"): s
         for s in out.snapshots()
@@ -86,26 +128,12 @@ def _backfill_missing_audit(spark, out: IceliteTable, audit: IceliteTable,
                 continue
             parent_dirs = set(parent.data_dirs)
         new_dirs = [d for d in snap.data_dirs if d not in parent_dirs]
-        stats = (
-            spark.read.parquet(*new_dirs)
-            .agg(
-                F.count("*").alias("docs_in"),
-                F.sum(F.col("keep").cast("long")).alias("docs_kept"),
-                F.sum(F.size("spans").cast("long")).alias("spans_scrubbed"),
-            )
-            .collect()[0]
+        stats = spark.read.parquet(*new_dirs).agg(*_audit_counts()).first()
+        _append_audit(
+            spark, audit, run_id, snap.snapshot_id,
+            [(-1, [f"group={g}", "backfill"], *stats, 0)],
+            summary={"group": g, "run_id": run_id, "backfill": True},
         )
-        adf = spark.createDataFrame(
-            [(
-                run_id, snap.snapshot_id, -1, [f"group={g}", "backfill"],
-                int(stats.docs_in), int(stats.docs_kept or 0),
-                int(stats.docs_in - (stats.docs_kept or 0)),
-                int(stats.spans_scrubbed or 0), 0, None,
-            )],
-            schema=AUDIT,
-        ).withColumn("committed_at", F.current_timestamp())
-        audit.append(adf, summary={"group": g, "run_id": run_id,
-                                   "backfill": True})
 
 
 def url_domain(col):
@@ -193,35 +221,162 @@ def drop_blocklisted_domains(df, blocklist_df) -> "DataFrame":
     ).drop("__dom", "__reg")
 
 
+def ingest_stage(
+    spark: SparkSession,
+    profile: str = "default",
+    partitions: int | None = None,
+    recrawl_keys: str | None = None,
+    recrawl_near: bool = False,
+    classifier_model: str | None = None,
+    domain_blocklist: str | None = None,
+) -> tuple[dict, Callable[[DataFrame], DataFrame]]:
+    """The work both quality jobs run on every group or micro-batch:
+    ``(identity, process)``. ``process(df)`` chains blocklist drop →
+    exact recrawl drop → near recrawl drop → ``run_pipeline`` →
+    classifier scores. ``identity`` is ``{profile, recrawl_keys,
+    classifier, domain_blocklist}`` — each option that changes output
+    semantics, as a content identity ("none" when off). The jobs record
+    it in every commit's summary and ``refuse_summary_drift`` refuses a
+    resume or restart under a different one: what one table holds must
+    not depend on crash timing.
+
+    ``profile`` selects run_pipeline's keep chain (default/strict);
+    ``partitions`` its repartition width.
+
+    ``domain_blocklist`` points at a parquet dir with a ``domain``
+    column (jobs/run_maintenance.py --derive-blocklist, or any curated
+    list): docs whose url domain is listed are dropped before the
+    pipeline — the C4/RefinedWeb URL-filter tier (broadcast anti-join,
+    `drop_blocklisted_domains`).
+
+    ``recrawl_keys`` points at a `jobs/run_base_keys.py` output dir:
+    docs whose normalized text already exists in the base corpus
+    (exact recrawls, anti-joined on the shared content fingerprint
+    against ``<recrawl_keys>/fp.parquet``) are dropped before the
+    pipeline, so they never pay langid/perplexity/detect.
+    ``recrawl_near`` adds the MinHash band tier in-line (exact
+    survivors only pay the shingle explode; geometry from the keys'
+    recorded ``keys_meta.json``). Its per-doc band-min aggregation is
+    an ordinary batch groupBy, also inside a streaming foreachBatch.
+    The near tier folds into the identity (":near"-suffixed, with
+    sig.parquet and the geometry hashed in), so toggling it is a
+    recorded semantics change. Recrawl-dropped docs are absent from
+    the output and from the audit's docs_in (ingest-side filtering,
+    upstream of the pipeline's keep/drop lineage).
+
+    Scrub-invariance caveat (ADVICE r6): the exact tier fingerprints
+    RAW extracted snapshot text, so the key tables must be maintained
+    from raw text too — the snapshot-dedup job's ``--update-keys``
+    delta append does exactly that. Recomputing keys from a job's
+    OUTPUT would fingerprint post-scrub text and silently never match
+    a recrawl of any doc the PII scrubber modified.
+
+    ``classifier_model`` points at a `jobs/run_classifier.py` model
+    dir: every output row gets ``clf_score`` / ``clf_predict_pos``
+    from the NB quality classifier, scored over the SCRUBBED text
+    (the content that enters the corpus) — CCNet's langid →
+    perplexity → classifier-routing composition in the same job, no
+    second pass over the output."""
+    if recrawl_near and recrawl_keys is None:
+        raise ValueError("recrawl_near needs recrawl_keys")
+    identity = {"profile": profile, "recrawl_keys": "none",
+                "classifier": "none", "domain_blocklist": "none"}
+    drops: list[Callable[[DataFrame], DataFrame]] = []
+    if domain_blocklist is not None:
+        identity["domain_blocklist"] = domain_blocklist_identity(
+            domain_blocklist)
+        bl_df = spark.read.parquet(domain_blocklist)
+        drops.append(lambda df: drop_blocklisted_domains(df, bl_df))
+    if recrawl_keys is not None:
+        from .incr_dedup import (
+            drop_recrawls,
+            drop_recrawls_near,
+            recrawl_keys_identity,
+        )
+
+        keys = Path(recrawl_keys)
+        identity["recrawl_keys"] = recrawl_keys_identity(
+            recrawl_keys, include_sig=recrawl_near)
+        fp_df = spark.read.parquet(str(keys / "fp.parquet"))
+        drops.append(lambda df: drop_recrawls(df, fp_df))
+        if recrawl_near:
+            km_path = keys / "keys_meta.json"
+            if not km_path.exists():
+                raise FileNotFoundError(
+                    f"{km_path} is missing — the near tier needs the "
+                    "recorded signature geometry (run_base_keys "
+                    "writes it)"
+                )
+            geo = json.loads(km_path.read_text())
+            identity["recrawl_keys"] += ":near"
+            sig_df = spark.read.parquet(str(keys / "sig.parquet"))
+            drops.append(lambda df: drop_recrawls_near(
+                df, sig_df, shingle_len=geo["shingle_len"],
+                stride=geo["stride"], bands=geo["bands"],
+            ))
+    model = None
+    if classifier_model is not None:
+        from ..quality.classifier import (
+            attach_quality_scores,
+            classifier_model_identity,
+            load_quality_model,
+        )
+
+        identity["classifier"] = classifier_model_identity(classifier_model)
+        model = load_quality_model(spark, classifier_model)
+
+    def process(df: DataFrame) -> DataFrame:
+        for drop in drops:
+            df = drop(df)
+        result = run_pipeline(df, partitions=partitions, profile=profile)
+        if model is not None:
+            result = attach_quality_scores(result, *model)
+        return result
+
+    return identity, process
+
+
+# identity field -> (its noun in a refusal, the value recorded by
+# commits that predate the field: the only setting that existed then)
+_IDENTITY_FIELDS = {
+    "profile": ("profile", "default"),
+    "recrawl_keys": ("recrawl key set", "none"),
+    "classifier": ("classifier model", "none"),
+    "domain_blocklist": ("domain blocklist", "none"),
+}
+
+
 def refuse_summary_drift(
-    out, field: str, current, default, snap_filter, fallback: bool,
-    message,
+    out, identity: dict, snap_filter, fallback: bool, where: str,
 ) -> None:
-    """ONE committed-summary drift guard (review r6: this pattern
-    existed four times — profile and recrawl keys, batch and
-    streaming). Collect ``field`` over committed snapshots
-    (``snap_filter(summary)`` picks the relevant ones — group commits,
-    or this checkpoint's stream batches) PLUS the expiry ledger carry;
-    snapshots predating the field count as ``default``, and
-    ``fallback`` substitutes ``{default}`` when every relevant
-    snapshot expired AND the caller knows commits exist (keeps the
-    check non-vacuous — review r5). Raises with
-    ``message(stale, current)`` — a CALLABLE, not a format string: the
-    messages embed user paths, and ``str.format`` over a path
-    containing braces would crash the refusal itself (review r6b) —
-    if any committed value differs from ``current``: semantics must
-    never depend on crash or restart timing."""
-    prev = {
-        s.summary.get(field, default)
-        for s in out.snapshots()
-        if snap_filter(s.summary)
-    }
-    prev.update(out._ledger_carry().get(field, []) or [])
-    if not prev and fallback:
-        prev = {default}
-    stale = prev - {current}
-    if stale:
-        raise RuntimeError(message(sorted(stale), current))
+    """ONE committed-summary drift guard for an `ingest_stage` identity,
+    shared by the batch and streaming jobs. For each field, collect its
+    value over committed snapshots (``snap_filter(summary)`` picks the
+    relevant ones — group commits, or this checkpoint's stream
+    batches) PLUS the expiry ledger carry; snapshots predating the
+    field count as its default, and ``fallback`` substitutes the
+    default when every relevant snapshot expired AND the caller knows
+    commits exist (keeps the check non-vacuous — review r5). Raises if
+    any committed value differs from the current one: semantics must
+    never depend on crash or restart timing. ``where`` names the
+    committed output in the message."""
+    snaps = [s.summary for s in out.snapshots() if snap_filter(s.summary)]
+    carry = out._ledger_carry()
+    for field, current in identity.items():
+        noun, default = _IDENTITY_FIELDS[field]
+        prev = {smry.get(field, default) for smry in snaps}
+        prev.update(carry.get(field, []) or [])
+        if not prev and fallback:
+            prev = {default}
+        stale = prev - {current}
+        if stale:
+            raise RuntimeError(
+                f"{where} has commits made under {noun}(s) "
+                f"{sorted(stale)} but this run uses {current!r} — "
+                f"{noun} semantics would differ across commits; rerun "
+                f"with the original {noun} or start over into a fresh "
+                "output"
+            )
 
 
 def _stage_by_group(
@@ -269,8 +424,7 @@ def run_quality_job(
     partitions first) or a directory path (files dealt round-robin
     into groups — zero staging cost). ``fail_after_groups``
     injects a crash for the resume test; ``compact_every=N`` compacts
-    the output table after every N group commits. ``profile`` selects
-    the keep chain (run_pipeline's default/strict).
+    the output table after every N group commits.
 
     ``input_format`` (path mode only): ``"parquet"`` reads a curated
     corpus; ``"warc"`` points the job straight at a crawl dump —
@@ -281,41 +435,11 @@ def run_quality_job(
     exactly like a parquet file; the listing fingerprint covers the
     format so a cross-format resume refuses loudly).
 
-    ``recrawl_keys`` points at a `jobs/run_base_keys.py` output dir:
-    each group is anti-joined on the shared content fingerprint
-    against ``<recrawl_keys>/fp.parquet`` BEFORE the pipeline — docs
-    whose normalized text already exists in the base corpus (exact
-    recrawls) never pay langid/perplexity/detect. ``recrawl_near``
-    adds the MinHash band tier in-line (exact survivors only pay the
-    shingle explode; geometry from the keys' recorded meta) — the
-    full two-tier snapshot dedup fused into ingest. The keys' identity
-    (file listing + sizes) is recorded per group commit, and a resume
-    under different keys refuses loudly — the same crash-timing-drift
-    class as the profile guard. Recrawl-dropped docs are absent from
-    the output and from the audit's docs_in (this is ingest-side
-    filtering, upstream of the pipeline's keep/drop lineage).
-
-    Scrub-invariance caveat (ADVICE r6): the exact tier fingerprints
-    RAW extracted snapshot text, so the key tables must be maintained
-    from raw text too — the snapshot-dedup job's ``--update-keys``
-    delta append does exactly that. Recomputing keys from this job's
-    OUTPUT would fingerprint post-scrub text and silently never match
-    a recrawl of any doc the PII scrubber modified.
-
-    ``classifier_model`` points at a `jobs/run_classifier.py` model
-    dir: every output row gets ``clf_score`` / ``clf_predict_pos``
-    from the NB quality classifier, scored over the SCRUBBED text
-    (the content that enters the corpus) — CCNet's langid →
-    perplexity → classifier-routing composition as one job, no second
-    pass over the output. The model identity is recorded per group
-    commit and a resume under a different (or no) model refuses
-    loudly — scores in one table must mean one thing.
-
-    ``domain_blocklist`` points at a parquet dir with a ``domain``
-    column (jobs/run_maintenance.py --derive-blocklist, or any
-    curated list): docs whose url domain is listed are dropped before
-    the pipeline — the C4/RefinedWeb URL-filter tier, identity-
-    recorded and resume-guarded exactly like ``recrawl_keys``."""
+    ``profile``, ``partitions``, ``recrawl_keys``, ``recrawl_near``,
+    ``classifier_model`` and ``domain_blocklist`` configure the
+    per-group work, shared with the streaming job: see
+    `ingest_stage`. A resume under a different setting of any of
+    them than the committed groups ran refuses loudly."""
     run_id = run_id or uuid.uuid4().hex[:12]
     out = IceliteTable(out_dir)
     audit = IceliteTable(audit_dir)
@@ -323,119 +447,22 @@ def run_quality_job(
     _backfill_missing_audit(spark, out, audit, done, run_id)
 
     pending = [g for g in range(groups) if g not in done]
-    if done:
-        # a resume must run the SAME keep chain the committed groups
-        # ran — mixing profiles across groups would make keep/drop
-        # depend on crash timing (the same silent-drift class as a
-        # changed file listing). Snapshots predating the field ran the
-        # only profile that existed then: default.
-        refuse_summary_drift(
-            out, "profile", profile, "default",
-            lambda smry: "group" in smry, fallback=True,
-            message=lambda stale, cur: (
-                f"table {out_dir} has groups committed under "
-                f"profile(s) {stale} but this run requests {cur!r} "
-                "— resuming would mix keep semantics across groups; "
-                "reprocess into a fresh table or resume with the "
-                "original profile"
-            ),
-        )
     if input_format not in ("parquet", "warc"):
         raise ValueError(f"unknown input_format {input_format!r}")
-    recrawl_id = "none"
-    recrawl_fp_df = recrawl_sig_df = None
-    recrawl_geo: dict = {}
-    if recrawl_near and recrawl_keys is None:
-        raise ValueError("recrawl_near needs recrawl_keys")
-    if recrawl_keys is not None:
-        from .incr_dedup import recrawl_keys_identity
-
-        # with the near tier on, sig.parquet + geometry are load-
-        # bearing and fold into the identity (review r7b)
-        recrawl_id = recrawl_keys_identity(recrawl_keys,
-                                           include_sig=recrawl_near)
-        recrawl_fp_df = spark.read.parquet(
-            str(Path(recrawl_keys) / "fp.parquet")
-        )
-        if recrawl_near:
-            # the near tier is a SEMANTICS change — fold it into the
-            # recorded identity so toggling it across a resume refuses
-            import json as _json
-
-            km_path = Path(recrawl_keys) / "keys_meta.json"
-            if not km_path.exists():
-                raise FileNotFoundError(
-                    f"{km_path} is missing — the near tier needs the "
-                    "recorded signature geometry (run_base_keys "
-                    "writes it)"
-                )
-            recrawl_geo = _json.loads(km_path.read_text())
-            recrawl_id = f"{recrawl_id}:near"
-            recrawl_sig_df = spark.read.parquet(
-                str(Path(recrawl_keys) / "sig.parquet")
-            )
+    identity, process = ingest_stage(
+        spark, profile, partitions, recrawl_keys, recrawl_near,
+        classifier_model, domain_blocklist,
+    )
     if done:
-        # same drift class as the profile guard: groups committed with
-        # one recrawl-key set must not be resumed under another (or
-        # under none) — which docs exist in the output would depend on
-        # crash timing. Pre-recrawl snapshots recorded no field: "none".
+        # a resume must run the SAME per-group work the committed
+        # groups ran — which docs exist in the output, and what keep
+        # and scores mean, would otherwise depend on crash timing
         refuse_summary_drift(
-            out, "recrawl_keys", recrawl_id, "none",
-            lambda smry: "group" in smry, fallback=True,
-            message=lambda stale, cur: (
-                f"table {out_dir} has groups committed under recrawl "
-                f"key set(s) {stale} but this run uses {cur!r} — "
-                "resuming would mix recrawl-drop semantics across "
-                "groups; reprocess into a fresh table or resume with "
-                "the original keys"
-            ),
-        )
-    bl_id = "none"
-    bl_df = None
-    if domain_blocklist is not None:
-        bl_id = domain_blocklist_identity(domain_blocklist)
-        bl_df = spark.read.parquet(domain_blocklist)
-    if done:
-        refuse_summary_drift(
-            out, "domain_blocklist", bl_id, "none",
-            lambda smry: "group" in smry, fallback=True,
-            message=lambda stale, cur: (
-                f"table {out_dir} has groups committed under domain "
-                f"blocklist(s) {stale} but this run uses {cur!r} — "
-                "resuming would mix URL-filter semantics across "
-                "groups; reprocess into a fresh table or resume with "
-                "the original blocklist"
-            ),
-        )
-    clf_id = "none"
-    clf_census = clf_meta = None
-    if classifier_model is not None:
-        from ..quality.classifier import (
-            classifier_model_identity,
-            load_quality_model,
-        )
-
-        clf_id = classifier_model_identity(classifier_model)
-        clf_census, clf_meta = load_quality_model(spark, classifier_model)
-    if done:
-        # and the classifier: scored and unscored groups (or groups
-        # scored by different models) must not share a table — same
-        # crash-timing-drift class again, plus a schema mismatch
-        refuse_summary_drift(
-            out, "classifier", clf_id, "none",
-            lambda smry: "group" in smry, fallback=True,
-            message=lambda stale, cur: (
-                f"table {out_dir} has groups committed under "
-                f"classifier model(s) {stale} but this run uses "
-                f"{cur!r} — resuming would mix score semantics (and "
-                "schemas) across groups; reprocess into a fresh table "
-                "or resume with the original model"
-            ),
+            out, identity, lambda smry: "group" in smry, fallback=True,
+            where=f"table {out_dir}",
         )
     staging: str | None = None
-    extra_summary: dict = {"profile": profile, "recrawl_keys": recrawl_id,
-                           "classifier": clf_id,
-                           "domain_blocklist": bl_id}
+    extra_summary = dict(identity)
     if isinstance(corpus, str):
         exts = (
             ("*.parquet",) if input_format == "parquet"
@@ -538,33 +565,10 @@ def run_quality_job(
         def group_files(g: int) -> list[str]:
             return [f"_staging/grp={g}"]
 
-    import re
-
     processed = 0
     for g in pending:
         t0 = time.time()
-        part = group_df(g)
-        if bl_df is not None:
-            part = drop_blocklisted_domains(part, bl_df)
-        if recrawl_fp_df is not None:
-            from .incr_dedup import drop_recrawls
-
-            part = drop_recrawls(part, recrawl_fp_df)
-        if recrawl_sig_df is not None:
-            from .incr_dedup import drop_recrawls_near
-
-            part = drop_recrawls_near(
-                part, recrawl_sig_df,
-                shingle_len=recrawl_geo["shingle_len"],
-                stride=recrawl_geo["stride"],
-                bands=recrawl_geo["bands"],
-            )
-        result = run_pipeline(part, partitions=partitions,
-                              profile=profile)
-        if clf_census is not None:
-            from ..quality.classifier import attach_quality_scores
-
-            result = attach_quality_scores(result, clf_census, clf_meta)
+        result = process(group_df(g))
         # Commit FIRST, then derive the audit stats from the committed
         # snapshot's own data files (VERDICT r4 #3). The old shape
         # cached the full pipeline output to stamp spark_partition_id()
@@ -583,7 +587,7 @@ def run_quality_job(
         # several files they share a part-NNNNN index and their stats
         # rows collapse onto one partition_id (counts still correct,
         # granularity degraded). A filename the pattern cannot parse
-        # maps to -1 and is WARNED about below, never silent.
+        # maps to -1 and is WARNED about (`_part_index`), never silent.
         snap = out.append(
             result,
             summary={"group": g, "run_id": run_id, **extra_summary},
@@ -593,56 +597,17 @@ def run_quality_job(
             out._read_dirs(spark, snap, [new_dir])
             .select(F.input_file_name().alias("_f"), "keep", "spans")
             .groupBy("_f")
-            .agg(
-                F.count("*").alias("docs_in"),
-                F.sum(F.col("keep").cast("long")).alias("docs_kept"),
-                F.sum(F.size("spans").cast("long")).alias("spans_scrubbed"),
-            )
+            .agg(*_audit_counts())
             .collect()
         )
-
-        def _pid(fname: str) -> int:
-            m = re.search(r"part-(\d+)", fname.rsplit("/", 1)[-1])
-            if not m:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "audit lineage: file name %r has no part-NNNNN "
-                    "index; recording partition_id=-1", fname,
-                )
-                return -1
-            return int(m.group(1))
-
         wall_ms = int((time.time() - t0) * 1000)
-        audit_rows = [
-            {
-                "run_id": run_id,
-                "snapshot_id": snap.snapshot_id,
-                "partition_id": _pid(r["_f"]),
-                "input_files": [f"group={g}", *group_files(g)],
-                "docs_in": int(r["docs_in"]),
-                "docs_kept": int(r["docs_kept"] or 0),
-                "docs_dropped": int(r["docs_in"] - (r["docs_kept"] or 0)),
-                "spans_scrubbed": int(r["spans_scrubbed"] or 0),
-                "wall_ms": wall_ms,
-            }
-            for r in stats
-        ]
-        from ..schema import AUDIT
-
-        adf = spark.createDataFrame(
-            [
-                (
-                    a["run_id"], a["snapshot_id"], a["partition_id"],
-                    a["input_files"], a["docs_in"], a["docs_kept"],
-                    a["docs_dropped"], a["spans_scrubbed"], a["wall_ms"],
-                    None,
-                )
-                for a in audit_rows
-            ],
-            schema=AUDIT,
-        ).withColumn("committed_at", F.current_timestamp())
-        audit.append(adf, summary={"group": g, "run_id": run_id})
+        lineage = [f"group={g}", *group_files(g)]
+        _append_audit(
+            spark, audit, run_id, snap.snapshot_id,
+            [(_part_index(f), lineage, n, kept, spans, wall_ms)
+             for f, n, kept, spans in stats],
+            summary={"group": g, "run_id": run_id},
+        )
         processed += 1
         if fail_after_groups is not None and processed >= fail_after_groups:
             raise RuntimeError(
@@ -690,17 +655,12 @@ def run_forget_job(
     snap, n_del = out.delete_keys(
         spark, "url", urls, summary={"forget_run": run_id},
     )
-    from ..schema import AUDIT
-
-    adf = spark.createDataFrame(
-        [(
-            run_id, snap.snapshot_id, -1,
-            [f"forget:{len(urls)}_urls"], n_del, 0, n_del, 0,
-            int((time.time() - t0) * 1000), None,
-        )],
-        schema=AUDIT,
-    ).withColumn("committed_at", F.current_timestamp())
-    audit.append(adf, summary={"forget_run": run_id})
+    _append_audit(
+        spark, audit, run_id, snap.snapshot_id,
+        [(-1, [f"forget:{len(urls)}_urls"], n_del, 0, 0,
+          int((time.time() - t0) * 1000))],
+        summary={"forget_run": run_id},
+    )
     # only reclaim history when the delete actually removed rows: a
     # no-op erasure (urls already gone, e.g. a replayed request) must
     # not wipe the table's retention/time travel as a side effect

@@ -8,9 +8,15 @@ for free — a killed run restarts from the last committed offset log and
 never reprocesses a finished input file. This complements (and at file
 granularity, subsumes) the icelite group ledger in jobs.py.
 
-Every micro-batch runs the SAME run_pipeline plan via foreachBatch and
-appends to an icelite table, so batch and streaming outputs are
-byte-identical for identical inputs.
+Every micro-batch runs the SAME per-group work as the batch job —
+``jobs.ingest_stage``: blocklist drop → exact and near recrawl drop →
+run_pipeline → classifier scores — via foreachBatch, and appends to an
+icelite table, so batch and streaming outputs are byte-identical for
+identical inputs and options. A restart is checked against the
+committed batches with the batch job's drift guard
+(``jobs.refuse_summary_drift``); this module keeps only what is
+streaming's own: the readers, the checkpoint namespacing and the replay
+ledger.
 """
 
 from __future__ import annotations
@@ -20,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..icelite.catalog import IceliteTable
 from ..schema import CORPUS
-from .pipeline import run_pipeline
+from .jobs import ingest_stage, refuse_summary_drift
 
 
 def run_streaming_job(
@@ -38,95 +44,29 @@ def run_streaming_job(
     domain_blocklist: str | None = None,
 ) -> IceliteTable:
     """Process all currently-available corpus files exactly once.
-    ``profile`` selects run_pipeline's keep chain; like the batch job,
-    it is recorded per batch summary so a restart under a different
-    profile is detectable (every batch of one checkpoint must run the
-    same chain). ``input_format="warc"`` watches a crawl landing dir
-    instead: uncompressed ``.warc`` files stream through the lineSep
-    record split + pure-Catalyst parse (one parse definition with the
-    batch readers) — live-crawl ingest with the same ledgered
-    exactly-once tail. ``input_format="warc_gz"`` watches a landing
-    dir of per-record-gzip ``.warc.gz`` files (Common Crawl's actual
+    ``input_format="warc"`` watches a crawl landing dir instead:
+    uncompressed ``.warc`` files stream through the lineSep record
+    split + pure-Catalyst parse (one parse definition with the batch
+    readers) — live-crawl ingest with the same ledgered exactly-once
+    tail. ``input_format="warc_gz"`` watches a landing dir of
+    per-record-gzip ``.warc.gz`` files (Common Crawl's actual
     distribution format, which the text datasource cannot split)
     through the binaryFile streaming source + the batch reader's
     member-stream record splitter — mixed dirs are fine, compression
     is detected per file by magic.
 
-    ``recrawl_keys`` (a `jobs/run_base_keys.py` output dir) drops docs
-    whose normalized text already exists in the base corpus from every
-    micro-batch BEFORE the pipeline — a stream-static anti-join on the
-    shared content fingerprint (the exact tier of incremental dedup).
-    ``recrawl_near`` adds the MinHash band tier per micro-batch: the
-    per-doc band-min aggregation that cannot run stream-static IS an
-    ordinary batch groupBy inside foreachBatch (r7 — the earlier
-    'near tier stays batch-only' note was an artifact of the
-    stream-static framing). The key-set identity (":near"-suffixed
-    when the tier is on, so toggling it is a recorded semantics
-    change) is recorded per batch and a restart under different keys
-    refuses loudly, like the profile guard.
-
-    ``classifier_model`` (a `jobs/run_classifier.py` model dir) scores
-    every batch's output rows in-line (``clf_score`` /
-    ``clf_predict_pos`` over the scrubbed text — an ordinary batch
-    join per micro-batch, like the recrawl drop); model identity is
-    recorded per batch, restart under a different model refuses.
-    ``domain_blocklist`` drops listed url domains from every batch
-    before the pipeline (broadcast anti-join; identity-guarded like
-    the other knobs)."""
+    ``profile``, ``partitions``, ``recrawl_keys``, ``recrawl_near``,
+    ``classifier_model`` and ``domain_blocklist`` configure the
+    per-batch work, shared with the batch job: see
+    `jobs.ingest_stage`. Their identity is recorded per batch summary,
+    and a restart of this checkpoint under a different setting of any
+    of them refuses loudly (every batch of one checkpoint must run the
+    same work)."""
     out = IceliteTable(out_dir)
-
-    bl_id = "none"
-    bl_df = None
-    if domain_blocklist is not None:
-        from .jobs import domain_blocklist_identity
-
-        bl_id = domain_blocklist_identity(domain_blocklist)
-        bl_df = spark.read.parquet(domain_blocklist)
-
-    clf_id = "none"
-    clf_census = clf_meta = None
-    if classifier_model is not None:
-        from ..quality.classifier import (
-            classifier_model_identity,
-            load_quality_model,
-        )
-
-        clf_id = classifier_model_identity(classifier_model)
-        clf_census, clf_meta = load_quality_model(spark, classifier_model)
-
-    recrawl_id = "none"
-    recrawl_fp_df = recrawl_sig_df = None
-    recrawl_geo: dict = {}
-    if recrawl_near and recrawl_keys is None:
-        raise ValueError("recrawl_near needs recrawl_keys")
-    if recrawl_keys is not None:
-        from pathlib import Path as _Path
-
-        from .incr_dedup import recrawl_keys_identity
-
-        # sig.parquet + geometry fold in when the near tier is on
-        # (review r7b)
-        recrawl_id = recrawl_keys_identity(recrawl_keys,
-                                           include_sig=recrawl_near)
-        # static side read once per run; foreachBatch re-joins it per
-        # micro-batch as an ordinary batch join
-        recrawl_fp_df = spark.read.parquet(
-            str(_Path(recrawl_keys) / "fp.parquet")
-        )
-        if recrawl_near:
-            import json as _json
-
-            km_path = _Path(recrawl_keys) / "keys_meta.json"
-            if not km_path.exists():
-                raise FileNotFoundError(
-                    f"{km_path} is missing — the near tier needs the "
-                    "recorded signature geometry"
-                )
-            recrawl_geo = _json.loads(km_path.read_text())
-            recrawl_id = f"{recrawl_id}:near"
-            recrawl_sig_df = spark.read.parquet(
-                str(_Path(recrawl_keys) / "sig.parquet")
-            )
+    identity, process = ingest_stage(
+        spark, profile, partitions, recrawl_keys, recrawl_near,
+        classifier_model, domain_blocklist,
+    )
 
     if input_format == "warc":
         from .warc import _DELIM, _parse_records
@@ -180,16 +120,12 @@ def run_streaming_job(
     # cross-stream collision the namespacing fix exists to prevent).
     ck_is_resume = (_P(checkpoint_dir) / "offsets").exists()
     if ck_is_resume:
-        # a restarted stream must run the same keep chain AND the same
-        # recrawl-key set its committed batches ran (the shared guard
-        # in jobs.py; review r6 collapsed four near-verbatim copies):
-        # check this checkpoint's batches — namespaced keys, plus
-        # legacy bare-int keys which only a resumed checkpoint may
-        # own. The ledger carry keeps both checks non-vacuous after
-        # expire_snapshots(); `fallback=bool(done)` covers batches
-        # predating each field (they ran default / no drop).
-        from .jobs import refuse_summary_drift
-
+        # a restarted stream must run the same per-batch work its
+        # committed batches ran: check this checkpoint's batches —
+        # namespaced keys, plus legacy bare-int keys which only a
+        # resumed checkpoint may own. The ledger carry keeps the check
+        # non-vacuous after expire_snapshots(); `fallback=bool(done)`
+        # covers batches predating each field.
         def _this_ck(smry: dict) -> bool:
             return "stream_batch" in smry and (
                 str(smry["stream_batch"]).startswith(f"{ck_ns}:")
@@ -197,48 +133,8 @@ def run_streaming_job(
             )
 
         refuse_summary_drift(
-            out, "profile", profile, "default", _this_ck,
-            fallback=bool(done),
-            message=lambda stale, cur: (
-                f"checkpoint {checkpoint_dir} has batches committed "
-                f"under profile(s) {stale} but this restart requests "
-                f"{cur!r} — keep semantics would differ across "
-                "batches; use the original profile or a fresh "
-                "checkpoint + table"
-            ),
-        )
-        refuse_summary_drift(
-            out, "recrawl_keys", recrawl_id, "none", _this_ck,
-            fallback=bool(done),
-            message=lambda stale, cur: (
-                f"checkpoint {checkpoint_dir} has batches committed "
-                f"under recrawl key set(s) {stale} but this restart "
-                f"uses {cur!r} — recrawl-drop semantics would "
-                "differ across batches; use the original keys or a "
-                "fresh checkpoint + table"
-            ),
-        )
-        refuse_summary_drift(
-            out, "classifier", clf_id, "none", _this_ck,
-            fallback=bool(done),
-            message=lambda stale, cur: (
-                f"checkpoint {checkpoint_dir} has batches committed "
-                f"under classifier model(s) {stale} but this restart "
-                f"uses {cur!r} — score semantics (and schemas) would "
-                "differ across batches; use the original model or a "
-                "fresh checkpoint + table"
-            ),
-        )
-        refuse_summary_drift(
-            out, "domain_blocklist", bl_id, "none", _this_ck,
-            fallback=bool(done),
-            message=lambda stale, cur: (
-                f"checkpoint {checkpoint_dir} has batches committed "
-                f"under domain blocklist(s) {stale} but this restart "
-                f"uses {cur!r} — URL-filter semantics would differ "
-                "across batches; use the original blocklist or a "
-                "fresh checkpoint + table"
-            ),
+            out, identity, _this_ck, fallback=bool(done),
+            where=f"checkpoint {checkpoint_dir} (table {out_dir})",
         )
 
     def process_batch(batch_df, batch_id: int) -> None:
@@ -250,34 +146,8 @@ def run_streaming_job(
         key = f"{ck_ns}:{int(batch_id)}"
         if key in done or (ck_is_resume and int(batch_id) in done):
             return
-        if bl_df is not None:
-            from .jobs import drop_blocklisted_domains
-
-            batch_df = drop_blocklisted_domains(batch_df, bl_df)
-        if recrawl_fp_df is not None:
-            from .incr_dedup import drop_recrawls
-
-            batch_df = drop_recrawls(batch_df, recrawl_fp_df)
-        if recrawl_sig_df is not None:
-            from .incr_dedup import drop_recrawls_near
-
-            batch_df = drop_recrawls_near(
-                batch_df, recrawl_sig_df,
-                shingle_len=recrawl_geo["shingle_len"],
-                stride=recrawl_geo["stride"],
-                bands=recrawl_geo["bands"],
-            )
-        result = run_pipeline(batch_df, partitions=partitions,
-                              profile=profile)
-        if clf_census is not None:
-            from ..quality.classifier import attach_quality_scores
-
-            result = attach_quality_scores(result, clf_census, clf_meta)
-        out.append(result, summary={"stream_batch": key,
-                                    "profile": profile,
-                                    "recrawl_keys": recrawl_id,
-                                    "classifier": clf_id,
-                                    "domain_blocklist": bl_id})
+        out.append(process(batch_df),
+                   summary={"stream_batch": key, **identity})
         done.add(key)
 
     q = (
@@ -295,7 +165,6 @@ def run_stream_dedup(
     corpus_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    groups: int = 16,  # kept for API compat; state is keyed per-url now
 ) -> dict:
     """Custom stateful streaming operator via applyInPandasWithState:
     exact URL-dedup ACROSS micro-batches.

@@ -129,6 +129,36 @@ def test_streaming_job_recrawl_drop_and_restart_guard(
         run_streaming_job(spark, ctx["snap_dir"], out_dir, ck)
 
 
+def test_jobs_refuse_near_tier_without_keys_meta(
+    spark, base_and_snapshot, tmp_path
+):
+    """The near tier needs the keys' recorded signature geometry: a
+    keys dir without keys_meta.json refuses up front in both jobs."""
+    import shutil
+
+    from pii_spark.spark.jobs import run_quality_job
+    from pii_spark.spark.streaming import run_streaming_job
+
+    ctx = base_and_snapshot
+    keys = tmp_path / "keys"
+    shutil.copytree(ctx["keys"], keys)
+    (keys / "keys_meta.json").unlink()
+    with pytest.raises(FileNotFoundError, match="keys_meta"):
+        run_quality_job(
+            spark, ctx["snap_dir"], str(tmp_path / "out"),
+            str(tmp_path / "audit"), groups=2,
+            recrawl_keys=str(keys), recrawl_near=True,
+        )
+    with pytest.raises(FileNotFoundError, match="keys_meta"):
+        run_streaming_job(
+            spark, ctx["snap_dir"], str(tmp_path / "sout"),
+            str(tmp_path / "ck"), recrawl_keys=str(keys),
+            recrawl_near=True,
+        )
+    assert not (tmp_path / "out").exists()
+    assert not (tmp_path / "sout").exists()
+
+
 def test_snapshot_dedup_cli(spark, base_and_snapshot, tmp_path):
     """jobs/run_snapshot_dedup.py — the full two-tier batch job over
     precomputed keys, driven as a real subprocess: recrawled docs

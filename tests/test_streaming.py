@@ -181,7 +181,7 @@ def test_stateful_stream_dedup_across_batches(spark, tmp_path):
         ("u1", None, b"", "dup in same file", "en"),
         ("u2", None, b"", "two", "en"),
     ])
-    m1 = run_stream_dedup(spark, str(corpus), out, ckpt, groups=4)
+    m1 = run_stream_dedup(spark, str(corpus), out, ckpt)
     got = {r.url: r.text for r in spark.read.parquet(out).collect()}
     assert set(got) == {"u1", "u2"}
     # deterministic winner (ADVICE r3): min(text) within the batch,
@@ -196,7 +196,7 @@ def test_stateful_stream_dedup_across_batches(spark, tmp_path):
         ("u2", None, b"", "late duplicate", "en"),
         ("u3", None, b"", "three", "en"),
     ])
-    m2 = run_stream_dedup(spark, str(corpus), out, ckpt, groups=4)
+    m2 = run_stream_dedup(spark, str(corpus), out, ckpt)
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 3  # u3 appended once; u1/u2 suppressed by state
     assert {r.url for r in rows} == {"u1", "u2", "u3"}
@@ -446,7 +446,7 @@ def test_stream_dedup_handles_null_text(spark, tmp_path):
     ).to_parquet(corpus / "a.parquet", index=False)
 
     run_stream_dedup(spark, str(corpus), str(tmp_path / "out"),
-                     str(tmp_path / "ckpt"), groups=4)
+                     str(tmp_path / "ckpt"))
     got = {r.url: r.text for r in
            spark.read.parquet(str(tmp_path / "out")).collect()}
     assert set(got) == {"u1", "u2", "u3"}
