@@ -1438,7 +1438,7 @@ def q_quality_heuristics(spark, sf_dir):
     family in one oracle-checked entry — the 50-query driver cap rules
     out a separate toxicity query)."""
     from pii_spark.config import QUALITY
-    from pii_spark.quality.toxicity import toxicity_exprs
+    from pii_spark.quality.toxicity import toxicity_sql
 
     nonspace = F.regexp_replace(F.col("text"), r"\s", "")
     n_ns = F.greatest(F.length(nonspace), F.lit(1))
@@ -1453,7 +1453,8 @@ def q_quality_heuristics(spark, sf_dir):
         & ((n_ns - n_alpha) / n_ns <= 0.4)
         & (rep <= 0.8)
     )
-    tox = toxicity_exprs("text")  # n_words: the same ASCII word count
+    # n_words: the same ASCII word count
+    tox = {k: F.expr(v) for k, v in toxicity_sql("text").items()}
     toxic = tox["tox_score"] > F.lit(QUALITY["max_tox_score"])
     # _spread (r9): the per-doc regex battery is the entire leg cost and
     # ran on the scan's single input split; the groupBy's partial agg
@@ -4063,8 +4064,8 @@ def oracle_sql() -> dict[str, str]:
             WHERE source NOT IN ('src0', 'src3')
             GROUP BY source
         """,
-        # one-call corpus quality report: per-doc twins of
-        # quality_exprs / toxicity_exprs / c4_exprs / gopher_line_exprs
+        # one-call corpus quality report: per-doc twins of the SQL
+        # builders quality_sql / toxicity_sql / c4_sql / gopher_line_sql
         # (same constants, interpolated from the single config source),
         # then the same rounded aggregates as quality_report()
         "quality_report": f"""

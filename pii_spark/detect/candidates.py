@@ -1470,10 +1470,35 @@ def _username_shape(key: tuple[str, bool]) -> tuple[float, int, int]:
 _username_shape = Memo(_username_shape, 300_000)
 
 
+def _in_handle(text: str, toks: list[_Tok], i: int,
+               memo: dict[int, bool]) -> bool:
+    """Token ``i`` belongs to an '@'-prefixed handle chain
+    ('Handle @sara.henry' — generation.py:769): walk left across './_'
+    connectors to the chain start and check for '@'. Every token the
+    walk passes has the chain's answer; ``memo`` (one per document)
+    keeps it, so a document's tokens cost O(n) together, not O(n²)."""
+    chain = []
+    while i not in memo:
+        chain.append(i)
+        c = text[toks[i].start - 1] if i else ""
+        if c == "@" or not (
+            c in "._" and i >= 2 and toks[i - 1].text in "._"
+            and toks[i - 1].start == toks[i - 2].end
+        ):
+            memo[i] = c == "@"
+            break
+        i -= 2
+    hit = memo[i]
+    for k in chain:
+        memo[k] = hit
+    return hit
+
+
 def token_candidates(text: str) -> list[Candidate]:
     toks = _toks(text)
     out: list[Candidate] = []
     n = len(toks)
+    handles: dict[int, bool] = {}
 
     def seq_low(i: int, k: int) -> tuple[str, ...]:
         return tuple(t.low for t in toks[i : i + k])
@@ -1481,23 +1506,6 @@ def token_candidates(text: str) -> list[Candidate]:
     def prev_char(i: int) -> str:
         s = toks[i].start
         return text[s - 1] if s > 0 else ""
-
-    def in_handle(i: int) -> bool:
-        """Token belongs to an '@'-prefixed handle chain
-        ('Handle @sara.henry' — generation.py:769): walk left across
-        './_' connectors to the chain start and check for '@'."""
-        j = i
-        while j > 0:
-            c = prev_char(j)
-            if c == "@":
-                return True
-            if c in "._" and j - 2 >= 0 and toks[j - 1].text in "._" and (
-                toks[j - 1].start == toks[j - 2].end
-            ):
-                j -= 2
-                continue
-            return False
-        return False
 
     def _seq2_hit(i: int, seqs: frozenset) -> bool:
         """2-token place hit; second token tolerates trailing noise glue."""
@@ -1526,11 +1534,11 @@ def token_candidates(text: str) -> list[Candidate]:
                 # the embedded country "Mexico"
                 conf = 0.91 if tk.text[0].isupper() else 0.55
                 out.append(Candidate(tk.start, toks[i + 1].end, "ADDRESS", conf))
-        # in_handle is only consulted by the place/username/bare-first
+        # _in_handle is only consulted by the place/username/bare-first
         # sections — skip the left-walk entirely when none can fire
         handle_tok = (
-            in_handle(i) if mask & (B_PLACE1 | B_UNAME | B_FIRSTS)
-            else False
+            _in_handle(text, toks, i, handles)
+            if mask & (B_PLACE1 | B_UNAME | B_FIRSTS) else False
         )
         if mask & B_PLACE1:
             for gaz1, conf1 in (

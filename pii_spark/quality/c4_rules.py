@@ -12,18 +12,19 @@ sentences and only retained lines that contained at least 5 words"):
   * drop any document containing "lorem ipsum" or a curly brace
     (code), and documents with fewer than 3 surviving lines
 
-Two pinned-equal implementations:
-  * ``c4_clean`` — pure Python: (kept_text, n_kept, n_dropped, keep);
-  * ``c4_sql`` — native Catalyst expressions building the SAME
-    cleaned text in-row (split → filter → array_join; a doc's line
-    count is small, so in-row is the right plan here — unlike the
-    n-gram census, see quality/gopher.py's measured lesson). They are
-    written as SQL text and parsed once per column (``c4_exprs`` wraps
-    them as Columns): spelled with the Column API, each call would
-    cost Py4J round trips (pii_spark/sqltext.py).
+One definition, ``c4_sql``: native Catalyst expressions building the
+cleaned text in-row (split → filter → array_join; a doc's line count
+is small, so in-row is the right plan here — unlike the n-gram census,
+see quality/gopher.py's measured lesson). They are written as SQL text
+and parsed once per column: spelled with the Column API, each call
+would cost Py4J round trips (pii_spark/sqltext.py). The pure-Python
+oracle ``c4_clean`` in tests/quality_twins.py recomputes
+(kept_text, n_kept, n_dropped, keep) from the constants below, and the
+parity tests pin the two equal.
 
-Like the Gopher extension, these rules are policy-exposed, not wired
-into the shipped keep chain (byte-stability of the committed pipeline).
+Like the Gopher extension, these rules join the keep chain only in
+run_pipeline's strict profile (``spark.pipeline.rule_chain``); the
+default chain stays byte-stable.
 
 Granularity note: C4 is defined over extracted web text WITH line
 structure. A corpus of single-line documents (the driver's synthetic
@@ -34,9 +35,7 @@ rules on such corpora, as the tests do for the generated texts.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-
-from ..sqltext import as_sql, exprs, lit
+from ..sqltext import lit
 
 _TERMINAL = (".", "!", "?", '"')
 _BOILERPLATE = ("javascript", "cookie policy", "terms of use",
@@ -47,47 +46,12 @@ _BOILERPLATE = ("javascript", "cookie policy", "terms of use",
 _MIN_LINE_WORDS = 5
 _MIN_LINES = 3
 
-# whitespace is the shared ASCII contract (quality/textnorm.py):
-# str.strip()/str.split() are Unicode-aware while F.trim trims only
-# spaces and Java \s is ASCII, so CRLF/tab/NBSP documents diverged
-# between locally spelled twins (reviews r4c/r4d)
-from .textnorm import ASCII_WS, ascii_words  # noqa: E402
-
-
-def _line_ok(line: str) -> bool:
-    s = line.strip(ASCII_WS)
-    if not s.endswith(_TERMINAL):
-        return False
-    if len(ascii_words(s)) < _MIN_LINE_WORDS:
-        return False
-    low = s.lower()
-    return not any(b in low for b in _BOILERPLATE)
-
-
-def c4_clean(text: str) -> dict:
-    """Pure-Python twin: line-filter the doc and judge the remainder."""
-    lines = (text or "").split("\n")
-    kept = [ln for ln in lines if _line_ok(ln)]
-    low = (text or "").lower()
-    doc_ok = (
-        "lorem ipsum" not in low
-        and "{" not in (text or "")
-        and len(kept) >= _MIN_LINES
-    )
-    return {
-        "cleaned_text": "\n".join(kept),
-        "n_kept_lines": len(kept),
-        "n_dropped_lines": len(lines) - len(kept),
-        "keep": doc_ok,
-    }
-
 
 def c4_sql(text: str = "text") -> dict[str, str]:
-    """The same cleaning as in-row Catalyst expressions, written as SQL
-    text. NULL text is pinned to '' first so the twins agree on null
-    rows (bare split would propagate NULL into every output). Lines
-    strip the ASCII \\s class, matching the pure twin
-    (trim removes only spaces)."""
+    """The cleaning as in-row Catalyst expressions, written as SQL
+    text. NULL text is pinned to '' first, so a null row is judged as
+    an empty doc (bare split would propagate NULL into every output).
+    Lines strip the ASCII \\s class (trim removes only spaces)."""
     t = f"coalesce({text}, '')"
     s = r"regexp_replace(_ln, r'^\s+|\s+$', '')"
     boiler = " OR ".join(
@@ -110,8 +74,3 @@ def c4_sql(text: str = "text") -> dict[str, str]:
             f" AND size({kept}) >= {_MIN_LINES}"
         ),
     }
-
-
-def c4_exprs(text: str | Column = "text") -> dict[str, Column]:
-    """``c4_sql`` as Columns; ``text`` is SQL text or a Column."""
-    return exprs(c4_sql(as_sql(text)))

@@ -107,7 +107,7 @@ def weak_labels(
     rule is deliberately NOT a conjunct: web-stripped text rarely
     keeps line structure, and on such corpora it labels everything
     negative — a degenerate one-class teacher.)"""
-    from .toxicity import toxicity_exprs
+    from .toxicity import toxicity_sql
 
     sw_re = (
         _stopword_re(stopwords) if stopwords is not None
@@ -121,7 +121,7 @@ def weak_labels(
     junk = F.contains(low, F.lit("lorem ipsum")) | F.contains(
         t, F.lit("{")
     )
-    tox = toxicity_exprs(f"coalesce({text_col}, '')")["tox_hits"]
+    tox = F.expr(toxicity_sql(f"coalesce({text_col}, '')")["tox_hits"])
     return df.withColumn(
         "label",
         (
@@ -135,9 +135,9 @@ def weak_label_pure(text: str | None, stopwords: list | None = None) -> int:
     equal by tests/test_property_quality_twins.py). Default Unicode
     ``\\b`` on purpose: MEASURED this session, Spark's Java regex
     treats a lexicon word abutting a non-ASCII letter ('éhate') as
-    UNbounded — identical to Python's default and to
-    toxicity.toxicity_stats — while ``re.ASCII`` (and DuckDB's RE2)
-    would count it. An earlier revision pinned re.ASCII here on the
+    UNbounded — identical to Python's default and to the toxicity
+    oracle in tests/quality_twins.py — while ``re.ASCII`` (and DuckDB's
+    RE2) would count it. An earlier revision pinned re.ASCII here on the
     opposite assumption (ADVICE r6 flagged the twin disagreement);
     the fixed-case pin in tests/test_classifier.py now keeps all
     three Python/Spark implementations honest. The RE2 divergence

@@ -13,23 +13,24 @@ module completes the published rule set:
     occurrence of a repeated n-gram, overlaps counted once —
     positional coverage, via gopher_dup_ngram_metrics)
 
-Every metric exists twice, pinned equal by tests/test_gopher.py:
+The product computes each metric once:
 
-  * ``gopher_stats`` — pure Python (the policy twin);
   * ``gopher_line_sql`` — the line/paragraph metrics as in-row
-    Catalyst expressions (arrays are small — a doc has few lines),
-    wrapped as Columns by ``gopher_line_exprs``;
-  * ``gopher_ngram_metrics`` — the top-n-gram metrics as ONE explode +
-    ONE aggregation + a per-(doc, n) window (the q_gopher_repetition
-    plan shape). This was MEASURED, not assumed: an in-row
-    aggregate/filter formulation of the n-gram census ran 0.6 s/doc
-    (interpreted nested higher-order functions, quadratic per doc) —
-    the relational shape does the same work in milliseconds and is the
-    plan that survives 100 TB.
+    Catalyst expressions (arrays are small — a doc has few lines);
+    ``gopher_line_flags_sql`` compares them with ``THRESHOLDS``;
+  * ``gopher_ngram_metrics`` / ``gopher_dup_ngram_metrics`` — the
+    n-gram metrics as ONE explode + ONE aggregation + a per-(doc, n)
+    window (the q_gopher_repetition plan shape). This was MEASURED,
+    not assumed: an in-row aggregate/filter formulation of the n-gram
+    census ran 0.6 s/doc (interpreted nested higher-order functions,
+    quadratic per doc) — the relational shape does the same work in
+    milliseconds and is the plan that survives 100 TB.
 
-Thresholds (Gopher's published ones as defaults) are exposed via
-``gopher_flags`` and enforced only by run_pipeline's strict profile;
-the default keep chain stays byte-stable.
+The pure-Python oracle ``gopher_stats`` in tests/quality_twins.py
+recomputes every metric, and tests/test_gopher.py pins the engine to
+it. Thresholds (Gopher's published ones) are enforced only by
+run_pipeline's strict profile; the default keep chain stays
+byte-stable.
 
 Every Spark expression here — the in-row metrics and the census's
 projections and aggregates — is written as SQL text and parsed once
@@ -41,12 +42,9 @@ A gram's n words are taken with one ``slice``, not n ``element_at``.
 
 from __future__ import annotations
 
-from collections import Counter
-
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..sqltext import as_sql, exprs, lit
+from ..sqltext import lit
 
 # Gopher table A1 thresholds
 THRESHOLDS = {
@@ -66,90 +64,13 @@ THRESHOLDS = {
 }
 
 
-def _words(text: str) -> list[str]:
-    import re
-
-    return [w for w in re.split(r"[^a-z0-9]+", (text or "").lower()) if w]
-
-
-from .textnorm import NON_WS_RE  # shared twin whitespace contract
-
-
-def gopher_stats(text: str) -> dict[str, float]:
-    """Pure-Python twin of the native metrics. Blank detection uses
-    the ASCII class Java \\s matches (quality/textnorm.py) — a local
-    hand-spelled class here once omitted \\n and broke parity on
-    newline-only paragraphs (review r4d)."""
-    text = text or ""
-    lines = [ln for ln in text.split("\n") if NON_WS_RE.search(ln)]
-    paras = [p for p in text.split("\n\n") if NON_WS_RE.search(p)]
-
-    def dup_frac(items):
-        if not items:
-            return 0.0
-        return 1.0 - len(set(items)) / len(items)
-
-    def dup_char_frac(items):
-        total = sum(len(i) for i in items)
-        if total == 0:
-            return 0.0
-        c = Counter(items)
-        dup_chars = sum(len(i) * n for i, n in c.items() if n > 1)
-        return dup_chars / total
-
-    words = _words(text)
-    n_word_chars = sum(len(w) for w in words) or 1
-
-    def top_ngram_char_frac(n):
-        if len(words) < n:
-            return 0.0
-        grams = Counter(
-            tuple(words[i:i + n]) for i in range(len(words) - n + 1)
-        )
-        gram, cnt = max(grams.items(), key=lambda kv: (kv[1], kv[0]))
-        if cnt < 2:
-            # the rule measures REPETITION; a gram seen once covers a
-            # large char share of any short document without repeating
-            # anything — contributes 0, like the dup-line rules
-            return 0.0
-        return cnt * sum(len(w) for w in gram) / n_word_chars
-
-    def dup_ngram_char_frac(n):
-        """Fraction of word-characters covered by ANY occurrence of a
-        repeated n-gram (positional coverage, overlaps counted once —
-        the table-A1 'duplicate n-gram' family for n=5..10)."""
-        if len(words) < n:
-            return 0.0
-        grams = [tuple(words[i:i + n])
-                 for i in range(len(words) - n + 1)]
-        c = Counter(grams)
-        covered: set[int] = set()
-        for i, g in enumerate(grams):
-            if c[g] > 1:
-                covered.update(range(i, i + n))
-        return sum(len(words[j]) for j in covered) / n_word_chars
-
-    out = {
-        "dup_line_frac": dup_frac(lines),
-        "dup_para_frac": dup_frac(paras),
-        "dup_line_char_frac": dup_char_frac(lines),
-        "dup_para_char_frac": dup_char_frac(paras),
-        "top_2gram_char_frac": top_ngram_char_frac(2),
-        "top_3gram_char_frac": top_ngram_char_frac(3),
-        "top_4gram_char_frac": top_ngram_char_frac(4),
-    }
-    for n in range(5, 11):
-        out[f"dup_{n}gram_char_frac"] = dup_ngram_char_frac(n)
-    return out
-
-
 def gopher_line_sql(text: str = "text") -> dict[str, str]:
     """Line/paragraph repetition metrics as in-row Catalyst
     expressions, written as SQL text. The per-element occurrence count
     in dup_char_frac is quadratic in the LINE count of one document —
     lines per doc are dozens, not millions, so this stays cheap and
-    shuffle-free. NULL text pins to ''; blank detection is rlike(\\S)
-    on both twins (trim strips only spaces)."""
+    shuffle-free. NULL text pins to ''; a line is blank unless it
+    matches rlike(\\S) (trim strips only spaces)."""
     t = f"coalesce({text}, '')"
     lines = rf"filter(split({t}, {lit(chr(10))}), _e -> _e rlike r'\S')"
     paras = rf"filter(split({t}, {lit(chr(10) * 2)}), _e -> _e rlike r'\S')"
@@ -177,9 +98,11 @@ def gopher_line_sql(text: str = "text") -> dict[str, str]:
     }
 
 
-def gopher_line_exprs(text: str | Column = "text") -> dict[str, Column]:
-    """``gopher_line_sql`` as Columns; ``text`` is SQL text or a Column."""
-    return exprs(gopher_line_sql(as_sql(text)))
+def gopher_line_flags_sql(text: str = "text") -> dict[str, str]:
+    """Per-rule violation flags of the line/paragraph metrics, as SQL
+    text: true where a metric exceeds its ``THRESHOLDS`` entry."""
+    return {k: f"{v} > {lit(THRESHOLDS[k])}"
+            for k, v in gopher_line_sql(text).items()}
 
 
 def _word_base(df, id_col: str, text_col: str):
@@ -258,7 +181,7 @@ def gopher_dup_ngram_metrics(
     """(id, text) → (id, dup_5gram_char_frac … dup_10gram_char_frac):
     the character fraction covered by ANY occurrence of a repeated
     n-gram, overlaps counted once (positional coverage, matching the
-    pure twin exactly). Relational plan, same family as
+    pure oracle exactly). Relational plan, same family as
     gopher_ngram_metrics: one explode of all gram sizes with their
     start positions, one duplicate census, covered word positions via
     an interval explode + distinct, then one weighted sum against the
@@ -288,9 +211,3 @@ def gopher_dup_ngram_metrics(
         .agg(F.expr("first(frac)"))
     )
     return _attach_fracs(df, id_col, frac, ns, "dup_{n}gram_char_frac")
-
-
-def gopher_flags(stats: dict, thresholds: dict | None = None) -> dict:
-    """Metric dict → per-rule boolean flags (True = rule violated)."""
-    t = thresholds or THRESHOLDS
-    return {k: stats[k] > v for k, v in t.items()}

@@ -9,18 +9,18 @@ in via config. The demonstration lexicon here is deliberately small and
 mild; at 100 TB the same two regexp_extract_all passes per row scale
 linearly with zero shuffle.
 
-Three coordinated implementations, pinned equal by tests:
-  * ``toxicity_stats`` — pure Python (the keep/drop twin used by
-    tests/test_pipeline_e2e.py);
-  * ``toxicity_sql`` — native Spark columns written as SQL text (the
-    pipeline path; ``toxicity_exprs`` wraps them as Columns);
+One definition in the product, ``toxicity_sql``: native Spark columns
+written as SQL text (the pipeline path, read through ``quality_sql``).
+Two independent spellings check it:
+  * the pure-Python oracle ``toxicity_stats`` in tests/quality_twins.py
+    (the keep/drop twin of tests/test_pipeline_e2e.py);
   * the DuckDB SQL fragment in ``__spark_entry__.oracle_sql()``
     (quality_heuristics oracle) — same ASCII lexicon and
     ``\\b``-bounded regex.
 
-Boundary-semantics caveat: Python re and Java regex (the two PIPELINE
-implementations — the ones that must agree for keep/drop) both use
-Unicode word boundaries and match identically. DuckDB's RE2 uses
+Boundary-semantics caveat: Java regex (the engine) and Python re (the
+test oracle, and ``classifier.weak_label_pure``) both use Unicode word
+boundaries and match identically. DuckDB's RE2 uses
 ASCII-only ``\\b``, so a lexicon word directly abutting a non-ASCII
 letter (e.g. ``hateé``) counts in the oracle but not in the engine;
 RE2 has no lookarounds to emulate the Unicode rule. The driver
@@ -35,11 +35,7 @@ drop_reason='toxicity'.
 
 from __future__ import annotations
 
-import re
-
-from pyspark.sql import Column
-
-from ..sqltext import as_sql, exprs, lit
+from ..sqltext import lit
 
 # ASCII-only so lower() agrees across Python/Java/RE2; word-boundary
 # matched, so substrings ("skill", "trashy") never count
@@ -50,30 +46,13 @@ TOX_W2 = ("hate", "kill", "stupid", "idiot", "moron", "scum",
 TOX_RE_W1 = r"\b(" + "|".join(TOX_W1) + r")\b"
 TOX_RE_W2 = r"\b(" + "|".join(TOX_W2) + r")\b"
 
-_P1 = re.compile(TOX_RE_W1)
-_P2 = re.compile(TOX_RE_W2)
-
-
-from .textnorm import ascii_words  # shared twin whitespace contract
-
-
-def toxicity_stats(text: str) -> dict[str, float]:
-    """Pure-Python twin of ``toxicity_exprs`` (pinned equal, including
-    on non-ASCII whitespace — see quality/textnorm.py)."""
-    low = (text or "").lower()
-    h1 = len(_P1.findall(low))
-    h2 = len(_P2.findall(low))
-    n_words = len(ascii_words(text)) or 1
-    hits = h1 + 2 * h2
-    return {"tox_hits": float(hits), "tox_score": hits / n_words}
-
 
 def toxicity_sql(
     text: str = "text", n_words: str | None = None,
 ) -> dict[str, str]:
     """The toxicity columns as SQL text: two regexp_extract_all passes
     (one per weight class) over the lowered text. ``n_words`` defaults
-    to the ASCII-whitespace word count the pure twin divides by."""
+    to the ASCII-whitespace word count (``quality_sql``'s n_words)."""
     n_words = n_words or (
         rf"size(filter(split({text}, r'\s+'), _w -> _w != ''))"
     )
@@ -82,12 +61,3 @@ def toxicity_sql(
             f" + 2 * size(regexp_extract_all({low}, {lit(TOX_RE_W2)}, 0))"
             " AS INT)")
     return {"tox_hits": hits, "tox_score": f"{hits} / greatest({n_words}, 1)"}
-
-
-def toxicity_exprs(
-    text: str | Column = "text", n_words: str | Column | None = None,
-) -> dict[str, Column]:
-    """``toxicity_sql`` as Columns; SQL text or Column arguments."""
-    return exprs(toxicity_sql(
-        as_sql(text), None if n_words is None else as_sql(n_words)
-    ))

@@ -72,7 +72,8 @@ def kmeans_fit(
     if init not in ("farthest", "hash"):
         raise ValueError(f"unknown init {init!r}: farthest|hash")
     if driver_bound:
-        n = df.count()
+        # one pass: the max width can only tighten the cells bound
+        n, dim = df.selectExpr("count(*)", "max(size(embedding))").head()
         if n <= driver_bound:
             # r9 (ADVICE r8 high): the row-count bound alone ignored
             # the vector width — n rows of a wide embedding can be a
@@ -80,12 +81,11 @@ def kmeans_fit(
             # the pure dispatch on total cells too; past it, the
             # distributed loop (which never collects the vectors) runs
             # instead. Either engine returns identical results
-            # (numpy-twin pinned).
-            head = df.select("embedding").head()
-            dim = len(head[0]) if head and head[0] is not None else 1
-            # the (n, k) distance matrix is the other pure-path
-            # allocation — bound it too (256M cells ≈ 2 GB float64)
-            if (n * max(dim, 1) <= _PURE_CELLS_BOUND
+            # (numpy-twin pinned). With no non-null vector (dim NULL or
+            # size(NULL) = -1) the width counts as 1. The (n, k)
+            # distance matrix is the other pure-path allocation —
+            # bound it too (256M cells ≈ 2 GB float64)
+            if (n * max(dim or 1, 1) <= _PURE_CELLS_BOUND
                     and n * max(k, 1) <= 256_000_000):
                 return _fit_pure(df, k, iters, init)
     ex = _explode(df).cache()

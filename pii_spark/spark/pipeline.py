@@ -23,7 +23,10 @@ built again for every job group and streaming micro-batch, and
 under PySpark's default DataFrame debugging each Column-API call costs
 Py4J round trips (pii_spark/sqltext.py). Spelled call by call, one
 build took ~1.5k round trips on the default profile and ~9k on the
-strict one; tests/test_pipeline_build.py holds the budget.
+strict one; tests/test_pipeline_build.py holds the budget. Each rule
+family has only its SQL builder — no Column twin — and ``rule_chain``
+composes the in-row rules of the keep chain once, for both this plan
+and ``spark.quality_report``.
 
 Unicode note: the native ratio expressions use \\p{L}/\\p{Nd} so they
 agree with Python's str.isalpha()/isdigit() on the non-English rows
@@ -40,7 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import QUALITY
-from ..sqltext import exprs, lit
+from ..sqltext import lit
 
 _SALT = 0x5CA1AB1E
 
@@ -64,8 +67,8 @@ def salted_repartition(df: DataFrame, partitions: int | None = None) -> DataFram
 
 def quality_sql(text: str = "text") -> dict[str, str]:
     """C4/Gopher heuristic + toxicity statistics as pure Catalyst
-    expressions written as SQL text (same semantics as
-    quality.heuristics.quality_stats and quality.toxicity.toxicity_stats)."""
+    expressions written as SQL text (pure-Python oracles:
+    tests/quality_twins.py ``quality_stats`` / ``toxicity_stats``)."""
     from ..quality.toxicity import toxicity_sql
 
     nonspace = rf"regexp_replace({text}, r'\s', '')"
@@ -89,10 +92,16 @@ def quality_sql(text: str = "text") -> dict[str, str]:
 
 
 def quality_exprs() -> dict[str, Column]:
-    return exprs(quality_sql())
+    return {k: F.expr(v) for k, v in quality_sql().items()}
 
 
 def heuristics_pass_sql(q: dict | None = None) -> str:
+    """The heuristics rule over the ``quality_sql`` columns (thresholds
+    in config.QUALITY): word count and mean word length within their
+    bands, symbol ratio and repetition ratio 1 - distinct/total at most
+    their maxima (Gopher), digit ratio at most and alpha ratio at least
+    theirs (C4-like). The min_words bound generalizes the reference's
+    only quality filter, its min-length skip in evaluation."""
     q = q or QUALITY
     return (
         f"n_words >= {lit(q['min_words'])}"
@@ -106,8 +115,33 @@ def heuristics_pass_sql(q: dict | None = None) -> str:
     )
 
 
-def heuristics_pass_expr(q: dict | None = None) -> Column:
-    return F.expr(heuristics_pass_sql(q))
+def rule_chain(profile: str) -> tuple[dict[str, str], list[tuple[str, str]]]:
+    """The keep chain's in-row rules for ``profile``: ``(gates,
+    checks)``. ``gates`` are the columns to add from ``text`` first
+    (name → SQL); ``checks`` are (SQL predicate, drop_reason) in
+    precedence order, reading the gates and the ``quality_sql``
+    columns. run_pipeline places them between its langid/perplexity
+    checks and the n-gram census; quality_report rates them."""
+    q = QUALITY
+    checks = [
+        (heuristics_pass_sql(q), "heuristics"),
+        (f"tox_score <= {lit(q['max_tox_score'])}", "toxicity"),
+    ]
+    if profile != "strict":
+        return {}, checks
+    from ..quality.c4_rules import c4_sql
+    from ..quality.gopher import gopher_line_flags_sql
+
+    gates = {
+        "_c4_ok": c4_sql()["keep"],
+        "_gl_flag": " OR ".join(gopher_line_flags_sql().values()),
+    }
+    return gates, checks + [("_c4_ok", "c4"), ("NOT _gl_flag", "gopher_lines")]
+
+
+def all_of(checks: list[tuple[str, str]]) -> str:
+    """The conjunction of ``checks``' predicates, as SQL text."""
+    return " AND ".join(f"({c})" for c, _ in checks)
 
 
 # ------------------------------------------------------------ Arrow UDFs
@@ -240,28 +274,20 @@ def run_pipeline(
     q = QUALITY
     cols = ["url", "text"] + (["doc_id"] if with_doc_id else [])
     df = corpus.select(*cols)
+    gates, rules = rule_chain(profile)
     checks = [
         (f"e.lang_pred IN ({', '.join(map(lit, q['langs_kept']))})", "langid"),
         (f"e.ppl <= {lit(q['max_ppl'])}", "perplexity"),
-        (heuristics_pass_sql(q), "heuristics"),
-        (f"tox_score <= {lit(q['max_tox_score'])}", "toxicity"),
+        *rules,
     ]
     if profile == "strict":
-        from ..quality.c4_rules import c4_sql
         from ..quality.gopher import (
             THRESHOLDS,
             gopher_dup_ngram_metrics,
-            gopher_line_sql,
             gopher_ngram_metrics,
         )
 
-        gl = gopher_line_sql()
-        line_flag = " OR ".join(
-            f"{gl[k]} > {lit(THRESHOLDS[k])}" for k in gl
-        )
-        df = df.selectExpr(
-            "*", f"{c4_sql()['keep']} AS _c4_ok", f"{line_flag} AS _gl_flag"
-        )
+        df = df.selectExpr("*", *(f"{v} AS {k}" for k, v in gates.items()))
         # n-gram census: relational by necessity (explode → count →
         # window), computed from 2-column scans of the source and
         # joined back; flags reduced per url before the join so row
@@ -300,18 +326,14 @@ def run_pipeline(
             .selectExpr("url", "true AS _ng_flag")
         )
         df = df.join(flagged, "url", "left")
-        checks += [
-            ("_c4_ok", "c4"),
-            ("NOT _gl_flag", "gopher_lines"),
-            ("NOT coalesce(_ng_flag, false)", "gopher_ngrams"),
-        ]
+        checks.append(("NOT coalesce(_ng_flag, false)", "gopher_ngrams"))
     df = salted_repartition(df, partitions)
     df = df.selectExpr(
         "*", *(f"{v} AS {k}" for k, v in quality_sql().items())
     )
     df = df.withColumn("e", enrich_udf()("text"))
 
-    keep = " AND ".join(f"({c})" for c, _ in checks)
+    keep = all_of(checks)
     drop_reason = " ".join(
         ["CASE"] + [f"WHEN NOT ({c}) THEN {lit(r)}" for c, r in checks]
         + ["ELSE CAST(NULL AS STRING) END"]

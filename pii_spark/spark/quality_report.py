@@ -15,12 +15,20 @@ of how many metrics are computed. The n-gram repetition metrics
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..config import QUALITY
-from ..quality.c4_rules import c4_exprs
-from ..quality.gopher import THRESHOLDS, gopher_line_exprs
-from .pipeline import heuristics_pass_expr, quality_exprs
+from ..quality.c4_rules import c4_sql
+from ..quality.gopher import (
+    THRESHOLDS,
+    gopher_dup_ngram_metrics,
+    gopher_line_flags_sql,
+    gopher_ngram_metrics,
+)
+from ..sqltext import lit
+from .pipeline import all_of, quality_sql, rule_chain
+
+
+def _rate(cond: str, name: str) -> str:
+    return f"round(avg(CAST(({cond}) AS DOUBLE)), 4) AS {name}"
 
 
 def quality_report(
@@ -33,71 +41,46 @@ def quality_report(
     text pins to '' up front: bare size(split(NULL)) artifacts (-1
     word counts) would otherwise average into the report while other
     aggregates skip the same rows — inconsistent denominators inside
-    one report (review r4d)."""
-    base = df.select(
-        F.coalesce(F.col(text_col), F.lit("")).alias("text"),
-        F.col(id_col),
-    )
-    base = base.withColumns(quality_exprs())
-    g = gopher_line_exprs()
-    c4 = c4_exprs()
-    tox_flag = F.col("tox_score") > F.lit(QUALITY["max_tox_score"])
-    heur_ok = heuristics_pass_expr()
+    one report (review r4d).
 
-    def rate(cond):
-        return F.round(F.avg(cond.cast("double")), 4)
-
-    aggs = [
-        F.count("*").cast("long").alias("n_docs"),
-        F.round(F.avg(F.length("text")), 2).alias("avg_chars"),
-        F.round(F.expr("percentile(length(text), 0.5)"), 1)
-        .alias("p50_chars"),
-        F.round(F.expr("percentile(length(text), 0.9)"), 1)
-        .alias("p90_chars"),
-        F.round(F.avg("n_words"), 2).alias("avg_words"),
-        rate(heur_ok).alias("heuristics_pass_rate"),
-        rate(tox_flag).alias("toxicity_flag_rate"),
-        # the composed rule-family keep decision (heuristics AND not
-        # toxic) — matches run_pipeline's keep on any corpus where
-        # langid+perplexity pass, the consistency gate
-        # tests/test_strict_profile.py pins (VERDICT r4 #4)
-        rate(heur_ok & ~tox_flag).alias("rule_keep_rate"),
-        F.round(F.avg("rep_ratio"), 4).alias("avg_rep_ratio"),
-        rate(c4["keep"]).alias("c4_keep_rate"),
-        F.round(F.avg(c4["n_kept_lines"]), 2).alias("avg_c4_kept_lines"),
-    ]
-    line_flag = None
-    for k in ("dup_line_frac", "dup_para_frac", "dup_line_char_frac",
-              "dup_para_char_frac"):
-        c = g[k] > THRESHOLDS[k]
-        line_flag = c if line_flag is None else (line_flag | c)
-        aggs.append(rate(c).alias(f"{k}_flag_rate"))
-    # the strict profile's composed in-row keep (run_pipeline
-    # --profile strict minus the relational n-gram census, which has
-    # its own plan): default keep ∧ C4 ∧ no Gopher line flag — the
-    # driver-checkable strict-rule signal (VERDICT r5 #6)
-    aggs.append(rate(line_flag).alias("gopher_line_flag_rate"))
-    aggs.append(
-        rate(heur_ok & ~tox_flag & c4["keep"] & ~line_flag)
-        .alias("strict_rule_keep_rate")
+    The rule-family rates come from run_pipeline's own keep-chain
+    predicates (``rule_chain``): ``rule_keep_rate`` is the default
+    profile's in-row keep, ``strict_rule_keep_rate`` the strict one's
+    minus the relational n-gram census, which has its own plan. On a
+    corpus where langid and perplexity pass, ``rule_keep_rate`` equals
+    run_pipeline's keep rate (tests/test_strict_profile.py)."""
+    _, rules = rule_chain("default")
+    gates, strict_rules = rule_chain("strict")
+    pred = {r: c for c, r in strict_rules}
+    base = df.selectExpr(f"coalesce({text_col}, '') AS text", id_col)
+    base = base.selectExpr("*", *(
+        f"{v} AS {k}" for k, v in {**quality_sql(), **gates}.items()
+    ))
+    report = base.selectExpr(
+        "CAST(count(*) AS BIGINT) AS n_docs",
+        "round(avg(length(text)), 2) AS avg_chars",
+        "round(percentile(length(text), 0.5), 1) AS p50_chars",
+        "round(percentile(length(text), 0.9), 1) AS p90_chars",
+        "round(avg(n_words), 2) AS avg_words",
+        _rate(pred["heuristics"], "heuristics_pass_rate"),
+        _rate(f"NOT ({pred['toxicity']})", "toxicity_flag_rate"),
+        _rate(all_of(rules), "rule_keep_rate"),
+        "round(avg(rep_ratio), 4) AS avg_rep_ratio",
+        _rate(pred["c4"], "c4_keep_rate"),
+        f"round(avg({c4_sql()['n_kept_lines']}), 2) AS avg_c4_kept_lines",
+        *(_rate(f, f"{k}_flag_rate")
+          for k, f in gopher_line_flags_sql().items()),
+        _rate(f"NOT ({pred['gopher_lines']})", "gopher_line_flag_rate"),
+        _rate(all_of(strict_rules), "strict_rule_keep_rate"),
     )
-    report = base.agg(*aggs)
 
     if include_ngrams:
-        from ..quality.gopher import (
-            gopher_dup_ngram_metrics,
-            gopher_ngram_metrics,
-        )
-
         top = gopher_ngram_metrics(df, id_col=id_col, text_col=text_col)
         dup = gopher_dup_ngram_metrics(df, id_col=id_col,
                                        text_col=text_col)
-        ng = top.join(dup, id_col).agg(
-            *[
-                rate(F.col(k) > THRESHOLDS[k]).alias(f"{k}_flag_rate")
-                for k in THRESHOLDS
-                if "gram" in k
-            ]
-        )
-        report = report.crossJoin(F.broadcast(ng))  # both single-row
+        ng = top.join(dup, id_col).selectExpr(*(
+            _rate(f"{k} > {lit(v)}", f"{k}_flag_rate")
+            for k, v in THRESHOLDS.items() if "gram" in k
+        ))
+        report = report.crossJoin(ng.hint("broadcast"))  # both single-row
     return report

@@ -1,9 +1,8 @@
 """C4 line rules: native == pure byte-for-byte (cleaned text included),
 and each rule fires on its target."""
 
-from pyspark.sql import functions as F
-
-from pii_spark.quality.c4_rules import c4_clean, c4_exprs
+from pii_spark.quality.c4_rules import c4_sql
+from tests.quality_twins import c4_clean
 
 CASES = [
     "",
@@ -37,8 +36,8 @@ def test_native_matches_pure(spark):
         for i in range(30)
     ]
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    rows = df.select(
-        "text", *[v.alias(k) for k, v in c4_exprs(F.col("text")).items()]
+    rows = df.selectExpr(
+        "text", *[f"{v} AS {k}" for k, v in c4_sql("text").items()]
     ).collect()
     for r in rows:
         pure = c4_clean(r.text)

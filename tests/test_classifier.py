@@ -139,7 +139,8 @@ def test_word_boundary_semantics_pinned_nonascii(spark):
     oracle-side caveat (toxicity.py docstring), irrelevant on the
     ASCII driver testdata."""
     from pii_spark.quality.classifier import weak_label_pure
-    from pii_spark.quality.toxicity import toxicity_exprs, toxicity_stats
+    from pii_spark.quality.toxicity import toxicity_sql
+    from tests.quality_twins import toxicity_stats
 
     # _CLEAN supplies the >= 3 stopword hits; the suffix plants a
     # lexicon/stopword token abutting a non-ASCII letter
@@ -162,10 +163,9 @@ def test_word_boundary_semantics_pinned_nonascii(spark):
     # toxicity twin: same cases, exprs == pure on hits
     hdf = df.select(
         "doc_id",
-        toxicity_exprs(
-            F.coalesce(F.col("text"), F.lit("")),
-            F.lit(10),
-        )["tox_hits"].alias("h"),
+        F.expr(
+            toxicity_sql("coalesce(text, '')", "10")["tox_hits"]
+        ).alias("h"),
     )
     spark_hits = {r.doc_id: r.h for r in hdf.collect()}
     pure_hits = {

@@ -3,16 +3,14 @@ Python twin on handcrafted and generated texts; flags fire on the
 pathologies they target."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from pii_spark.quality.gopher import (
     THRESHOLDS,
     gopher_dup_ngram_metrics,
-    gopher_flags,
-    gopher_line_exprs,
+    gopher_line_sql,
     gopher_ngram_metrics,
-    gopher_stats,
 )
+from tests.quality_twins import gopher_flags, gopher_stats
 
 CASES = [
     "",
@@ -44,9 +42,9 @@ def test_native_matches_pure_on_handcrafted_and_generated(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
-    line_rows = df.select(
+    line_rows = df.selectExpr(
         "doc_id", "text",
-        *[v.alias(k) for k, v in gopher_line_exprs(F.col("text")).items()],
+        *[f"{v} AS {k}" for k, v in gopher_line_sql("text").items()],
     ).collect()
     ngram_rows = {
         r.doc_id: r for r in gopher_ngram_metrics(df).collect()

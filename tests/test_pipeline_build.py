@@ -1,5 +1,5 @@
-"""What building run_pipeline's plan costs in Py4J round trips, and the
-types it promises.
+"""What building run_pipeline's and quality_report's plans costs in Py4J
+round trips, and the types run_pipeline promises.
 
 Under PySpark classic's default ``spark.python.sql.dataFrameDebugging
 .enabled=true`` every Column-API call records its call site through
@@ -17,6 +17,7 @@ import pytest
 from py4j.java_gateway import GatewayClient
 
 from pii_spark.spark.pipeline import quality_exprs, run_pipeline
+from pii_spark.spark.quality_report import quality_report
 
 _QUALITY = ("quality:struct<n_words:int,mean_word_len:double,"
             "symbol_ratio:double,rep_ratio:double,tox_score:double>")
@@ -67,6 +68,19 @@ def test_build_round_trip_budget(spark, corpus, monkeypatch, profile,
     n = _round_trips(monkeypatch,
                      lambda: run_pipeline(src, profile=profile))
     assert n <= budget, f"{profile}: {n} Py4J round trips"
+
+
+@pytest.mark.parametrize("include_ngrams,budget", [(False, 150),
+                                                   (True, 1000)])
+def test_report_round_trip_budget(spark, corpus, monkeypatch,
+                                  include_ngrams, budget):
+    """quality_report's plan is SQL text too: spelled with Column
+    operators it took about 950 round trips (about 2,030 with the
+    n-gram census); as SQL text it takes 45 (422)."""
+    quality_report(corpus, include_ngrams=include_ngrams)
+    n = _round_trips(monkeypatch, lambda: quality_report(
+        corpus, include_ngrams=include_ngrams))
+    assert n <= budget, f"include_ngrams={include_ngrams}: {n} round trips"
 
 
 def test_output_types_pinned(spark, corpus):

@@ -4,12 +4,12 @@ byte-identical output across partitionings, label-F1 gate."""
 import pytest
 
 from pii_spark.config import QUALITY
-from pii_spark.quality.heuristics import passes_heuristics
 from pii_spark.quality.langid import classify
 from pii_spark.quality.perplexity import perplexity
 from pii_spark.spark.gen_job import generate_full
 from pii_spark.spark.metrics import f1_report
 from pii_spark.spark.pipeline import run_pipeline
+from tests.quality_twins import passes_heuristics
 
 N = 400
 
@@ -30,7 +30,7 @@ def test_every_url_has_output(output_rows, full):
 
 
 def test_keep_matches_pure_functions(full, output_rows):
-    from pii_spark.quality.toxicity import toxicity_stats
+    from tests.quality_twins import toxicity_stats
 
     for row in full.collect():
         out = output_rows[row.doc_id]

@@ -8,7 +8,6 @@ BATCH of texts evaluated in one Spark job (per-example jobs would be
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 _ALPHABET = st.sampled_from(
     list("abcXYZ012 .!?\"{}\t\r\n\x0b\f'()-") + ["\xa0", "é"]
@@ -27,11 +26,12 @@ _SETTINGS = dict(
 @given(texts=_TEXTS)
 @settings(**_SETTINGS)
 def test_c4_twins_agree_on_arbitrary_text(spark, texts):
-    from pii_spark.quality.c4_rules import c4_clean, c4_exprs
+    from pii_spark.quality.c4_rules import c4_sql
+    from tests.quality_twins import c4_clean
 
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    rows = df.select(
-        "text", *[v.alias(k) for k, v in c4_exprs(F.col("text")).items()]
+    rows = df.selectExpr(
+        "text", *[f"{v} AS {k}" for k, v in c4_sql("text").items()]
     ).collect()
     for r in rows:
         pure = c4_clean(r.text)
@@ -43,12 +43,13 @@ def test_c4_twins_agree_on_arbitrary_text(spark, texts):
 @given(texts=_TEXTS)
 @settings(**_SETTINGS)
 def test_gopher_line_twins_agree_on_arbitrary_text(spark, texts):
-    from pii_spark.quality.gopher import gopher_line_exprs, gopher_stats
+    from pii_spark.quality.gopher import gopher_line_sql
+    from tests.quality_twins import gopher_stats
 
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    rows = df.select(
+    rows = df.selectExpr(
         "text",
-        *[v.alias(k) for k, v in gopher_line_exprs(F.col("text")).items()],
+        *[f"{v} AS {k}" for k, v in gopher_line_sql("text").items()],
     ).collect()
     for r in rows:
         pure = gopher_stats(r.text)
@@ -78,8 +79,8 @@ def test_gopher_ngram_relational_matches_pure(spark, texts):
     from pii_spark.quality.gopher import (
         gopher_dup_ngram_metrics,
         gopher_ngram_metrics,
-        gopher_stats,
     )
+    from tests.quality_twins import gopher_stats
 
     # salt in a guaranteed repeated 5-gram so the dup_{5..10} paths
     # exercise (arbitrary draws rarely repeat a long gram)
@@ -104,16 +105,14 @@ def test_gopher_ngram_relational_matches_pure(spark, texts):
 @given(texts=_TEXTS)
 @settings(**_SETTINGS)
 def test_toxicity_twins_agree_on_arbitrary_text(spark, texts):
-    from pii_spark.quality.toxicity import toxicity_stats
     from pii_spark.spark.pipeline import quality_exprs
+    from tests.quality_twins import quality_stats, toxicity_stats
 
     # salt in lexicon words so the hit paths actually exercise —
     # including non-ASCII-ADJACENT forms ('éhate'), where Java and
     # Python default \b agree (Unicode: no hit) but re.ASCII/RE2
     # would differ (the ADVICE r6 twin-drift class)
     texts = [t + " hate kill trash skill éhate hateé" for t in texts[:10]] + texts
-    from pii_spark.quality.heuristics import quality_stats
-
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
     rows = df.withColumns(quality_exprs()).collect()
     for r in rows:

@@ -2,10 +2,10 @@
 native-Catalyst == pure-Python parity pin."""
 
 from pii_spark.config import QUALITY
-from pii_spark.quality.heuristics import passes_heuristics, quality_stats
 from pii_spark.quality.langid import classify
 from pii_spark.quality.perplexity import perplexity
 from pii_spark.textgrammar.generator import build_example
+from tests.quality_twins import passes_heuristics, quality_stats
 
 
 def test_langid_clean_texts():
@@ -59,7 +59,7 @@ def test_native_exprs_match_pure(spark):
 def test_toxicity_native_matches_pure(spark):
     """Native toxicity columns == pure-Python twin, on generated docs
     AND handcrafted edge cases (word boundaries, case, substrings)."""
-    from pii_spark.quality.toxicity import toxicity_stats
+    from tests.quality_twins import toxicity_stats
     from pii_spark.spark.pipeline import quality_exprs
 
     texts = [build_example(42, i)["text"] for i in range(60)] + [

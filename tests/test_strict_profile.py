@@ -9,10 +9,10 @@ scrub bytes."""
 import pytest
 from pyspark.sql import functions as F
 
-from pii_spark.quality.c4_rules import c4_clean
-from pii_spark.quality.gopher import THRESHOLDS, gopher_flags, gopher_stats
+from pii_spark.quality.gopher import THRESHOLDS
 from pii_spark.spark.gen_job import generate_corpus
 from pii_spark.spark.pipeline import run_pipeline
+from tests.quality_twins import c4_clean, gopher_flags, gopher_stats
 
 # handcrafted multi-line docs, one per strict drop_reason; flags are
 # re-derived from the PURE twins inside the tests so the fixtures
