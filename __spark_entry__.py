@@ -828,14 +828,39 @@ def _simhash_pairs64(sigs: DataFrame) -> DataFrame:
 
 
 def q_ann_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-10 vs vec_id=0 — r9: now the zero-shuffle
-    in-row plan (one scan + top-k sort, no join/explode/agg exchange),
-    which r6-r8 proved value-identical to the relational formulation
-    via the hash-checked union in q_ann_cosine_both. The relational
-    proof plan lives on as _q_ann_cosine_relational inside that union;
-    this entry is the one the headline bench times, so it gets the
-    at-scale shape."""
-    return q_ann_cosine_topk_fast(spark, sf_dir)
+    """Brute-force cosine top-10 vs vec_id=0 — the zero-shuffle 100 TB
+    plan: the query vector is collected once (1 row) and inlined as an
+    array literal, and the dot product / norm run INSIDE the row via
+    zip_with + aggregate. One scan + a top-k sort; q_ann_cosine_both
+    hash-checks it against the relational, oracle-shaped plan."""
+    import math
+
+    e = _emb(spark, sf_dir)
+    # one-row collect of the probe vector (intentional: it becomes a
+    # literal in the plan; this is the documented eager step)
+    head = e.filter(F.col("vec_id") == 0).select("embedding").head()
+    if head is None:  # no probe vector → empty top-k, same as the twin
+        return e.select(
+            "vec_id", F.lit(0.0).alias("cos")
+        ).limit(0)
+    qvec = [float(x) for x in head[0]]
+    nb = math.sqrt(sum(x * x for x in qvec))
+    ql = F.array(*[F.lit(x) for x in qvec])
+    v = F.transform("embedding", lambda x: x.cast("double"))
+    dot = F.aggregate(
+        F.zip_with(v, ql, lambda a, b: a * b),
+        F.lit(0.0), lambda acc, x: acc + x,
+    )
+    na = F.sqrt(F.aggregate(
+        F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
+    ))
+    cos = F.round(dot / (na * F.lit(nb)), 4)
+    return (
+        e.filter(F.col("vec_id") != 0)
+        .select("vec_id", cos.alias("cos"))
+        .orderBy(F.col("cos").desc(), "vec_id")
+        .limit(10)
+    )
 
 
 def _q_ann_cosine_relational(spark, sf_dir):
@@ -873,44 +898,6 @@ def _q_ann_cosine_relational(spark, sf_dir):
     )
 
 
-def q_ann_cosine_topk_fast(spark, sf_dir):
-    """Zero-shuffle brute-force cosine top-k — the 100 TB plan: the
-    query vector is collected once (1 row) and inlined as an array
-    literal, and the dot product / norm run INSIDE the row via
-    zip_with + aggregate (higher-order functions, JVM-evaluated). No
-    explode, no join, no groupBy — one scan + a top-k sort. The
-    relational q_ann_cosine_topk keeps the oracle-shaped plan; this
-    shares its DuckDB oracle (same values, 4dp-rounded)."""
-    import math
-
-    e = _emb(spark, sf_dir)
-    # one-row collect of the probe vector (intentional: it becomes a
-    # literal in the plan; this is the documented eager step)
-    head = e.filter(F.col("vec_id") == 0).select("embedding").head()
-    if head is None:  # no probe vector → empty top-k, same as the twin
-        return e.select(
-            "vec_id", F.lit(0.0).alias("cos")
-        ).limit(0)
-    qvec = [float(x) for x in head[0]]
-    nb = math.sqrt(sum(x * x for x in qvec))
-    ql = F.array(*[F.lit(x) for x in qvec])
-    v = F.transform("embedding", lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(v, ql, lambda a, b: a * b),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    na = F.sqrt(F.aggregate(
-        F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-    ))
-    cos = F.round(dot / (na * F.lit(nb)), 4)
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .select("vec_id", cos.alias("cos"))
-        .orderBy(F.col("cos").desc(), "vec_id")
-        .limit(10)
-    )
-
-
 def q_ann_cosine_both(spark, sf_dir):
     """Both brute-force cosine top-k variants in ONE registry slot
     (r6 consolidation, frees a slot for incremental_dedup): the
@@ -923,7 +910,7 @@ def q_ann_cosine_both(spark, sf_dir):
     rel = _q_ann_cosine_relational(spark, sf_dir).select(
         F.lit("relational").alias("variant"), "vec_id", "cos"
     )
-    fast = q_ann_cosine_topk_fast(spark, sf_dir).select(
+    fast = q_ann_cosine_topk(spark, sf_dir).select(
         F.lit("inrow").alias("variant"), "vec_id", "cos"
     )
     return rel.unionByName(fast)

@@ -64,36 +64,30 @@ def main() -> None:
                          "recomputing from a full corpus")
     args = ap.parse_args()
 
-    from pii_spark.spark.incr_dedup import base_keys
+    from pii_spark.spark.incr_dedup import (
+        append_key_delta,
+        base_keys,
+        keys_geometry,
+    )
     from pii_spark.spark.session import get_spark
 
+    if args.append:
+        # argparse defaults equal the recorded defaults for a
+        # default-built dir; append must use the dir's geometry.
+        # Checked before Spark starts: a refusal needs no session.
+        try:
+            keys_geometry(
+                args.output, "--append needs an existing keys dir; run "
+                "without --append first",
+                shingle_len=args.shingle_len, stride=args.stride,
+                bands=args.bands,
+            )
+        except (FileNotFoundError, ValueError) as e:
+            raise SystemExit(str(e)) from None
     spark = get_spark(app="pii_base_keys")
     try:
         corpus = spark.read.parquet(args.input)
         if args.append:
-            import json
-
-            from pii_spark.spark.incr_dedup import append_key_delta
-
-            km_path = Path(args.output) / "keys_meta.json"
-            if not km_path.exists():
-                raise SystemExit(
-                    f"--append needs an existing keys dir; {km_path} "
-                    "is missing — run without --append first"
-                )
-            km = json.loads(km_path.read_text())
-            for name, g in (("shingle_len", args.shingle_len),
-                            ("stride", args.stride),
-                            ("bands", args.bands)):
-                # argparse defaults equal the recorded defaults for a
-                # default-built dir; an explicit mismatch is the same
-                # silent-match-nothing hazard run_snapshot_dedup refuses
-                if g != km[name]:
-                    raise SystemExit(
-                        f"--{name.replace('_', '-')}={g} does not "
-                        f"match the keys' recorded {name}={km[name]} "
-                        "— append must use the dir's geometry"
-                    )
             n_fp, n_sig = append_key_delta(
                 spark, corpus, args.output, id_col=args.id_col
             )

@@ -67,43 +67,27 @@ def main() -> None:
                          "key recompute)")
     args = ap.parse_args()
 
-    import json
+    from pii_spark.spark.incr_dedup import keys_geometry
 
-    km_path = Path(args.keys) / "keys_meta.json"
     given = {"shingle_len": args.shingle_len, "stride": args.stride,
              "bands": args.bands}
-    if km_path.exists():
-        km = json.loads(km_path.read_text())
-        for name, g in given.items():
-            if g is not None and g != km[name]:
-                raise SystemExit(
-                    f"--{name.replace('_', '-')}={g} does not match "
-                    f"the keys' recorded {name}={km[name]} — the "
-                    "snapshot's band min-hashes would be computed "
-                    "over different shingles and silently match "
-                    "nothing; drop the flag or recompute the keys"
-                )
-        if not km.get("hashed", True):
-            raise SystemExit(
-                f"{km_path} records hashed=false (md5 oracle path) — "
-                "this job computes xxhash64 signatures, which would "
-                "silently match nothing against string keys; rebuild "
-                "the keys with jobs/run_base_keys.py"
+    if (Path(args.keys) / "keys_meta.json").exists() or (
+            None in given.values()):
+        try:
+            geo = keys_geometry(
+                args.keys, "the signature parameters were not all given "
+                "explicitly; re-run jobs/run_base_keys.py (it records "
+                "them) or pass --shingle-len --stride --bands",
+                **given,
             )
-        params = {n: km[n] for n in given}
-        text_col = args.text_col or km.get("text_col", "text")
-    elif all(g is not None for g in given.values()):
+        except (FileNotFoundError, ValueError) as e:
+            raise SystemExit(str(e)) from None
+    else:
         # escape hatch for hand-built key dirs: every parameter must
         # be spelled explicitly — no silent defaults against unknown
         # signature geometry
-        params = given
-        text_col = args.text_col or "text"
-    else:
-        raise SystemExit(
-            f"{km_path} is missing and the signature parameters were "
-            "not all given explicitly; re-run jobs/run_base_keys.py "
-            "(it records them) or pass --shingle-len --stride --bands"
-        )
+        geo = {**given, "text_col": "text"}
+    text_col = args.text_col or geo["text_col"]
 
     from pyspark.sql import functions as F
 
@@ -134,9 +118,9 @@ def main() -> None:
             snap,
             id_col=idc,
             text_col=text_col,
-            shingle_len=params["shingle_len"],
-            stride=params["stride"],
-            bands=params["bands"],
+            shingle_len=geo["shingle_len"],
+            stride=geo["stride"],
+            bands=geo["bands"],
             hashed=True,
             base_fp=spark.read.parquet(str(keys / "fp.parquet")),
             base_sig=spark.read.parquet(str(keys / "sig.parquet")),

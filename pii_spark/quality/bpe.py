@@ -58,6 +58,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..identity import model_identity
+
 _WS = r"[ \t\n\x0b\f\r]+"
 _EOW = "▁"  # end-of-word marker (▁), single char, never in ASCII text
 
@@ -343,32 +345,14 @@ def load_bpe_model(spark, model_dir: str):
 
 
 def bpe_model_identity(model_dir: str) -> str:
-    """Cheap content identity of a tokenizer model dir
-    (merges.parquet data-file (name, size) listing + meta.json bytes
-    — metadata only, no scan; the `classifier_model_identity`
-    pattern, classifier.py). Recorded by the pack/export job so a
-    rewrite under a DIFFERENT tokenizer refuses loudly instead of
-    silently mixing token universes across shards."""
-    import hashlib
-    import json
-    from pathlib import Path
-
-    md = Path(model_dir)
-    files = sorted(
-        f"{p.name}:{p.stat().st_size}"
-        for p in (md / "merges.parquet").rglob("*.parquet")
-        if not p.name.startswith((".", "_"))
+    """`pii_spark.identity` of a tokenizer model dir. Recorded by the
+    pack/export job so a rewrite under a DIFFERENT tokenizer refuses
+    loudly instead of silently mixing token universes across shards."""
+    return model_identity(
+        model_dir, "merges.parquet",
+        f"no trained tokenizer under {model_dir} — run "
+        "jobs/run_tokenizer.py first",
     )
-    meta_path = md / "meta.json"
-    if not files or not meta_path.exists():
-        raise FileNotFoundError(
-            f"no trained tokenizer under {model_dir} — run "
-            "jobs/run_tokenizer.py first"
-        )
-    payload = "\n".join(files) + "\n" + json.dumps(
-        json.loads(meta_path.read_text()), sort_keys=True
-    )
-    return hashlib.md5(payload.encode()).hexdigest()[:16]
 
 
 def bpe_tokenize(

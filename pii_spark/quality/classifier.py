@@ -45,6 +45,8 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..identity import model_identity
+
 # token class shared by both engines (mirrors dedup_ngram_jaccard):
 # lowercase alnum runs — the oracle twin uses the same split
 _TOKEN_SPLIT = "[^a-z0-9]+"
@@ -253,35 +255,15 @@ def score_quality_nb_int(
 
 
 def classifier_model_identity(model_dir: str) -> str:
-    """Cheap content identity of a `jobs/run_classifier.py` model dir
-    (census.parquet data-file (name, size) listing + meta.json bytes
-    — metadata only, no scan). Recorded by the quality jobs per
-    commit so a resume/restart under a DIFFERENT model refuses loudly
-    instead of mixing score semantics across groups/batches — the
-    same drift class as profile and recrawl_keys."""
-    import hashlib
-    import json
-    from pathlib import Path
-
-    md = Path(model_dir)
-    census = md / "census.parquet"
-    files = sorted(
-        f"{p.name}:{p.stat().st_size}"
-        for p in census.rglob("*.parquet")
-        if not p.name.startswith((".", "_"))
+    """`pii_spark.identity` of a `jobs/run_classifier.py` model dir.
+    Recorded by the quality jobs per commit so a resume/restart under
+    a DIFFERENT model refuses loudly instead of mixing score semantics
+    across groups/batches."""
+    return model_identity(
+        model_dir, "census.parquet",
+        f"no trained model under {model_dir} — run "
+        "jobs/run_classifier.py train first",
     )
-    meta_path = md / "meta.json"
-    if not files or not meta_path.exists():
-        raise FileNotFoundError(
-            f"no trained model under {model_dir} — run "
-            "jobs/run_classifier.py train first"
-        )
-    # meta participates: dim/hashed changes alter scores even when the
-    # census files happen to match
-    payload = "\n".join(files) + "\n" + json.dumps(
-        json.loads(meta_path.read_text()), sort_keys=True
-    )
-    return hashlib.md5(payload.encode()).hexdigest()[:16]
 
 
 def load_quality_model(spark, model_dir: str):

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..identity import digest, listing
+
 # the repo-wide lowercase-alnum token class (classifier/dedup family)
 _TOKEN_SPLIT = "[^a-z0-9]+"
 
@@ -67,25 +69,15 @@ def doc_frequency_census(
 
 
 def stopwords_identity(stopwords_dir: str) -> str:
-    """Content identity of a derived-stopwords parquet dir (sorted
-    (name, size) listing — metadata only; the blocklist/recrawl-keys
-    pattern). `jobs/run_classifier.py` folds it into the model's
-    meta.json, so the classifier identity — and therefore every
-    downstream resume guard — changes whenever the teaching lists do."""
-    import hashlib
-    from pathlib import Path
-
-    files = sorted(
-        f"{p.name}:{p.stat().st_size}"
-        for p in Path(stopwords_dir).rglob("*.parquet")
-        if not p.name.startswith((".", "_"))
-    )
-    if not files:
-        raise FileNotFoundError(
-            f"no stopword parquet files under {stopwords_dir} — derive "
-            "one with jobs/run_maintenance.py --derive-stopwords"
-        )
-    return hashlib.md5("\n".join(files).encode()).hexdigest()[:16]
+    """`pii_spark.identity` of a derived-stopwords dir.
+    `jobs/run_classifier.py` folds it into the model's meta.json, so
+    the classifier identity — and every downstream resume guard —
+    changes whenever the teaching lists do."""
+    return digest(listing(
+        stopwords_dir,
+        f"no stopword parquet files under {stopwords_dir} — derive "
+        "one with jobs/run_maintenance.py --derive-stopwords",
+    ))
 
 
 def load_stopword_lists(spark, stopwords_dir: str) -> dict:

@@ -29,27 +29,13 @@ _TOKTAG = T.ArrayType(
 def _toktags_fn(
     batches: Iterator[tuple[pd.Series, pd.Series]],
 ) -> Iterator[pd.Series]:
-    from ..labeling import spans_to_token_labels
-    from ..tokenizer import tokenize_with_offsets
+    from .metrics import gold_token_rows
 
-    for texts, spans_col in batches:
-        out = []
-        for text, spans in zip(texts, spans_col):
-            tokens, offsets, _ = tokenize_with_offsets(text or "")
-            norm = [
-                {"start": int(s["start"]), "end": int(s["end"]),
-                 "label": s["label"]}
-                for s in (spans if spans is not None else [])
-            ]
-            tags, label_ids = spans_to_token_labels(offsets, norm)
-            out.append(
-                [
-                    {"token": tok, "tag": tag}
-                    for tok, tag, lid in zip(tokens, tags, label_ids)
-                    if lid != -100  # skip specials (write_conll.py:24-26)
-                ]
-            )
-        yield pd.Series(out)
+    return gold_token_rows(batches, False, lambda toks, tags, ids: [
+        {"token": tok, "tag": tag}
+        for tok, tag, lid in zip(toks, tags, ids)
+        if lid != -100  # skip specials (write_conll.py:24-26)
+    ])
 
 
 def conll_lines(df: DataFrame, spans_col: str = "spans") -> DataFrame:

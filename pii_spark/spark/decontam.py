@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..identity import digest, listing
+
 
 def doc_fingerprints(df: DataFrame, hash_fn=F.xxhash64) -> DataFrame:
     """(doc_id, text) → distinct (doc_id, fp) winnowing fingerprints
@@ -72,25 +74,13 @@ def decontaminate(
 
 
 def benchmark_identity(bench_dir: str) -> str:
-    """Content identity of a benchmark parquet dir (sorted (name,
-    size) listing — metadata only), recorded by the pack/export job
-    like every other model input (the route_table_identity /
-    classifier_model_identity drift-guard class): exporting shards
-    decontaminated against a DIFFERENT benchmark set must refuse
-    loudly, not silently change training membership."""
-    import hashlib
-    from pathlib import Path
-
-    files = sorted(
-        f"{p.name}:{p.stat().st_size}"
-        for p in Path(bench_dir).rglob("*.parquet")
-        if not p.name.startswith((".", "_"))
-    )
-    if not files:
-        raise FileNotFoundError(
-            f"no benchmark parquet files under {bench_dir}"
-        )
-    return hashlib.md5("\n".join(files).encode()).hexdigest()[:16]
+    """`pii_spark.identity` of a benchmark dir, recorded by the
+    pack/export job: exporting shards decontaminated against a
+    DIFFERENT benchmark set must refuse loudly, not silently change
+    training membership."""
+    return digest(listing(
+        bench_dir, f"no benchmark parquet files under {bench_dir}"
+    ))
 
 
 def select_canonical(

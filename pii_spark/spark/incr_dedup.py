@@ -66,7 +66,12 @@ footers), and the same operating point the corpus-internal
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 from pyspark.sql import Column, DataFrame, functions as F
+
+from ..identity import digest, listing
 
 # ASCII whitespace class, spelled explicitly so the Spark exprs, the
 # DuckDB oracle, and any pure twin agree on CRLF/tab/\x0b text (the
@@ -153,49 +158,29 @@ def _band_minhashes(sh: DataFrame, id_col: str, bands: int,
 
 
 def recrawl_keys_identity(keys_dir: str, include_sig: bool = False) -> str:
-    """Cheap content identity of a `jobs/run_base_keys.py` output dir:
-    md5 over the sorted (name, size) listing of fp.parquet's data
-    files — file metadata only, no scan. Recorded by the quality jobs
-    per commit so a resume under DIFFERENT base keys (a new corpus
-    version) refuses loudly instead of silently mixing recrawl
-    semantics across groups/batches.
+    """`pii_spark.identity` of a `jobs/run_base_keys.py` dir's
+    fp.parquet, recorded by the quality jobs per commit so a resume
+    under DIFFERENT base keys (a new corpus version) refuses loudly.
 
-    ``include_sig`` (review r7b): with the near tier enabled,
-    sig.parquet and the recorded geometry are load-bearing too — a
-    sig-only change (possible via ``run_base_keys --append`` on an
-    arbitrary delta) must be visible to the drift guard — so their
-    listing/bytes fold into the hash. Callers pass it iff
-    ``recrawl_near`` is on; exact-tier-only identities stay
-    byte-compatible with every ledger written before r8."""
-    import hashlib
-    from pathlib import Path
-
-    def _listing(sub: str) -> list[str]:
-        return sorted(
-            f"{p.name}:{p.stat().st_size}"
-            for p in (Path(keys_dir) / sub).rglob("*.parquet")
-            if not p.name.startswith((".", "_"))
-        )
-
-    files = _listing("fp.parquet")
-    if not files:
-        raise FileNotFoundError(
-            f"no fp.parquet data files under {keys_dir} — run "
-            "jobs/run_base_keys.py first"
-        )
-    payload = "\n".join(files)
+    ``include_sig`` (review r7b; callers pass it iff ``recrawl_near``
+    is on): the near tier also depends on sig.parquet and the recorded
+    geometry, so the sig listing and the raw keys_meta.json text (""
+    if absent) fold into the hash."""
+    kd = Path(keys_dir)
+    payload = listing(
+        kd / "fp.parquet",
+        f"no fp.parquet data files under {keys_dir} — run "
+        "jobs/run_base_keys.py first",
+    )
     if include_sig:
-        sig_files = _listing("sig.parquet")
-        if not sig_files:
-            raise FileNotFoundError(
-                f"no sig.parquet data files under {keys_dir} — the "
-                "near tier needs the signature relation; run "
-                "jobs/run_base_keys.py first"
-            )
-        meta_path = Path(keys_dir) / "keys_meta.json"
-        meta = meta_path.read_text() if meta_path.exists() else ""
-        payload += "\nsig:" + "\n".join(sig_files) + "\nmeta:" + meta
-    return hashlib.md5(payload.encode()).hexdigest()[:16]
+        meta = kd / "keys_meta.json"
+        payload += "\nsig:" + listing(
+            kd / "sig.parquet",
+            f"no sig.parquet data files under {keys_dir} — the near "
+            "tier needs the signature relation; run "
+            "jobs/run_base_keys.py first",
+        ) + "\nmeta:" + (meta.read_text() if meta.exists() else "")
+    return digest(payload)
 
 
 def drop_recrawls(df: DataFrame, fp_df: DataFrame,
@@ -244,8 +229,8 @@ def drop_recrawls_near(
     whose band signature collides with ``sig_df`` (the precomputed
     base (band, mh) relation). Compose AFTER :func:`drop_recrawls` so
     exact recrawls never pay the shingle explode; geometry must match
-    the keys' recorded parameters (the callers enforce it via
-    keys_meta.json, like run_snapshot_dedup)."""
+    the keys' recorded parameters (the callers take it from
+    :func:`keys_geometry`)."""
     near_ids = (
         _band_minhashes(
             _shingles(df, id_col, text_col, shingle_len, stride),
@@ -321,6 +306,38 @@ def key_delta(
     )
 
 
+def keys_geometry(keys_dir: str, missing: str, *, shingle_len=None,
+                  stride=None, bands=None) -> dict:
+    """The geometry recorded in a `jobs/run_base_keys.py` dir's
+    keys_meta.json, ``{shingle_len, stride, bands, text_col}``: every
+    consumer of the key tables must hash shingles with it. Raises
+    FileNotFoundError when the file is missing (``missing`` says what
+    to do), and ValueError when the keys record ``hashed=false`` or a
+    given (not None) geometry value differs from the recorded one."""
+    path = Path(keys_dir) / "keys_meta.json"
+    if not path.exists():
+        raise FileNotFoundError(f"{path} is missing — {missing}")
+    km = json.loads(path.read_text())
+    if not km.get("hashed", True):
+        raise ValueError(
+            f"{path} records hashed=false (md5 oracle path) — key "
+            "maintenance and matching use xxhash64 signatures, which "
+            "silently match nothing against string keys; rebuild the "
+            "keys with jobs/run_base_keys.py"
+        )
+    given = {"shingle_len": shingle_len, "stride": stride, "bands": bands}
+    for name, g in given.items():
+        if g is not None and g != km[name]:
+            raise ValueError(
+                f"--{name.replace('_', '-')}={g} does not match the "
+                f"keys' recorded {name}={km[name]} — signatures over "
+                "different shingles silently match nothing; drop the "
+                "flag or recompute the keys"
+            )
+    return {n: km[n] for n in given} | {
+        "text_col": km.get("text_col", "text")}
+
+
 def append_key_delta(
     spark,
     novel: DataFrame,
@@ -330,14 +347,13 @@ def append_key_delta(
 ) -> tuple[int, int]:
     """Fold a novel delta's keys into a `jobs/run_base_keys.py` output
     dir IN PLACE: compute :func:`key_delta` with the dir's RECORDED
-    signature geometry (keys_meta.json — required; mixing geometries
-    would band-match nothing), write the delta to a temp dir, then
-    move its data files into fp.parquet/ / sig.parquet/. Appending
-    files — never rewriting the accumulated tables — keeps the update
-    at delta cost; global key distinctness is preserved because the
-    delta is anti-joined against the stored keys (tier-1's left join
-    relies on multiplicity 1 per fingerprint). Part-file names carry
-    job UUIDs, so moves cannot collide.
+    signature geometry (:func:`keys_geometry`), write the delta to a
+    temp dir, then move its data files into fp.parquet/ / sig.parquet/.
+    Appending files — never rewriting the accumulated tables — keeps
+    the update at delta cost; global key distinctness is preserved
+    because the delta is anti-joined against the stored keys (tier-1's
+    left join relies on multiplicity 1 per fingerprint). Part-file
+    names carry job UUIDs, so moves cannot collide.
 
     The dir's content identity (``recrawl_keys_identity`` — the file
     listing) changes with the append, so quality-job resume guards
@@ -346,35 +362,18 @@ def append_key_delta(
     Returns (fingerprints added, band signatures added). Local/posix
     paths only (the offline sandbox); a cluster deployment would do
     the same two-phase move through the Hadoop FileSystem API."""
-    import json
     import shutil
     import uuid as _uuid
-    from pathlib import Path
 
     kd = Path(keys_dir)
-    meta_path = kd / "keys_meta.json"
-    if not meta_path.exists():
-        raise FileNotFoundError(
-            f"{meta_path} is missing — append needs the recorded "
-            "signature geometry; run jobs/run_base_keys.py first"
-        )
-    km = json.loads(meta_path.read_text())
-    if not km.get("hashed", True):
-        # md5-path key dirs are check-scale artifacts; appending
-        # xxhash64 deltas into them would poison the tables with keys
-        # no consumer can match (review r7)
-        raise ValueError(
-            f"{keys_dir} records hashed=false (md5 oracle path) — "
-            "production key maintenance requires the xxhash64 path; "
-            "rebuild with jobs/run_base_keys.py"
-        )
+    geo = keys_geometry(
+        keys_dir, "append needs the recorded signature geometry; run "
+        "jobs/run_base_keys.py first",
+    )
     base_fp = spark.read.parquet(str(kd / "fp.parquet"))
     base_sig = spark.read.parquet(str(kd / "sig.parquet"))
     d_fp, d_sig = key_delta(
-        novel, base_fp, base_sig,
-        id_col=id_col, text_col=km.get("text_col", "text"),
-        shingle_len=km["shingle_len"], stride=km["stride"],
-        bands=km["bands"], hashed=True,
+        novel, base_fp, base_sig, id_col=id_col, hashed=True, **geo
     )
     added = []
     for name, df in (("fp", d_fp), ("sig", d_sig)):

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..icelite.catalog import IceliteTable
+from ..identity import digest, listing, visible_files
 from .pipeline import run_pipeline
 
 
@@ -173,23 +174,13 @@ def registered_domain(dom):
 
 
 def domain_blocklist_identity(blocklist_dir: str) -> str:
-    """Content identity of a blocklist parquet dir (sorted (name, size)
-    listing — metadata only), recorded per commit like the recrawl-key
-    identity so a resume under a different blocklist refuses loudly."""
-    import hashlib
-    from pathlib import Path
-
-    files = sorted(
-        f"{p.name}:{p.stat().st_size}"
-        for p in Path(blocklist_dir).rglob("*.parquet")
-        if not p.name.startswith((".", "_"))
-    )
-    if not files:
-        raise FileNotFoundError(
-            f"no blocklist parquet files under {blocklist_dir} — "
-            "derive one with jobs/run_maintenance.py --derive-blocklist"
-        )
-    return hashlib.md5("\n".join(files).encode()).hexdigest()[:16]
+    """`pii_spark.identity` of a blocklist dir, recorded per commit so
+    a resume under a different blocklist refuses loudly."""
+    return digest(listing(
+        blocklist_dir,
+        f"no blocklist parquet files under {blocklist_dir} — "
+        "derive one with jobs/run_maintenance.py --derive-blocklist",
+    ))
 
 
 def drop_blocklisted_domains(df, blocklist_df) -> "DataFrame":
@@ -291,6 +282,7 @@ def ingest_stage(
         from .incr_dedup import (
             drop_recrawls,
             drop_recrawls_near,
+            keys_geometry,
             recrawl_keys_identity,
         )
 
@@ -300,14 +292,10 @@ def ingest_stage(
         fp_df = spark.read.parquet(str(keys / "fp.parquet"))
         drops.append(lambda df: drop_recrawls(df, fp_df))
         if recrawl_near:
-            km_path = keys / "keys_meta.json"
-            if not km_path.exists():
-                raise FileNotFoundError(
-                    f"{km_path} is missing — the near tier needs the "
-                    "recorded signature geometry (run_base_keys "
-                    "writes it)"
-                )
-            geo = json.loads(km_path.read_text())
+            geo = keys_geometry(
+                recrawl_keys, "the near tier needs the recorded "
+                "signature geometry (run_base_keys writes it)",
+            )
             identity["recrawl_keys"] += ":near"
             sig_df = spark.read.parquet(str(keys / "sig.parquet"))
             drops.append(lambda df: drop_recrawls_near(
@@ -468,10 +456,7 @@ def run_quality_job(
             ("*.parquet",) if input_format == "parquet"
             else ("*.warc", "*.warc.gz")
         )
-        files = sorted(
-            str(p) for ext in exts for p in Path(corpus).rglob(ext)
-            if not p.name.startswith((".", "_"))
-        )
+        files = [str(p) for p in visible_files(corpus, exts)]
         if not files:
             raise FileNotFoundError(
                 f"no {input_format} files under {corpus}"
@@ -482,17 +467,14 @@ def run_quality_job(
         # duplicated or lost (review r4). Fingerprint the deal into
         # every group snapshot and refuse to resume over a drifted
         # listing — input immutability is the path-mode contract.
-        import hashlib
-
-        files_fp = hashlib.md5(
-            ("\n".join(Path(f).name for f in files)
-             + f":{groups}"
-             # format folded into the fingerprint only for non-default
-             # formats: parquet fps stay byte-compatible with every
-             # ledger written before input_format existed
-             + (f":{input_format}" if input_format != "parquet" else ""))
-            .encode()
-        ).hexdigest()[:16]
+        files_fp = digest(
+            "\n".join(Path(f).name for f in files)
+            + f":{groups}"
+            # format folded into the fingerprint only for non-default
+            # formats: parquet fps stay byte-compatible with every
+            # ledger written before input_format existed
+            + (f":{input_format}" if input_format != "parquet" else "")
+        )
         extra_summary["files_fp"] = files_fp
         if done:
             recorded = {

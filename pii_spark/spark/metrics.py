@@ -34,30 +34,39 @@ _ENT_SCHEMA = T.ArrayType(
 )
 
 
-def _entities_fn(
-    batches: Iterator[tuple[pd.Series, pd.Series]],
+def gold_token_rows(
+    batches: Iterator[tuple[pd.Series, pd.Series]], drop_ip: bool, row,
 ) -> Iterator[pd.Series]:
-    from ..labeling import decode_bilou, spans_to_token_labels
+    """Per (texts, spans) batch, a Series of ``row(tokens, tags,
+    label_ids)`` per document: its gold spans aligned to the serving
+    tokenizer's tokens by the reference overlap rule (BILOU tags; label
+    id -100 marks specials). ``drop_ip`` drops IP spans: IP is scrubbed
+    but is not an F1 label."""
+    from ..labeling import spans_to_token_labels
     from ..tokenizer import tokenize_with_offsets
 
     for texts, spans_col in batches:
         out = []
         for text, spans in zip(texts, spans_col):
-            _, offsets, _ = tokenize_with_offsets(text or "")
+            tokens, offsets, _ = tokenize_with_offsets(text or "")
             norm = [
                 {"start": int(s["start"]), "end": int(s["end"]),
                  "label": s["label"]}
                 for s in (spans if spans is not None else [])
-                if s["label"] != "IP"  # IP is scrubbed but not a F1 label
+                if not (drop_ip and s["label"] == "IP")
             ]
-            tags, _ = spans_to_token_labels(offsets, norm)
-            out.append(
-                [
-                    {"label": lab, "t0": a, "t1": b}
-                    for lab, a, b in decode_bilou(tags)
-                ]
-            )
+            out.append(row(tokens, *spans_to_token_labels(offsets, norm)))
         yield pd.Series(out)
+
+
+def _entities_fn(
+    batches: Iterator[tuple[pd.Series, pd.Series]],
+) -> Iterator[pd.Series]:
+    from ..labeling import decode_bilou
+
+    return gold_token_rows(batches, True, lambda _toks, tags, _ids: [
+        {"label": lab, "t0": a, "t1": b} for lab, a, b in decode_bilou(tags)
+    ])
 
 
 def entities_udf():
@@ -162,23 +171,10 @@ def token_accuracy(truth: DataFrame, pred: DataFrame) -> float:
 def _tags_fn(
     batches: Iterator[tuple[pd.Series, pd.Series]],
 ) -> Iterator[pd.Series]:
-    from ..labeling import spans_to_token_labels
-    from ..tokenizer import tokenize_with_offsets
-
-    for texts, spans_col in batches:
-        out = []
-        for text, spans in zip(texts, spans_col):
-            _, offsets, _ = tokenize_with_offsets(text or "")
-            norm = [
-                {"start": int(s["start"]), "end": int(s["end"]),
-                 "label": s["label"]}
-                for s in (spans if spans is not None else [])
-                if s["label"] != "IP"
-            ]
-            tags, label_ids = spans_to_token_labels(offsets, norm)
-            # drop special tokens (-100), as the reference does
-            out.append([t for t, lid in zip(tags, label_ids) if lid != -100])
-        yield pd.Series(out)
+    # drop special tokens (-100), as the reference does
+    return gold_token_rows(batches, True, lambda _toks, tags, ids: [
+        t for t, lid in zip(tags, ids) if lid != -100
+    ])
 
 
 def tags_udf():

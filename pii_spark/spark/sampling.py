@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..identity import digest, listing
+
 _SIGN_FLIP = -(1 << 63)  # XOR flips the top bit: signed order ≡ unsigned
 
 # Every cut in this module is driven from a driver-side collect of a
@@ -337,25 +339,14 @@ def mixture_sample(
 
 
 def route_table_identity(route_dir: str) -> str:
-    """Content identity of a routing-table parquet dir (sorted
-    (name, size) listing — metadata only), recorded by the pack/export
-    job like every other model input so an export under a different
-    routing table refuses loudly instead of silently changing which
-    docs train."""
-    import hashlib
-    from pathlib import Path
-
-    files = sorted(
-        f"{p.name}:{p.stat().st_size}"
-        for p in Path(route_dir).rglob("*.parquet")
-        if not p.name.startswith((".", "_"))
-    )
-    if not files:
-        raise FileNotFoundError(
-            f"no routing-table parquet files under {route_dir} — "
-            "derive one with jobs/run_maintenance.py --route-buckets"
-        )
-    return hashlib.md5("\n".join(files).encode()).hexdigest()[:16]
+    """`pii_spark.identity` of a routing-table dir, recorded by the
+    pack/export job so an export under a different routing table
+    refuses loudly instead of silently changing which docs train."""
+    return digest(listing(
+        route_dir,
+        f"no routing-table parquet files under {route_dir} — "
+        "derive one with jobs/run_maintenance.py --route-buckets",
+    ))
 
 
 def route_weight_filter(

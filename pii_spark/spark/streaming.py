@@ -68,22 +68,12 @@ def run_streaming_job(
         classifier_model, domain_blocklist,
     )
 
-    if input_format == "warc":
-        from .warc import _DELIM, _parse_records
+    if input_format in ("warc", "warc_gz"):
+        from .warc import read_warc_stream, read_warc_stream_binary
 
-        stream = _parse_records(
-            spark.readStream
-            .option("lineSep", _DELIM)
-            .option("maxFilesPerTrigger", max_files_per_trigger or 8)
-            .text(corpus_dir)
-        )
-    elif input_format == "warc_gz":
-        from .warc import read_warc_stream_binary
-
-        stream = read_warc_stream_binary(
-            spark, corpus_dir,
-            max_files_per_trigger=max_files_per_trigger,
-        )
+        read = (read_warc_stream if input_format == "warc"
+                else read_warc_stream_binary)
+        stream = read(spark, corpus_dir, max_files_per_trigger)
     elif input_format == "parquet":
         reader = (
             spark.readStream.schema(CORPUS)

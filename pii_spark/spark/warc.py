@@ -190,7 +190,11 @@ def _parse_records(
     )
 
 
-def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
+def read_warc_stream(
+    spark: SparkSession,
+    path: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
     """Streaming twin of ``read_warc``: watch a directory for newly
     landed .warc files (the shape of a live crawl ingest) and emit the
     same corpus schema. A built-in sink + checkpoint gives file-
@@ -201,7 +205,11 @@ def read_warc_stream(spark: SparkSession, path: str) -> DataFrame:
     provides; pair with it rather than a bare foreachBatch. Same
     record-delimiter splitting and pure-Catalyst parse as the batch
     path (one definition)."""
-    raw = spark.readStream.option("lineSep", _DELIM).text(path)
+    raw = (
+        spark.readStream.option("lineSep", _DELIM)
+        .option("maxFilesPerTrigger", max_files_per_trigger or 8)
+        .text(path)
+    )
     return _parse_records(raw)
 
 
@@ -338,9 +346,7 @@ def _chunks_gen(batches):
 
 
 def read_warc_binary(
-    spark: SparkSession,
-    path: str | list[str],
-    with_diagnostics: bool = False,
+    spark: SparkSession, path: str | list[str]
 ) -> DataFrame:
     """binaryFile-based WARC reader: per-record-gzip ``.warc.gz``
     (Common Crawl's ACTUAL distribution format — one gzip member per
@@ -368,7 +374,7 @@ def read_warc_binary(
     single-stream archive."""
     bf = spark.read.format("binaryFile").load(path)
     raw = bf.select("content").mapInPandas(_chunks_gen, "value string")
-    return _parse_records(raw, with_diagnostics=with_diagnostics)
+    return _parse_records(raw)
 
 
 def read_warc_stream_binary(

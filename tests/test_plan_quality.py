@@ -170,7 +170,7 @@ def test_new_query_plans_are_scale_safe(spark):
     # explode, no aggregation exchange — one scan + top-k sort
     # (the fast variant shares the ann_cosine_topk registry slot since
     # r6 — gate its plan via the function, not the registry)
-    plan = _plan(entry.q_ann_cosine_topk_fast(spark, sf))
+    plan = _plan(entry.q_ann_cosine_topk(spark, sf))
     assert "Join" not in plan and "Generate" not in plan, plan
     assert "HashAggregate" not in plan, plan
 

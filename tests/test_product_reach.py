@@ -45,7 +45,6 @@ UNREACHED = {
     ("spark/streaming.py", "run_events_stream"),
     ("spark/substr_dedup.py", "substring_dedup_pure"),
     ("spark/warc.py", "read_warc"),
-    ("spark/warc.py", "read_warc_stream"),
     ("spark/warc.py", "make_warc_bytes"),
     ("textgrammar/fields.py", "luhn_valid"),
 }
