@@ -25,11 +25,14 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -51,17 +54,10 @@ class Snapshot:
 
 
 class IceliteTable:
-    def __init__(self, table_dir: str | Path, collect_stats: bool = True):
-        """``collect_stats=False`` skips the per-commit min/max stats
-        pass (one column-pruned read-back of each written dir): the
-        right trade for high-frequency micro-batch appends where the
-        stats pass rivals the batch itself — at the price of no
-        manifest pruning for row-level ops on those dirs (they stay
-        always-candidates; correctness is unaffected)."""
+    def __init__(self, table_dir: str | Path):
         self.dir = Path(table_dir)
         self.meta = self.dir / "metadata"
         self.data = self.dir / "data"
-        self.collect_stats = collect_stats
 
     # ------------------------------------------------------------ read side
 
@@ -156,17 +152,7 @@ class IceliteTable:
         snap = self.snapshot(version)
         if snap is None or not snap.data_dirs:
             raise FileNotFoundError(f"no snapshot for table {self.dir}")
-        if snap.schema is not None:
-            from pyspark.sql.types import StructType
-
-            return (
-                spark.read.schema(StructType.fromJson(snap.schema))
-                .parquet(*snap.data_dirs)
-            )
-        return (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*snap.data_dirs)
-        )
+        return self._read_dirs(spark, snap, snap.data_dirs)
 
     def exists(self) -> bool:
         return self.current_version() is not None
@@ -215,14 +201,24 @@ class IceliteTable:
         ``require_parent_version`` makes the commit conditional (used by
         compact): if another snapshot landed since the caller read the
         table, retrying would silently DROP that snapshot's rows — fail
-        instead and let the caller re-run on fresh state."""
+        instead and let the caller re-run on fresh state.
+
+        ``new_dir_stats`` is keyed by the dirs written for this commit.
+        A failed commit deletes them: no manifest references them, and
+        expire_snapshots only reclaims dirs of expired manifests, so
+        they would leak forever (ADVICE r3)."""
+        def failed(msg: str) -> RuntimeError:
+            for d in new_dir_stats or {}:
+                shutil.rmtree(d, ignore_errors=True)
+            return RuntimeError(msg)
+
         self.meta.mkdir(parents=True, exist_ok=True)
         for _ in range(64):
             parent = self.snapshot()
             if require_parent_version is not None and (
                 parent is None or parent.version != require_parent_version
             ):
-                raise RuntimeError(
+                raise failed(
                     f"concurrent commit on {self.dir}: expected parent "
                     f"v{require_parent_version}, found "
                     f"v{parent.version if parent else None} — re-read and "
@@ -267,16 +263,20 @@ class IceliteTable:
             tmp_hint.write_text(str(version))
             os.rename(tmp_hint, self.meta / "version-hint.text")
             return self.snapshot(version)
-        raise RuntimeError(
+        raise failed(
             f"icelite commit contention: 64 retries exhausted on {self.dir}"
         )
 
-    # column types whose min/max are JSON-stable and totally ordered
-    _STAT_TYPES = {"string", "integer", "long", "double", "float"}
-
-    def _write_data(self, df: DataFrame) -> str:
+    def _write_data(self, data: DataFrame | pa.Table) -> str:
+        """Write one new data dir: a DataFrame through Spark (the only
+        Spark action of a commit), a pyarrow Table as one file written
+        on the driver (a few bookkeeping rows need no Spark job)."""
         snap_dir = self.data / f"snap-{uuid.uuid4().hex[:16]}"
-        df.write.mode("overwrite").parquet(str(snap_dir))
+        if isinstance(data, DataFrame):
+            data.write.mode("overwrite").parquet(str(snap_dir))
+        else:
+            snap_dir.mkdir(parents=True)
+            pq.write_table(data, str(snap_dir / "part-00000.parquet"))
         return str(snap_dir)
 
     # Iceberg-style string-stat truncation length: manifests must stay
@@ -303,54 +303,89 @@ class IceliteTable:
                 hi = None
         return lo, hi
 
-    def _collect_dir_stats(self, spark: SparkSession, d: str) -> dict:
-        """Min/max column statistics for one freshly written data dir.
-        Computed with a column-pruned read-back of the stat columns; a
-        production implementation harvests the same numbers from the
-        parquet footers written moments earlier (they are identical),
-        this keeps the sandbox dependency-free. String bounds are
-        truncated to prefix form (see _truncate_bounds) so manifests
-        carry ≤17 chars per bound, never whole documents."""
-        from pyspark.sql import functions as F
-
-        df = spark.read.parquet(d)
-        eligible = [
-            f.name for f in df.schema.fields
-            if f.dataType.typeName() in self._STAT_TYPES
-        ]
-        aggs = [F.count("*").alias("__rows")]
-        for c in eligible:
-            aggs += [F.min(c).alias(f"__min_{c}"),
-                     F.max(c).alias(f"__max_{c}")]
-        row = df.agg(*aggs).collect()[0]
-        cols = {}
-        for c in eligible:
-            lo, hi = self._truncate_bounds(row[f"__min_{c}"],
-                                           row[f"__max_{c}"])
-            cols[c] = [lo, hi]
-        return {"rows": int(row["__rows"]), "cols": cols}
+    # arrow types of the Spark column types (string, integer, long,
+    # double, float) whose min/max are JSON-stable and totally ordered
+    _STAT_TYPES = {"string", "int32", "int64", "double", "float"}
 
     @staticmethod
-    def _schema_json(df: DataFrame) -> dict:
-        return json.loads(df.schema.json())
+    def _row_group_bounds(md, leaf: int):
+        """(min, max) of parquet leaf column ``leaf`` in each row group
+        of one file's footer ``md``, all-null groups skipped; None for a
+        group the footer cannot bound: it holds values but no min/max
+        (parquet-java omits them for values over 4 KB), or a NaN bound
+        (NaN orders above every double, so pruning on it would skip a
+        dir that matches)."""
+        for rg in range(md.num_row_groups):
+            group = md.row_group(rg)
+            st = group.column(leaf).statistics
+            if (st is not None and st.has_null_count
+                    and st.null_count == group.num_rows):
+                continue
+            if st is None or not st.has_min_max \
+                    or st.min != st.min or st.max != st.max:
+                yield None
+            else:
+                yield st.min, st.max
 
-    def _written(self, df: DataFrame) -> tuple[str, dict]:
-        """Write a data dir and collect its manifest stats (unless the
-        table opted out — see __init__)."""
-        d = self._write_data(df)
-        if not self.collect_stats:
-            return d, {}
-        return d, {d: self._collect_dir_stats(df.sparkSession, d)}
+    @classmethod
+    def _collect_dir_stats(cls, d: str) -> dict:
+        """Row count and per-column min/max of one freshly written data
+        dir, read on the driver from the parquet footers of its files
+        (every row group) — no Spark job. Stat columns are the top-level
+        string/int/long/double/float ones; a column some row group
+        cannot bound (see _row_group_bounds) is stored as [None, None],
+        which pruning treats as unbounded. Python orders the decoded
+        strings by code point, which is UTF-8 byte order, Spark's string
+        order. String bounds are truncated to prefix form (see
+        _truncate_bounds) so manifests carry ≤17 chars per bound, never
+        whole documents."""
+        rows = 0
+        bounds: dict[str, list] = {}
+        for f in sorted(Path(d).glob("*.parquet")):
+            md = pq.read_metadata(f)
+            rows += md.num_rows
+            # a nested leaf's path is dotted, so a dot-free path names a
+            # top-level column (dotted top-level names get no stats)
+            stat = {a.name for a in md.schema.to_arrow_schema()
+                    if str(a.type) in cls._STAT_TYPES and "." not in a.name}
+            for leaf in range(md.num_columns):
+                c = md.schema.column(leaf).path
+                if c in stat:
+                    bounds.setdefault(c, []).extend(
+                        cls._row_group_bounds(md, leaf))
+        return {
+            "rows": rows,
+            "cols": {
+                c: [None, None] if not rgs or None in rgs
+                else list(cls._truncate_bounds(min(lo for lo, _ in rgs),
+                                               max(hi for _, hi in rgs)))
+                for c, rgs in bounds.items()
+            },
+        }
 
-    def append(self, df: DataFrame, summary: dict | None = None) -> Snapshot:
-        d, stats = self._written(df)
-        return self._commit("append", [d], summary or {},
+    @staticmethod
+    def _schema_json(data: DataFrame | pa.Table) -> dict:
+        if isinstance(data, DataFrame):
+            return json.loads(data.schema.json())
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        return json.loads(from_arrow_schema(data.schema).json())
+
+    def _written(self, data: DataFrame | pa.Table) -> dict:
+        """Write one data dir: ``{dir: its manifest stats}``."""
+        d = self._write_data(data)
+        return {d: self._collect_dir_stats(d)}
+
+    def append(self, df: DataFrame | pa.Table,
+               summary: dict | None = None) -> Snapshot:
+        stats = self._written(df)
+        return self._commit("append", list(stats), summary or {},
                             new_schema=self._schema_json(df),
                             new_dir_stats=stats)
 
     def overwrite(self, df: DataFrame, summary: dict | None = None) -> Snapshot:
-        d, stats = self._written(df)
-        return self._commit("overwrite", [d], summary or {},
+        stats = self._written(df)
+        return self._commit("overwrite", list(stats), summary or {},
                             new_schema=self._schema_json(df),
                             new_dir_stats=stats)
 
@@ -485,10 +520,10 @@ class IceliteTable:
         expiry."""
         parent = self.snapshot()
         if parent is None or not parent.data_dirs:
-            return self._commit(
-                "upsert", [self._write_data(df)], summary or {},
-                new_schema=self._schema_json(df),
-            )
+            stats = self._written(df)
+            return self._commit("upsert", list(stats), summary or {},
+                                new_schema=self._schema_json(df),
+                                new_dir_stats=stats)
         # persist the input for the operation: probe collect, discovery
         # semi-join, survivor anti-join and the final write would
         # otherwise recompute an arbitrarily expensive upstream plan
@@ -509,21 +544,16 @@ class IceliteTable:
                                           key_df=key_df,
                                           candidate_dirs=cand)
         kept = [d for d in parent.data_dirs if d not in hit_dirs]
-        written: list[str] = []
         stats: dict = {}
         try:
             if hit_dirs:
                 survivors = self._read_dirs(
                     spark, parent, sorted(hit_dirs)
                 ).join(key_df, keys, "left_anti")
-                d, st = self._written(survivors)
-                written.append(d)
-                stats.update(st)
-            d, st = self._written(df)
-            written.append(d)
-            stats.update(st)
+                stats.update(self._written(survivors))
+            stats.update(self._written(df))
             return self._commit(
-                "upsert", kept + written,
+                "upsert", kept + list(stats),
                 summary or {"upsert_keys": keys,
                             "rewritten_dirs": len(hit_dirs),
                             "kept_dirs": len(kept)},
@@ -533,12 +563,6 @@ class IceliteTable:
                                         self._schema_json(df)),
                 new_dir_stats=stats,
             )
-        except RuntimeError:
-            import shutil
-
-            for d in written:
-                shutil.rmtree(d, ignore_errors=True)
-            raise
         finally:
             key_df.unpersist()
             df.unpersist()
@@ -583,23 +607,17 @@ class IceliteTable:
         survivors = self._read_dirs(spark, parent, sorted(hit_dirs)).filter(
             f"NOT coalesce(({predicate}), false)"
         )
-        new_dir, stats = self._written(survivors)
-        try:
-            snap = self._commit(
-                "delete", kept + [new_dir],
-                summary or {"delete_predicate": predicate,
-                            "rows_deleted": n_del,
-                            "rewritten_dirs": len(hit_dirs),
-                            "kept_dirs": len(kept)},
-                require_parent_version=parent.version,
-                new_schema=parent.schema,
-                new_dir_stats=stats,
-            )
-        except RuntimeError:
-            import shutil
-
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise
+        stats = self._written(survivors)
+        snap = self._commit(
+            "delete", kept + list(stats),
+            summary or {"delete_predicate": predicate,
+                        "rows_deleted": n_del,
+                        "rewritten_dirs": len(hit_dirs),
+                        "kept_dirs": len(kept)},
+            require_parent_version=parent.version,
+            new_schema=parent.schema,
+            new_dir_stats=stats,
+        )
         return snap, n_del
 
     def delete_keys(
@@ -650,25 +668,18 @@ class IceliteTable:
         survivors = self._read_dirs(spark, parent, sorted(hit_dirs)).join(
             probe, [col], "left_anti"
         )
-        new_dir, stats = self._written(survivors)
-        try:
-            snap = self._commit(
-                "delete", kept + [new_dir],
-                summary or {"delete_col": col,
-                            "rows_deleted": n_del,
-                            "rewritten_dirs": len(hit_dirs),
-                            "kept_dirs": len(kept),
-                            "pruned_dirs":
-                                len(parent.data_dirs) - len(cand)},
-                require_parent_version=parent.version,
-                new_schema=parent.schema,
-                new_dir_stats=stats,
-            )
-        except RuntimeError:
-            import shutil
-
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise
+        stats = self._written(survivors)
+        snap = self._commit(
+            "delete", kept + list(stats),
+            summary or {"delete_col": col,
+                        "rows_deleted": n_del,
+                        "rewritten_dirs": len(hit_dirs),
+                        "kept_dirs": len(kept),
+                        "pruned_dirs": len(parent.data_dirs) - len(cand)},
+            require_parent_version=parent.version,
+            new_schema=parent.schema,
+            new_dir_stats=stats,
+        )
         return snap, n_del
 
     # ------------------------------------------------------ maintenance
@@ -696,26 +707,16 @@ class IceliteTable:
         if snap is None:
             raise FileNotFoundError(f"no snapshot to compact in {self.dir}")
         df = self.read(spark).repartition(max(1, target_partitions))
-        new_dir, stats = self._written(df)
-        try:
-            return self._commit(
-                "compact",
-                [new_dir],
-                summary or {"compacted_from_version": snap.version,
-                            "compacted_dirs": len(snap.data_dirs)},
-                require_parent_version=snap.version,
-                new_schema=self._schema_json(df),
-                new_dir_stats=stats,
-            )
-        except RuntimeError:
-            # lost the conditional commit: the freshly written data dir
-            # is referenced by NO manifest, and expire_snapshots only
-            # reclaims dirs referenced by expired manifests — delete it
-            # here or it leaks forever (ADVICE r3)
-            import shutil
-
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise
+        stats = self._written(df)
+        return self._commit(
+            "compact",
+            list(stats),
+            summary or {"compacted_from_version": snap.version,
+                        "compacted_dirs": len(snap.data_dirs)},
+            require_parent_version=snap.version,
+            new_schema=self._schema_json(df),
+            new_dir_stats=stats,
+        )
 
     def data_file_count(self, version: int | None = None) -> int:
         """Number of parquet data files in a snapshot (compaction
@@ -741,8 +742,6 @@ class IceliteTable:
         exactly-once dedup ledger, and forgetting a committed group
         whose data rows remain in the table would make a resumed job
         reprocess and DUPLICATE it (review r2 finding)."""
-        import shutil
-
         # single-expirer lock (O_EXCL): two racing expiries would
         # read-modify-write ledger.json and the loser's carry could drop
         # committed groups; fail loudly instead (review r2b)
@@ -811,8 +810,6 @@ class IceliteTable:
         wants a day). Runs under the expire lock so a concurrent
         expiry's view of referenced dirs cannot change mid-sweep.
         Returns the deleted dirs."""
-        import shutil
-
         if not self.data.exists():
             return []
         self.meta.mkdir(parents=True, exist_ok=True)

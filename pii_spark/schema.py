@@ -71,6 +71,7 @@ AUDIT = T.StructType(
         T.StructField("docs_dropped", T.LongType()),
         T.StructField("spans_scrubbed", T.LongType()),
         T.StructField("wall_ms", T.LongType()),
-        T.StructField("committed_at", T.TimestampType()),
+        # stamped by every commit, never null
+        T.StructField("committed_at", T.TimestampType(), False),
     ]
 )

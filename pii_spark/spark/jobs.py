@@ -49,8 +49,12 @@ import shutil
 import time
 import uuid
 from collections.abc import Callable
+from datetime import datetime, timezone
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,32 +63,46 @@ from ..identity import digest, listing, visible_files
 from .pipeline import run_pipeline
 
 
-def _audit_counts():
-    """docs_in / docs_kept / spans_scrubbed over an output relation —
-    the one aggregate every lineage row is built from."""
-    return (
-        F.count("*").alias("docs_in"),
-        F.sum(F.col("keep").cast("long")).alias("docs_kept"),
-        F.sum(F.size("spans").cast("long")).alias("spans_scrubbed"),
-    )
+def _file_counts(dirs: list[str]) -> list[tuple[Path, int, int, int]]:
+    """``(file, docs_in, docs_kept, spans_scrubbed)`` for each non-empty
+    parquet file of the output data ``dirs`` — the one counter every
+    lineage row is built from, read on the driver with no Spark job:
+    docs_in from the footer row count, docs_kept and spans_scrubbed from
+    only that file's ``keep`` column and ``spans`` list lengths (a NULL
+    keep is not kept, a NULL spans list counts 0)."""
+    counts = []
+    for f in sorted(p for d in dirs for p in Path(d).glob("*.parquet")):
+        with pq.ParquetFile(f) as pf:
+            n = pf.metadata.num_rows
+            if n == 0:
+                continue  # an empty write task's file: no partition
+            t = pf.read(columns=["keep", "spans"])
+        kept = pc.sum(t["keep"].cast(pa.int64())).as_py() or 0
+        spans = pc.sum(pc.list_value_length(t["spans"])).as_py() or 0
+        counts.append((f, n, kept, spans))
+    return counts
 
 
-def _append_audit(spark, audit: IceliteTable, run_id: str, snapshot_id,
-                  rows, summary: dict) -> None:
+def _append_audit(audit: IceliteTable, run_id: str, snapshot_id, rows,
+                  summary: dict) -> None:
     """Append one lineage row per ``(partition_id, input_files,
     docs_in, docs_kept, spans_scrubbed, wall_ms)`` tuple, stamped with
-    the commit time. A NULL sum (no rows) counts as 0."""
+    the commit time. The rows are written on the driver as one pyarrow
+    file (`IceliteTable.append` of a pyarrow Table): a few rows need no
+    Spark job."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from ..schema import AUDIT
 
-    adf = spark.createDataFrame(
+    now = datetime.now(timezone.utc)
+    audit.append(pa.Table.from_pylist(
         [
-            (run_id, snapshot_id, pid, files, int(n), int(kept or 0),
-             int(n - (kept or 0)), int(spans or 0), wall_ms, None)
+            dict(zip(AUDIT.names, (run_id, snapshot_id, pid, files, n, kept,
+                                   n - kept, spans, wall_ms, now)))
             for pid, files, n, kept, spans, wall_ms in rows
         ],
-        schema=AUDIT,
-    ).withColumn("committed_at", F.current_timestamp())
-    audit.append(adf, summary=summary)
+        schema=to_arrow_schema(AUDIT),
+    ), summary=summary)
 
 
 def _part_index(fname: str) -> int:
@@ -100,14 +118,15 @@ def _part_index(fname: str) -> int:
     return int(m.group(1))
 
 
-def _backfill_missing_audit(spark, out: IceliteTable, audit: IceliteTable,
+def _backfill_missing_audit(out: IceliteTable, audit: IceliteTable,
                             done: set, run_id: str) -> None:
     """ADVICE r1: a crash between the output commit and the audit
     append would permanently lose that group's lineage (the group is in
     committed_groups, so resume skips it). On every start, detect
     output-committed groups with no audit rows and backfill a
-    reconciliation row (partition_id = -1) recomputed from the
-    committed snapshot's own data files."""
+    reconciliation row (partition_id = -1) summed over the committed
+    snapshot's own data files by the group loop's counter
+    (`_file_counts`)."""
     missing = done - audit.committed_groups()
     if not missing:
         return
@@ -129,10 +148,11 @@ def _backfill_missing_audit(spark, out: IceliteTable, audit: IceliteTable,
                 continue
             parent_dirs = set(parent.data_dirs)
         new_dirs = [d for d in snap.data_dirs if d not in parent_dirs]
-        stats = spark.read.parquet(*new_dirs).agg(*_audit_counts()).first()
+        counts = _file_counts(new_dirs)
         _append_audit(
-            spark, audit, run_id, snap.snapshot_id,
-            [(-1, [f"group={g}", "backfill"], *stats, 0)],
+            audit, run_id, snap.snapshot_id,
+            [(-1, [f"group={g}", "backfill"],
+              *(sum(c[i] for c in counts) for i in (1, 2, 3)), 0)],
             summary={"group": g, "run_id": run_id, "backfill": True},
         )
 
@@ -432,7 +452,7 @@ def run_quality_job(
     out = IceliteTable(out_dir)
     audit = IceliteTable(audit_dir)
     done = out.committed_groups()
-    _backfill_missing_audit(spark, out, audit, done, run_id)
+    _backfill_missing_audit(out, audit, done, run_id)
 
     pending = [g for g in range(groups) if g not in done]
     if input_format not in ("parquet", "warc"):
@@ -551,43 +571,23 @@ def run_quality_job(
     for g in pending:
         t0 = time.time()
         result = process(group_df(g))
-        # Commit FIRST, then derive the audit stats from the committed
-        # snapshot's own data files (VERDICT r4 #3). The old shape
-        # cached the full pipeline output to stamp spark_partition_id()
-        # before the write — at 100 TB / G=8 that is ~12 TB per group
-        # through MEMORY_AND_DISK for the sake of three aggregates. Now
-        # the pipeline executes exactly once (the write), and the stats
-        # come from a columnar re-read of keep+spans over ONLY the dir
-        # this append added — the same shape the backfill path already
-        # uses. partition_id is recovered from the parquet task index
-        # in each file name (part-NNNNN-…): one write task per pipeline
-        # partition, so the lineage granularity is unchanged; empty
-        # partitions never wrote a file and were absent before too.
-        # ASSUMPTION (review r5 ADVICE): one file per write task —
-        # true here because the append never sets maxRecordsPerFile /
-        # maxPartitionBytes-driven splits; if a task ever emits
-        # several files they share a part-NNNNN index and their stats
-        # rows collapse onto one partition_id (counts still correct,
-        # granularity degraded). A filename the pattern cannot parse
-        # maps to -1 and is WARNED about (`_part_index`), never silent.
+        # ONE Spark action per group, the output write: the audit rows
+        # are counted from the files it wrote and written on the driver
+        # (`_file_counts`, `_append_audit`). partition_id is the write
+        # task index in each file name (part-NNNNN-…; one file per task,
+        # as the append sets no maxRecordsPerFile — review r5 ADVICE); a
+        # name without one maps to -1 with a warning (`_part_index`).
         snap = out.append(
             result,
             summary={"group": g, "run_id": run_id, **extra_summary},
         )
-        new_dir = snap.data_dirs[-1]  # append commits exactly one dir
-        stats = (
-            out._read_dirs(spark, snap, [new_dir])
-            .select(F.input_file_name().alias("_f"), "keep", "spans")
-            .groupBy("_f")
-            .agg(*_audit_counts())
-            .collect()
-        )
+        counts = _file_counts([snap.data_dirs[-1]])  # append adds one dir
         wall_ms = int((time.time() - t0) * 1000)
         lineage = [f"group={g}", *group_files(g)]
         _append_audit(
-            spark, audit, run_id, snap.snapshot_id,
-            [(_part_index(f), lineage, n, kept, spans, wall_ms)
-             for f, n, kept, spans in stats],
+            audit, run_id, snap.snapshot_id,
+            [(_part_index(f.name), lineage, n, kept, spans, wall_ms)
+             for f, n, kept, spans in counts],
             summary={"group": g, "run_id": run_id},
         )
         processed += 1
@@ -638,7 +638,7 @@ def run_forget_job(
         spark, "url", urls, summary={"forget_run": run_id},
     )
     _append_audit(
-        spark, audit, run_id, snap.snapshot_id,
+        audit, run_id, snap.snapshot_id,
         [(-1, [f"forget:{len(urls)}_urls"], n_del, 0, 0,
           int((time.time() - t0) * 1000))],
         summary={"forget_run": run_id},

@@ -69,6 +69,28 @@ def test_audit_lineage_rows(spark, tmp_path):
         assert r.snapshot_id is not None and r.wall_ms >= 0
 
 
+def test_audit_rows_reproducible_in_path_mode(spark, tmp_path):
+    """Two identical path-mode runs give equal audit rows apart from
+    run_id, snapshot_id, committed_at and wall_ms: each row is counted
+    from a file its group's append wrote."""
+    corpus_dir = str(tmp_path / "corpus")
+    generate_corpus(spark, 80).repartition(4).write.parquet(corpus_dir)
+
+    def audit_rows(name):
+        run_quality_job(spark, corpus_dir, str(tmp_path / name),
+                        str(tmp_path / f"{name}_audit"), groups=2)
+        return sorted(
+            (r.partition_id, r.input_files, r.docs_in, r.docs_kept,
+             r.docs_dropped, r.spans_scrubbed)
+            for r in IceliteTable(str(tmp_path / f"{name}_audit"))
+            .read(spark).collect()
+        )
+
+    first = audit_rows("one")
+    assert sum(r[2] for r in first) == 80
+    assert audit_rows("two") == first
+
+
 def test_time_travel(spark, tmp_path):
     corpus = generate_corpus(spark, 40).cache()
     t = run_quality_job(

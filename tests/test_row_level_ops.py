@@ -342,15 +342,21 @@ def test_forget_noop_does_not_expire_history(spark, tmp_path):
     assert [s.version for s in out.snapshots()] == versions_before
 
 
-def test_stats_collection_opt_out(spark, tmp_path):
-    """collect_stats=False skips the per-commit stats pass; dirs
-    without stats stay always-candidates for pruning (correctness
-    unaffected, just no manifest skipping)."""
-    t = IceliteTable(tmp_path / "tbl", collect_stats=False)
+def test_dir_without_stats_stays_candidate(spark, tmp_path):
+    """A dir whose manifest records no stats (a legacy manifest) stays
+    an always-candidate for pruning (correctness unaffected, just no
+    manifest skipping)."""
+    import json
+
+    t = IceliteTable(tmp_path / "tbl")
     t.append(spark.createDataFrame([(1, "a"), (2, "b")],
                                    "k int, v string"))
+    v1 = t.meta / "v1.json"
+    d = json.loads(v1.read_text())
+    del d["dir_stats"]
+    v1.write_text(json.dumps(d))
     snap = t.snapshot()
-    assert snap.dir_stats == {}
+    assert not snap.dir_stats
     assert t._prune_candidate_dirs(snap, "k", [999]) == snap.data_dirs
     # row-level ops still work without stats
     snap2, n = t.delete_keys(spark, "k", [1])
