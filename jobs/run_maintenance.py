@@ -270,9 +270,7 @@ def main() -> None:
             rep["text_col"] = text_col
             # every driver collect below is bounded by construction:
             # one wide row, one quantile row, #langs rows, N domains
-            wide = quality_report(
-                df, text_col=text_col, id_col="url"
-            ).collect()[0].asDict()
+            wide = quality_report(df, text_col=text_col).collect()[0].asDict()
             rep["quality"] = {k: (None if v is None else
                                   (int(v) if isinstance(v, int)
                                    else float(v)))

@@ -14,8 +14,7 @@ sentences and only retained lines that contained at least 5 words"):
 
 One definition, ``c4_sql``: native Catalyst expressions building the
 cleaned text in-row (split → filter → array_join; a doc's line count
-is small, so in-row is the right plan here — unlike the n-gram census,
-see quality/gopher.py's measured lesson). They are written as SQL text
+is small). They are written as SQL text
 and parsed once per column: spelled with the Column API, each call
 would cost Py4J round trips (pii_spark/sqltext.py). The pure-Python
 oracle ``c4_clean`` in tests/quality_twins.py recomputes

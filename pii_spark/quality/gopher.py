@@ -11,38 +11,37 @@ module completes the published rule set:
                                         frequent word n-gram)
   * duplicate 5..10-gram character fractions (chars covered by ANY
     occurrence of a repeated n-gram, overlaps counted once —
-    positional coverage, via gopher_dup_ngram_metrics)
+    positional coverage)
 
-The product computes each metric once:
+The product computes each metric once, in-row, per document:
 
   * ``gopher_line_sql`` — the line/paragraph metrics as in-row
     Catalyst expressions (arrays are small — a doc has few lines);
     ``gopher_line_flags_sql`` compares them with ``THRESHOLDS``;
-  * ``gopher_ngram_metrics`` / ``gopher_dup_ngram_metrics`` — the
-    n-gram metrics as ONE explode + ONE aggregation + a per-(doc, n)
-    window (the q_gopher_repetition plan shape). This was MEASURED,
-    not assumed: an in-row aggregate/filter formulation of the n-gram
-    census ran 0.6 s/doc (interpreted nested higher-order functions,
-    quadratic per doc) — the relational shape does the same work in
-    milliseconds and is the plan that survives 100 TB.
+  * ``gopher_ngram_sql`` — the n-gram metrics as flat columns: one
+    sort of each size's grams, then one pass over it, so the strict
+    profile reads its input once and shuffles once. On 40 repetitive
+    docs (local[2], 4-core host) it costs 20 / 47 / 85 ms per doc at
+    1k / 2k / 4k words; the relational census 52 / 75 / 147. Counting
+    each gram by filtering the whole gram array is quadratic
+    (0.6 s/doc); binding values inside one nested expression took
+    0.5–0.7 s to plan and 8–13% more driver heap on the
+    ``resumable_job`` benchmark — hence one column per array.
 
-The pure-Python oracle ``gopher_stats`` in tests/quality_twins.py
-recomputes every metric, and tests/test_gopher.py pins the engine to
-it. Thresholds (Gopher's published ones) are enforced only by
-run_pipeline's strict profile; the default keep chain stays
-byte-stable.
+tests/test_gopher.py pins the engine to the pure-Python oracle
+``gopher_stats`` (tests/quality_twins.py) and, exactly, to the
+relational census this module used before (tests/gopher_census.py).
+Thresholds (Gopher's published ones) are enforced only by
+run_pipeline's strict profile; the default chain stays byte-stable.
 
-Every Spark expression here — the in-row metrics and the census's
-projections and aggregates — is written as SQL text and parsed once
-(``F.expr`` / ``selectExpr``). The strict plan is built again for
-every job group and streaming micro-batch, and spelled with the
-Column API each call costs Py4J round trips (pii_spark/sqltext.py).
-A gram's n words are taken with one ``slice``, not n ``element_at``.
+Every Spark expression here is written as SQL text and parsed once
+(``selectExpr``): the strict plan is built again for every job group
+and streaming micro-batch, and spelled with the Column API each call
+costs Py4J round trips (pii_spark/sqltext.py). A gram's n words are
+taken with one ``slice``, not n ``element_at``.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from ..sqltext import lit
 
@@ -105,109 +104,58 @@ def gopher_line_flags_sql(text: str = "text") -> dict[str, str]:
             for k, v in gopher_line_sql(text).items()}
 
 
-def _word_base(df, id_col: str, text_col: str):
-    """(id, text) → (_id, w array, _chars) — shared scaffolding of the
-    relational n-gram metrics (one definition, review r4d: the copies
-    had already started drifting)."""
-    return df.selectExpr(
-        f"{id_col} AS _id",
-        f"filter(split(lower({text_col}), '[^a-z0-9]+'), _w -> _w != '') AS w",
-    ).selectExpr(
-        "_id", "w",
-        "greatest(aggregate(w, 0, (_a, _x) -> _a + length(_x)), 1) AS _chars",
-    )
+def gopher_ngram_sql(
+    text: str = "text", gate: str | None = None,
+) -> tuple[list[dict[str, str]], dict[str, str]]:
+    """The n-gram metrics in-row, as SQL text: ``(stages, metrics)``.
+    ``stages`` are columns to add in order (``pipeline.with_sql``): the
+    words, then their char count ``_ngc`` and each size's sorted grams.
+    With ``gate``, the words are NULL where it fails: such a doc costs
+    nothing and scores 0.0. Top-gram: one ``aggregate`` over the sorted
+    grams' runs; the best is replaced on ``>=``, so ties go to the
+    greatest gram. Dup-gram: a start repeats where a sorted neighbour
+    has its gram; the covered positions, distinct, weighted by word
+    length. BIGINT counts and sums over the INT ``_ngc``, as in the
+    census, make the doubles bit-equal."""
+    words = rf"filter(split(lower({text}), r'[^a-z0-9]+'), _w -> _w != '')"
+    if gate:
+        words = f"CASE WHEN {gate} THEN {words} END"
 
+    def grams(n, item):
+        gram = f"concat_ws(' ', slice(_ngw, _i + 1, {n}))"
+        return (f"CASE WHEN size(_ngw) >= {n} THEN array_sort(transform("
+                f"sequence(0, size(_ngw) - {n}), _i -> {item.format(gram)}))"
+                " ELSE array() END")
 
-def _gram_census(base, ns):
-    """word base → exploded (_id, _chars, n, i, g): every n-gram of
-    every requested size with its start position, one explode. A gram
-    is ``concat_ws(' ', slice(w, i + 1, n))``."""
-    grams = ", ".join(
-        f"CASE WHEN size(w) >= {n} THEN transform(sequence(0, size(w) - {n}),"
-        f" _i -> named_struct('n', {n}, 'i', _i,"
-        f" 'g', concat_ws(' ', slice(w, _i + 1, {n})))) ELSE array() END"
-        for n in ns
-    )
-    return base.selectExpr(
-        "_id", "_chars", f"explode(concat({grams})) AS gr"
-    ).selectExpr("_id", "_chars", "gr.n", "gr.i", "gr.g")
+    def acc(p, r, g, c):  # (p, r): the open run; (g, c): the best closed
+        return f"named_struct('p', {p}, 'r', {r}, 'g', {g}, 'c', {c})"
 
-
-def _attach_fracs(df, id_col: str, pivoted, ns, name_fmt: str):
-    """left-join the pivoted per-(doc, n) fractions back onto every doc
-    id, defaulting absent cells (no qualifying gram) to 0.0."""
-    return (
-        df.selectExpr(f"{id_col} AS _id")
-        .join(pivoted, "_id", "left")
-        .selectExpr(
-            f"_id AS {id_col}",
-            *[f"coalesce(`{n}`, 0.0D) AS {name_fmt.format(n=n)}"
-              for n in ns],
-        )
-    )
-
-
-def gopher_ngram_metrics(
-    df, id_col: str = "doc_id", text_col: str = "text",
-    ns: tuple = (2, 3, 4),
-):
-    """(id, text) → (id, top_{n}gram_char_frac …): ONE explode of all
-    gram sizes, ONE count aggregation, one window per (doc, n) — the
-    relational shape that scales (see module docstring for the
-    measured in-row disaster). Docs with no qualifying gram (too
-    short, or top count < 2 — the rule measures repetition) get 0.0."""
-    counts = _gram_census(_word_base(df, id_col, text_col), ns).groupBy(
-        "_id", "_chars", "n", "g"
-    ).agg(F.expr("count(*) AS c"))
-    top = (
-        counts.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY _id, n ORDER BY c DESC, g DESC)"
-            " AS _rn",
-        )
-        .where("_rn = 1 AND c >= 2")
-        .selectExpr("*", "c * (length(g) - (n - 1)) / _chars AS frac")
-        .groupBy("_id")
-        .pivot("n", list(ns))
-        .agg(F.expr("first(frac)"))
-    )
-    return _attach_fracs(df, id_col, top, ns, "top_{n}gram_char_frac")
-
-
-def gopher_dup_ngram_metrics(
-    df, id_col: str = "doc_id", text_col: str = "text",
-    ns: tuple = (5, 6, 7, 8, 9, 10),
-):
-    """(id, text) → (id, dup_5gram_char_frac … dup_10gram_char_frac):
-    the character fraction covered by ANY occurrence of a repeated
-    n-gram, overlaps counted once (positional coverage, matching the
-    pure oracle exactly). Relational plan, same family as
-    gopher_ngram_metrics: one explode of all gram sizes with their
-    start positions, one duplicate census, covered word positions via
-    an interval explode + distinct, then one weighted sum against the
-    per-position word lengths."""
-    base = _word_base(df, id_col, text_col)
-    exploded = _gram_census(base, ns)
-    # occurrences of grams seen >1 times, with their start positions
-    dup_starts = (
-        exploded.groupBy("_id", "_chars", "n", "g")
-        .agg(F.expr("count(*) AS c"), F.expr("collect_list(i) AS starts"))
-        .where("c > 1")
-        .selectExpr("_id", "_chars", "n", "explode(starts) AS start")
-    )
-    covered = dup_starts.selectExpr(
-        "_id", "_chars", "n",
-        "explode(sequence(start, start + n - 1)) AS idx",
-    ).distinct()
-    word_lens = base.selectExpr(
-        "_id", "posexplode(w) AS (idx, _wv)"
-    ).selectExpr("_id", "idx", "length(_wv) AS wl")
-    frac = (
-        covered.join(word_lens, ["_id", "idx"])
-        .groupBy("_id", "n")
-        .agg(F.expr("sum(wl) / first(_chars) AS frac"))
-        .groupBy("_id")
-        .pivot("n", list(ns))
-        .agg(F.expr("first(frac)"))
-    )
-    return _attach_fracs(df, id_col, frac, ns, "dup_{n}gram_char_frac")
+    sorted_grams = {
+        "_ngc": "greatest(aggregate(_ngw, 0, (_a, _x) -> _a + length(_x)), 1)",
+        **{f"_ngt{n}": grams(n, "{}") for n in (2, 3, 4)},
+        **{f"_ngd{n}": grams(n, "named_struct('g', {}, 'i', _i)")
+           for n in range(5, 11)},
+    }
+    null, metrics = "CAST(NULL AS STRING)", {}
+    for n in (2, 3, 4):
+        metrics[f"top_{n}gram_char_frac"] = (
+            f"aggregate(_ngt{n}, {acc(null, '0L', null, '0L')}, (_a, _x) ->"
+            f" CASE WHEN _x = _a.p THEN"
+            f" {acc('_a.p', '_a.r + 1', '_a.g', '_a.c')}"
+            f" WHEN _a.r >= _a.c THEN {acc('_x', '1L', '_a.p', '_a.r')}"
+            f" ELSE {acc('_x', '1L', '_a.g', '_a.c')} END, _a -> CASE WHEN"
+            " greatest(_a.r, _a.c) < 2 THEN 0.0D WHEN _a.r >= _a.c THEN"
+            f" _a.r * (length(_a.p) - {n - 1}) / _ngc ELSE"
+            f" _a.c * (length(_a.g) - {n - 1}) / _ngc END)")
+    for n in range(5, 11):
+        s = f"_ngd{n}"
+        dup = (f"filter(sequence(1, size({s})), _k -> (_k > 1 AND"
+               f" element_at({s}, _k - 1).g = element_at({s}, _k).g) OR"
+               f" (_k < size({s}) AND element_at({s}, _k + 1).g ="
+               f" element_at({s}, _k).g))")
+        covered = (f"array_distinct(flatten(transform({dup}, _k -> sequence("
+                   f"element_at({s}, _k).i, element_at({s}, _k).i + {n - 1}))))")
+        metrics[f"dup_{n}gram_char_frac"] = (
+            f"aggregate({covered}, 0L, (_a, _p) -> _a +"
+            " length(element_at(_ngw, _p + 1))) / _ngc")
+    return [{"_ngw": words}, sorted_grams], metrics

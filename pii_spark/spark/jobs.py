@@ -530,13 +530,9 @@ def run_quality_job(
         if input_format == "warc":
             from .warc import read_warc_binary
 
-            schema = read_warc_binary(spark, files[0]).schema
-
             def _read_group(part: list[str]) -> DataFrame:
                 return read_warc_binary(spark, part)
         else:
-            schema = spark.read.parquet(files[0]).schema
-
             def _read_group(part: list[str]) -> DataFrame:
                 return spark.read.parquet(*part)
 
@@ -545,8 +541,10 @@ def run_quality_job(
             if not part:
                 # more groups than files: commit an EMPTY snapshot so
                 # the ledger still reaches all G groups (review r4 —
-                # spark.read.parquet() with zero paths throws)
-                return spark.createDataFrame([], schema)
+                # spark.read.parquet() with zero paths throws); only
+                # here is the schema, a Spark job, inferred
+                return spark.createDataFrame(
+                    [], _read_group(files[:1]).schema)
             return _read_group(part)
 
         def group_files(g: int) -> list[str]:

@@ -121,7 +121,7 @@ def rule_chain(profile: str) -> tuple[dict[str, str], list[tuple[str, str]]]:
     (name → SQL); ``checks`` are (SQL predicate, drop_reason) in
     precedence order, reading the gates and the ``quality_sql``
     columns. run_pipeline places them between its langid/perplexity
-    checks and the n-gram census; quality_report rates them."""
+    checks and the n-gram flag; quality_report rates them."""
     q = QUALITY
     checks = [
         (heuristics_pass_sql(q), "heuristics"),
@@ -137,6 +137,14 @@ def rule_chain(profile: str) -> tuple[dict[str, str], list[tuple[str, str]]]:
         "_gl_flag": " OR ".join(gopher_line_flags_sql().values()),
     }
     return gates, checks + [("_c4_ok", "c4"), ("NOT _gl_flag", "gopher_lines")]
+
+
+def with_sql(df: DataFrame, *stages: dict[str, str]) -> DataFrame:
+    """``df`` plus each stage's columns (name → SQL text), one
+    ``selectExpr`` per stage, so a stage reads the ones before it."""
+    for stage in stages:
+        df = df.selectExpr("*", *(f"{v} AS {k}" for k, v in stage.items()))
+    return df
 
 
 def all_of(checks: list[tuple[str, str]]) -> str:
@@ -260,14 +268,12 @@ def run_pipeline(
       conjuncts with their own drop_reasons: the C4 §2.2 document
       judgment (drop_reason ``c4``), the Gopher line/paragraph
       repetition flags (``gopher_lines``, in-row codegen), and the
-      Gopher n-gram census flags (``gopher_ngrams`` — the relational
-      explode plan joined back on url, the one extra shuffle strict
-      buys; see quality/gopher.py's measured plan lesson). Output
-      schema is identical across profiles. C4 granularity caveat
-      applies (quality/c4_rules.py): single-line corpora fail the
-      ≥3-surviving-lines rule wholesale. urls are assumed unique (the
-      table key) — the census join aggregates per url to keep
-      cardinality regardless.
+      Gopher n-gram flags (``gopher_ngrams``, in-row linear
+      expressions, computed only for docs that pass the c4 and line
+      gates; quality/gopher.py). Strict reads its input once and
+      shuffles once, like default. Output schema is identical across
+      profiles. C4 granularity caveat applies (quality/c4_rules.py):
+      single-line corpora fail the ≥3-surviving-lines rule wholesale.
     """
     if profile not in ("default", "strict"):
         raise ValueError(f"unknown profile {profile!r}")
@@ -280,58 +286,21 @@ def run_pipeline(
         (f"e.ppl <= {lit(q['max_ppl'])}", "perplexity"),
         *rules,
     ]
-    if profile == "strict":
-        from ..quality.gopher import (
-            THRESHOLDS,
-            gopher_dup_ngram_metrics,
-            gopher_ngram_metrics,
-        )
-
-        df = df.selectExpr("*", *(f"{v} AS {k}" for k, v in gates.items()))
-        # n-gram census: relational by necessity (explode → count →
-        # window), computed from 2-column scans of the source and
-        # joined back; flags reduced per url before the join so row
-        # cardinality is preserved by construction. The join happens
-        # BEFORE the salted repartition below (review r5): placed
-        # after it, the join's AQE-coalesced shuffle would replace the
-        # pinned partitioning and collapse the enrich-UDF stage's
-        # parallelism — exactly what the pin exists to prevent.
-        #
-        # Census input is pre-filtered to docs that pass the in-row C4
-        # and line gates: the n-gram metrics are PER-DOC (no cross-doc
-        # state), and drop_reason precedence puts c4/gopher_lines
-        # before gopher_ngrams, so a doc failing either never consults
-        # its census flag — the filtered plan is output-identical
-        # (gated by tests/test_strict_profile.py) while the explode
-        # only pays for the surviving fraction (on the sf0.1 drive,
-        # ~6% of pages — BENCH/strict_profile.json). The filter reads
-        # the two gate columns above, so each is built once.
-        census_src = df.where("_c4_ok AND NOT _gl_flag").select("url", "text")
-        ng = gopher_ngram_metrics(census_src, id_col="url").join(
-            gopher_dup_ngram_metrics(census_src, id_col="url"), "url"
-        )
-        ng_flag = " OR ".join(
-            f"{k} > {lit(v)}" for k, v in THRESHOLDS.items() if "gram" in k
-        )
-        # join ONLY the flagged urls (measured r5: joining the full
-        # per-doc flag frame made the corpus — text column included —
-        # shuffle+sort by url for the SMJ, which was the entire strict
-        # overhead; the census itself is ~2s at sf0.1). The flagged
-        # set is the pathological fraction, small enough for AQE to
-        # broadcast, so the corpus side never moves for this join.
-        flagged = (
-            ng.groupBy("url")
-            .agg(F.expr(f"max({ng_flag}) AS f"))
-            .where("f")
-            .selectExpr("url", "true AS _ng_flag")
-        )
-        df = df.join(flagged, "url", "left")
-        checks.append(("NOT coalesce(_ng_flag, false)", "gopher_ngrams"))
-    df = salted_repartition(df, partitions)
-    df = df.selectExpr(
-        "*", *(f"{v} AS {k}" for k, v in quality_sql().items())
-    )
+    df = with_sql(salted_repartition(df, partitions),
+                  {**quality_sql(), **gates})
     df = df.withColumn("e", enrich_udf()("text"))
+    if profile == "strict":
+        from ..quality.gopher import THRESHOLDS, gopher_ngram_sql
+
+        # in-row: no scan, shuffle or join. A doc failing c4 or
+        # gopher_lines never consults the flag, so it gets no grams.
+        # After the UDF, so the arrays stay out of its row buffer.
+        stages, metrics = gopher_ngram_sql(gate="_c4_ok AND NOT _gl_flag")
+        ng_flag = " OR ".join(
+            f"{v} > {lit(THRESHOLDS[k])}" for k, v in metrics.items()
+        )
+        df = with_sql(df, *stages, {"_ng_flag": ng_flag})
+        checks.append(("NOT _ng_flag", "gopher_ngrams"))
 
     keep = all_of(checks)
     drop_reason = " ".join(

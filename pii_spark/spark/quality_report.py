@@ -1,15 +1,10 @@
 """One-call corpus quality report — every rule family this engine
-implements, evaluated over a corpus in ONE scan (plus one optional
-relational pass for the n-gram censuses).
+implements, evaluated over a corpus in ONE scan and ONE aggregation.
 
 The report is the operator a data curator actually runs first against
 a new crawl dump: keep rates and violation rates per rule family, plus
-the length distribution — all native expressions inside a single
-aggregation, so the cost is one pass over the text column regardless
-of how many metrics are computed. The n-gram repetition metrics
-(Gopher top-/dup-gram families) need their own explode+aggregate plan
-(see quality/gopher.py's measured lesson) and are joined in only when
-``include_ngrams=True``.
+the length distribution — all native in-row expressions, the n-gram
+ones (``include_ngrams``) included, inside a single aggregation.
 """
 
 from __future__ import annotations
@@ -17,14 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..quality.c4_rules import c4_sql
-from ..quality.gopher import (
-    THRESHOLDS,
-    gopher_dup_ngram_metrics,
-    gopher_line_flags_sql,
-    gopher_ngram_metrics,
-)
+from ..quality.gopher import (THRESHOLDS, gopher_line_flags_sql,
+                              gopher_ngram_sql)
 from ..sqltext import lit
-from .pipeline import all_of, quality_sql, rule_chain
+from .pipeline import all_of, quality_sql, rule_chain, with_sql
 
 
 def _rate(cond: str, name: str) -> str:
@@ -35,7 +26,6 @@ def quality_report(
     df: DataFrame,
     text_col: str = "text",
     include_ngrams: bool = False,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus → one wide row of rates and distribution stats. NULL
     text pins to '' up front: bare size(split(NULL)) artifacts (-1
@@ -46,17 +36,16 @@ def quality_report(
     The rule-family rates come from run_pipeline's own keep-chain
     predicates (``rule_chain``): ``rule_keep_rate`` is the default
     profile's in-row keep, ``strict_rule_keep_rate`` the strict one's
-    minus the relational n-gram census, which has its own plan. On a
-    corpus where langid and perplexity pass, ``rule_keep_rate`` equals
-    run_pipeline's keep rate (tests/test_strict_profile.py)."""
+    minus the n-gram flags, rated per metric (ungated) when asked.
+    On a corpus where langid and perplexity pass, ``rule_keep_rate``
+    equals run_pipeline's keep rate (tests/test_strict_profile.py)."""
     _, rules = rule_chain("default")
     gates, strict_rules = rule_chain("strict")
     pred = {r: c for c, r in strict_rules}
-    base = df.selectExpr(f"coalesce({text_col}, '') AS text", id_col)
-    base = base.selectExpr("*", *(
-        f"{v} AS {k}" for k, v in {**quality_sql(), **gates}.items()
-    ))
-    report = base.selectExpr(
+    stages, metrics = gopher_ngram_sql() if include_ngrams else ([], {})
+    base = with_sql(df.selectExpr(f"coalesce({text_col}, '') AS text"),
+                    {**quality_sql(), **gates}, *stages)
+    return base.selectExpr(
         "CAST(count(*) AS BIGINT) AS n_docs",
         "round(avg(length(text)), 2) AS avg_chars",
         "round(percentile(length(text), 0.5), 1) AS p50_chars",
@@ -72,15 +61,6 @@ def quality_report(
           for k, f in gopher_line_flags_sql().items()),
         _rate(f"NOT ({pred['gopher_lines']})", "gopher_line_flag_rate"),
         _rate(all_of(strict_rules), "strict_rule_keep_rate"),
+        *(_rate(f"{v} > {lit(THRESHOLDS[k])}", f"{k}_flag_rate")
+          for k, v in metrics.items()),
     )
-
-    if include_ngrams:
-        top = gopher_ngram_metrics(df, id_col=id_col, text_col=text_col)
-        dup = gopher_dup_ngram_metrics(df, id_col=id_col,
-                                       text_col=text_col)
-        ng = top.join(dup, id_col).selectExpr(*(
-            _rate(f"{k} > {lit(v)}", f"{k}_flag_rate")
-            for k, v in THRESHOLDS.items() if "gram" in k
-        ))
-        report = report.crossJoin(ng.hint("broadcast"))  # both single-row
-    return report

@@ -2,15 +2,19 @@
 
 Manifest stats come from the parquet footers just written and audit
 rows are written on the driver, so a commit costs exactly the jobs of
-its write. Jobs are counted per job group through the status tracker.
+its write; a path-mode job starts none before its first group read.
+Jobs are counted per job group through the status tracker.
 """
 
 from __future__ import annotations
 
 import uuid
 
+import pytest
+from pyspark.sql.readwriter import DataFrameReader
+
 from pii_spark.icelite.catalog import IceliteTable
-from pii_spark.spark.jobs import _append_audit
+from pii_spark.spark.jobs import _append_audit, run_quality_job
 
 
 def _jobs(spark, fn) -> int:
@@ -57,3 +61,34 @@ def test_compact_starts_only_its_rewrite(spark, tmp_path):
     assert rewrite >= 1
     assert _jobs(spark, lambda: t.compact(spark)) == rewrite
     assert t.data_file_count() == 1 and t.read(spark).count() == 300
+
+
+def test_path_mode_job_starts_no_job_before_its_first_group_read(
+        spark, tmp_path, monkeypatch):
+    """With no group short of files, the input schema is never needed:
+    the first parquet read of the run is group 0's, and no Spark job
+    starts before it."""
+    corpus = tmp_path / "corpus"
+    spark.range(8, numPartitions=4).selectExpr(
+        "concat('https://t.example.com/', id) AS url",
+        "'A short line of plain words.' AS text",
+    ).write.parquet(str(corpus))
+    files = sorted(str(p) for p in corpus.glob("*.parquet"))
+    assert len(files) == 4
+    reads = []
+
+    class FirstRead(Exception):
+        pass
+
+    def first_read(self, *paths, **options):
+        reads.append(list(paths))
+        raise FirstRead
+
+    def run():
+        with pytest.raises(FirstRead):
+            run_quality_job(spark, str(corpus), str(tmp_path / "o"),
+                            str(tmp_path / "a"), groups=2)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", first_read)
+    assert _jobs(spark, run) == 0
+    assert reads == [files[0::2]]

@@ -80,12 +80,10 @@ def test_explicit_partition_count_survives_aqe(spark, corpus_path):
 
 
 def test_strict_profile_keeps_repartition_pin(spark, corpus_path):
-    """Review r5: the strict census join must sit BELOW the salted
-    repartition so the enrich-UDF stage runs on the pinned
-    partitioning, not on the join's AQE-coalesced shuffle (the 1-task
+    """Review r5: the strict enrich-UDF stage must run on the pinned
+    partitioning, not on an AQE-coalesced shuffle (the 1-task
     collapse class). Gate: the topmost exchange under the Python UDF
-    is the REPARTITION_BY_NUM one, and it sits above the census join's
-    ENSURE_REQUIREMENTS exchanges. Executed-plan partition count is
+    is the REPARTITION_BY_NUM one. Executed-plan partition count is
     gated too — the property that actually matters."""
     df = spark.read.parquet(corpus_path)
     out = run_pipeline(df, partitions=8, profile="strict")
@@ -105,6 +103,20 @@ def test_strict_profile_keeps_repartition_pin(spark, corpus_path):
         .select("pid").distinct().count()
     )
     assert pids == 8
+
+
+def test_strict_plan_reads_input_once(spark, corpus_path):
+    """The strict profile's n-gram flags are in-row: its plan scans the
+    input once, shuffles once (the salted repartition) and joins
+    nothing — the same shape as the default profile's."""
+    import re
+
+    df = spark.read.parquet(corpus_path)
+    for profile in ("default", "strict"):
+        plan = _plan(run_pipeline(df, partitions=8, profile=profile))
+        assert plan.count("FileScan") == 1, (profile, plan)
+        assert plan.count("Exchange") == 1, (profile, plan)
+        assert not re.search(r"Join|CartesianProduct", plan), (profile, plan)
 
 
 def test_new_query_plans_are_scale_safe(spark):

@@ -75,10 +75,12 @@ def test_gopher_ngram_relational_matches_pure(spark, texts):
     """VERDICT r4 #7: the RELATIONAL n-gram census (explode → count →
     window / positional-coverage join) vs the pure twin's Counter walk
     — the two most structurally different twin implementations in the
-    tree, fuzzed on the fractions themselves."""
-    from pii_spark.quality.gopher import (
+    tree, fuzzed on the fractions themselves; the product's in-row
+    metrics must equal the census exactly."""
+    from tests.gopher_census import (
         gopher_dup_ngram_metrics,
         gopher_ngram_metrics,
+        inrow_ngram_metrics,
     )
     from tests.quality_twins import gopher_stats
 
@@ -95,11 +97,13 @@ def test_gopher_ngram_relational_matches_pure(spark, texts):
         .join(gopher_dup_ngram_metrics(df), "doc_id")
         .collect()
     }
+    inrow = {r.doc_id: r for r in inrow_ngram_metrics(df).collect()}
     for i, t in enumerate(texts):
         pure, r = gopher_stats(t), got[str(i)]
         for k in pure:
             if "gram" in k:
                 assert abs(r[k] - pure[k]) < 1e-9, (k, repr(t))
+                assert inrow[str(i)][k] == r[k], (k, repr(t))
 
 
 @given(texts=_TEXTS)

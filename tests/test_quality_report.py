@@ -51,9 +51,13 @@ def test_report_reacts_to_planted_pathologies(spark):
 
 
 def test_report_is_single_scan_for_inrow_families(spark):
+    """Every family is in-row, the n-gram ones included: one scan, one
+    aggregation, no join."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = (
-        quality_report(docs)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("FileScan") == 1, plan
+    for include_ngrams in (False, True):
+        plan = (
+            quality_report(docs, include_ngrams=include_ngrams)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert plan.count("FileScan") == 1, plan
+        assert "Join" not in plan, plan

@@ -115,8 +115,8 @@ def test_strict_census_on_generated_corpus(spark):
 
 
 def test_strict_reason_precedence_matches_pure_twins(spark):
-    """The census-input pre-filter (docs failing c4/gopher_lines are
-    excluded from the n-gram explode) must be output-invisible: for a
+    """The n-gram gate (docs failing c4/gopher_lines get no word array
+    and no n-gram metrics) must be output-invisible: for a
     corpus mixing every pathology, each strict drop_reason equals the
     one derived independently from the PURE twins under the documented
     precedence."""
@@ -229,7 +229,5 @@ def test_report_keep_rate_matches_pipeline(spark):
     keep_rate = out.agg(
         F.round(F.avg(F.col("keep").cast("double")), 4).alias("r")
     ).collect()[0].r
-    report_rate = quality_report(
-        sub, id_col="url"
-    ).collect()[0].rule_keep_rate
+    report_rate = quality_report(sub).collect()[0].rule_keep_rate
     assert keep_rate == report_rate
