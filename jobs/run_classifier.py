@@ -13,10 +13,12 @@ The model dir holds ``census.parquet`` (feature, n_pos, n_neg — the
 integer sufficient statistics; ≤ --dim rows however large the training
 corpus) and ``meta.json`` (dim, hash path, label census). Scoring
 recomputes the smoothed log-likelihood ratios from the census at
-read time — three driver-side numbers — so the persisted artifact is
+read time into one dense weight vector, so the persisted artifact is
 exact integers, re-trainable by union-ing censuses from corpus deltas
 (NB statistics are additive; retraining on grown corpora is a merge,
-not a rescan)."""
+not a rescan). Score mode writes one row per input row — (id,
+n_tokens, score, predict_pos), duplicate ids scored each on its own
+text."""
 
 from __future__ import annotations
 
@@ -116,7 +118,6 @@ def main() -> None:
                 # text_col was written but never read back)
                 text_col=args.text_col or meta.get("text_col", "text"),
                 dim=int(meta["dim"]),
-                hashed=bool(meta["hashed"]),
             )
             scored.write.mode("overwrite").parquet(args.output)
             out = spark.read.parquet(args.output)

@@ -10,10 +10,12 @@ hashed bag-of-words features:
   statistics). Partial-aggregable end to end: a stopword appearing
   10^11 times combines to one row per partition, never a hot reducer.
   No iteration, no driver-side weight vector, no UDF.
-* **Scoring is explode → broadcast-join → sum** — per-token add-one
-  log-likelihood ratios joined onto the token relation and summed per
-  doc. The model relation is ≤ ``dim`` rows (default 2^18 ≈ 262k —
-  a few MB; broadcastable), however large the corpus was.
+* **Scoring is one in-row expression** — the census becomes a dense
+  ``dim``-long vector ``_w`` of per-feature add-one log-likelihood
+  ratios (built once per model, 2 MB at the default 2^18 ≈ 262k),
+  broadcast as a 1-row relation, and each doc's score is a fold of
+  ``_w`` over its own tokens. One row in, one row out: no explode, no
+  shuffle, no join back, however large the corpus was.
 * **Weak labels need no external data** (the CCNet target corpus is
   unavailable offline): positives are docs passing the strict rule
   composition (C4 keep ∧ zero toxicity hits), negatives are docs
@@ -22,13 +24,13 @@ hashed bag-of-words features:
 
 Feature hashing, two paths (the repo-wide dual-path pattern):
 ``hashed=True`` (production) buckets tokens with
-``pmod(xxhash64(tok), dim)`` — 8-byte keys, bounded model size;
-``hashed=False`` keys by ``substr(md5(tok), 1, 8)`` strings so DuckDB
-replicates the training census byte-for-byte (unbounded vocabulary —
-check-scale only). The two paths differ in collision structure (any
-hashing does), so predictions are pinned per-path by tests, and the
-driver oracle checks the hashed=False sufficient statistics exactly
-(integers — no cross-engine float-summation hazard).
+``pmod(xxhash64(tok), dim)`` — 8-byte keys, bounded model size, and
+the only path the float scorer reads; ``hashed=False`` keys by
+``substr(md5(tok), 1, 8)`` strings so DuckDB replicates the training
+census byte-for-byte (unbounded vocabulary — check-scale only). The
+md5 path is scored only by the fixed-point ``score_quality_nb_int``,
+and the driver oracle checks its sufficient statistics and integer
+scores exactly (no cross-engine float-summation hazard).
 
 Naive Bayes vs fastText: fastText is a logistic model over averaged
 n-gram embeddings trained by SGD — iterative and order-dependent,
@@ -52,10 +54,10 @@ from ..identity import model_identity
 _TOKEN_SPLIT = "[^a-z0-9]+"
 
 
-def _tokens(text: Column) -> Column:
-    return F.filter(
-        F.split(F.lower(F.coalesce(text, F.lit(""))), _TOKEN_SPLIT),
-        lambda w: w != "",
+def _tokens_sql(text_col: str) -> str:
+    return (
+        f"filter(split(lower(coalesce({text_col}, '')), "
+        f"'{_TOKEN_SPLIT}'), t -> t != '')"
     )
 
 
@@ -132,58 +134,21 @@ def weak_labels(
     )
 
 
-def weak_label_pure(text: str | None, stopwords: list | None = None) -> int:
-    """Pure-Python twin of the ``weak_labels`` expression (fuzzed
-    equal by tests/test_property_quality_twins.py). Default Unicode
-    ``\\b`` on purpose: MEASURED this session, Spark's Java regex
-    treats a lexicon word abutting a non-ASCII letter ('éhate') as
-    UNbounded — identical to Python's default and to the toxicity
-    oracle in tests/quality_twins.py — while ``re.ASCII`` (and DuckDB's
-    RE2) would count it. An earlier revision pinned re.ASCII here on the
-    opposite assumption (ADVICE r6 flagged the twin disagreement);
-    the fixed-case pin in tests/test_classifier.py now keeps all
-    three Python/Spark implementations honest. The RE2 divergence
-    remains an oracle-side caveat, documented in toxicity.py (driver
-    testdata is ASCII, where all four engines agree)."""
-    import re
-
-    from .toxicity import TOX_RE_W1, TOX_RE_W2
-
-    t = text or ""
-    low = t.lower()
-    sw_re = (
-        _stopword_re(stopwords) if stopwords is not None
-        else _EN_STOPWORDS_RE
-    )
-    stop = len(re.findall(sw_re, low))
-    junk = ("lorem ipsum" in low) or ("{" in t)
-    tox = (
-        len(re.findall(TOX_RE_W1, low))
-        + 2 * len(re.findall(TOX_RE_W2, low))
-    )
-    return int(stop >= _MIN_STOPWORD_HITS and not junk and tox == 0)
-
-
-def train_census_pure(
-    docs: list[tuple[int, str | None]],
-) -> dict[str, tuple[int, int]]:
-    """Pure-Python twin of ``train_quality_nb(hashed=False)``:
-    feature (md5[:8] of the token) → (n_pos, n_neg) occurrence
-    counts. One definition of the tokenizer class on each side —
-    fuzzed equal by tests/test_property_quality_twins.py."""
-    import hashlib
-    import re
-
-    counts: dict[str, tuple[int, int]] = {}
-    for y, text in docs:
-        toks = [
-            w for w in re.split(_TOKEN_SPLIT, (text or "").lower()) if w
-        ]
-        for w in toks:
-            f = hashlib.md5(w.encode("utf-8")).hexdigest()[:8]
-            p, n = counts.get(f, (0, 0))
-            counts[f] = (p + y, n + (1 - y))
-    return counts
+def _llr(model: DataFrame) -> tuple[Column, float]:
+    """Add-one smoothed log-likelihood ratios of a census: (the
+    per-feature ratio Column over ``model``, the ratio of a feature it
+    lacks). The three totals are collected in one small job — the
+    documented eager step — and enter both as driver-side numbers."""
+    tot = model.agg(
+        F.sum("n_pos").alias("tp"),
+        F.sum("n_neg").alias("tn"),
+        F.count("*").alias("v"),
+    ).collect()[0]
+    tp, tn, v = int(tot.tp or 0), int(tot.tn or 0), max(int(tot.v), 1)
+    return (
+        F.log((F.col("n_pos") + 1.0) / float(tp + v))
+        - F.log((F.col("n_neg") + 1.0) / float(tn + v))
+    ), math.log(1.0 / (tp + v)) - math.log(1.0 / (tn + v))
 
 
 def score_quality_nb_int(
@@ -212,28 +177,15 @@ def score_quality_nb_int(
 
     Output: (id, n_tokens, score_int) — totals over the input; docs
     with zero tokens score 0."""
-    tot = model.agg(
-        F.sum("n_pos").alias("tp"),
-        F.sum("n_neg").alias("tn"),
-        F.count("*").alias("v"),
-    ).collect()[0]
-    tp, tn, v = int(tot.tp or 0), int(tot.tn or 0), max(int(tot.v), 1)
-    unseen_i = math.floor(
-        scale * (math.log(1.0 / (tp + v)) - math.log(1.0 / (tn + v)))
-    )
+    llr, unseen = _llr(model)
+    unseen_i = math.floor(scale * unseen)
     w = model.select(
         "feature",
-        F.floor(
-            F.lit(float(scale))
-            * (
-                F.log((F.col("n_pos") + 1.0) / float(tp + v))
-                - F.log((F.col("n_neg") + 1.0) / float(tn + v))
-            )
-        ).cast("long").alias("lli"),
+        F.floor(F.lit(float(scale)) * llr).cast("long").alias("lli"),
     )
     toks = df.select(
         F.col(id_col),
-        F.explode(_tokens(F.col(text_col))).alias("tok"),
+        F.explode(F.expr(_tokens_sql(text_col))).alias("tok"),
     ).select(
         id_col, _feature(F.col("tok"), dim, hashed).alias("feature")
     )
@@ -246,7 +198,7 @@ def score_quality_nb_int(
             .cast("long").alias("score_int"),
         )
     )
-    empties = df.filter(F.size(_tokens(F.col(text_col))) == 0).select(
+    empties = df.filter(F.size(F.expr(_tokens_sql(text_col))) == 0).select(
         id_col,
         F.lit(0).cast("long").alias("n_tokens"),
         F.lit(0).cast("long").alias("score_int"),
@@ -267,67 +219,76 @@ def classifier_model_identity(model_dir: str) -> str:
 
 
 def load_quality_model(spark, model_dir: str):
-    """(census DataFrame, meta dict) from a model dir."""
+    """(weights, meta) from a model dir: the census as the 1-row
+    :func:`nb_weights` relation, built once per job, and ``meta.json``.
+    A model of the md5 feature path (``hashed: false``) is refused —
+    only the fixed-point oracle twin scores that path."""
     import json
     from pathlib import Path
 
     md = Path(model_dir)
     meta = json.loads((md / "meta.json").read_text())
+    if not meta["hashed"]:
+        raise ValueError(
+            f"{model_dir} holds an md5-feature (hashed: false) census; "
+            "quality scoring reads hashed models only"
+        )
     census = spark.read.parquet(str(md / "census.parquet"))
-    return census, meta
+    return nb_weights(census, int(meta["dim"])), meta
+
+
+def nb_weights(census: DataFrame, dim: int) -> DataFrame:
+    """A hashed census as a 1-row relation with one column ``_w``: the
+    dense ``dim``-long array of :func:`_llr` ratios that
+    :func:`_nb_score_sql` reads. The JVM computes the ratios and they
+    are collected once (``toArrow``); slots the census lacks hold the
+    unseen-feature ratio. At 8 bytes a slot (2 MB at the default 2^18)
+    the array is under ``spark.sql.execution.arrow.localRelationThreshold``,
+    so the relation is local and broadcasting it starts no Spark job."""
+    import numpy as np
+    import pyarrow as pa
+
+    llr, unseen = _llr(census)
+    got = census.select("feature", llr.alias("llr")).toArrow()
+    w = np.full(dim, unseen)
+    w[got["feature"].to_numpy()] = got["llr"].to_numpy()
+    return census.sparkSession.createDataFrame(pa.table(
+        {"_w": pa.ListArray.from_arrays([0, dim], pa.array(w))}
+    ))
+
+
+def _nb_score_sql(tokens: str, dim: int) -> str:
+    """A doc's NB score over its own token array: ``_w`` gathered at
+    each token's hashed feature and added left to right from 0.0 — the
+    order the doc's tokens always had, so the double is reproducible
+    under any partitioning."""
+    return (
+        f"aggregate(transform({tokens}, "
+        f"x -> _w[pmod(xxhash64(x), {dim})]), 0D, (a, x) -> a + x)"
+    )
 
 
 def attach_quality_scores(
     df: DataFrame,
-    census: DataFrame,
+    weights: DataFrame,
     meta: dict,
-    id_col: str = "url",
     text_col: str = "scrubbed_text",
 ) -> DataFrame:
-    """Attach ``clf_score`` / ``clf_predict_pos`` to every row of
+    """Append ``clf_score`` / ``clf_predict_pos`` to every row of
     ``df`` — the quality jobs' in-line scoring stage (VERDICT r6
     missing #2: CCNet's composition is langid → perplexity →
     classifier ROUTING; a standalone score job means a second full
     pass over the output).
 
-    Cost shape: scoring itself is the explode → broadcast(model) →
-    per-doc sum plan of :func:`score_quality_nb`; attaching is one
-    join back on ``id_col`` — the same one-extra-shuffle trade the
-    strict profile's gopher n-gram census already buys, and it is
-    per-GROUP (group-sized, not corpus-sized) inside the batch job.
-
-    Scores are byte-stable across input partitionings: a doc's
-    exploded tokens stay inside the task that holds its row, so each
-    doc's sum is ONE partial aggregate accumulated in row order.
-
-    Duplicate ids (crawl revisits — review r7): the scorer's
-    zero-token arm emits one row PER input row, so a url with several
-    empty-text rows would MULTIPLY committed rows through the
-    join-back. The scores relation is therefore reduced to one row per
-    id first — max over the (n_tokens, score, predict) struct, a
-    deterministic pick in which the pooled tokenful row beats empty
-    rows (the tokenful rows themselves are already pooled per id by
-    the scorer's groupBy, the same aggregate-per-id-keeps-cardinality
-    standard as the gopher census join). One extra group-sized
-    aggregate; the join-back cardinality is now df's exactly."""
-    scores = (
-        score_quality_nb(
-            df, census, id_col=id_col, text_col=text_col,
-            dim=int(meta["dim"]), hashed=bool(meta["hashed"]),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.max(
-                F.struct("n_tokens", "score", "predict_pos")
-            ).alias("_s")
-        )
-        .select(
-            id_col,
-            F.col("_s.score").alias("clf_score"),
-            F.col("_s.predict_pos").alias("clf_predict_pos"),
-        )
-    )
-    return df.join(scores, id_col, "left")
+    ``weights`` is :func:`load_quality_model`'s 1-row relation; it is
+    broadcast onto every row and dropped in the scoring projection, so
+    the plan gains no shuffle, no join back and no second read of
+    ``df``. Each row is scored on its own text, duplicate urls
+    included, and keeps its partition."""
+    score = _nb_score_sql(_tokens_sql(text_col), int(meta["dim"]))
+    return df.crossJoin(F.broadcast(weights)).selectExpr(
+        *(f"`{c}`" for c in df.columns), f"{score} AS clf_score",
+    ).selectExpr("*", "clf_score > 0 AS clf_predict_pos")
 
 
 def train_quality_nb(
@@ -343,7 +304,7 @@ def train_quality_nb(
     does not dedup within a doc). Integer-exact and partial-agg."""
     toks = df.select(
         F.col(label_col).cast("int").alias("y"),
-        F.explode(_tokens(F.col(text_col))).alias("tok"),
+        F.explode(F.expr(_tokens_sql(text_col))).alias("tok"),
     )
     return (
         toks.select("y", _feature(F.col("tok"), dim, hashed).alias("feature"))
@@ -361,64 +322,15 @@ def score_quality_nb(
     id_col: str = "doc_id",
     text_col: str = "text",
     dim: int = 2 ** 18,
-    hashed: bool = True,
-    prior_llr: float | None = None,
 ) -> DataFrame:
-    """Per-doc NB log-likelihood-ratio score over a trained census.
-
-    The three model totals (positive/negative token mass, distinct
-    feature count for add-one smoothing) are collected once — three
-    numbers, the documented eager step — and folded into per-feature
-    ``llr`` literals; unseen features contribute the smoothed constant
-    via the left join's coalesce. Output: (id, n_tokens, score,
-    predict_pos). score > 0 → more pos-like than neg-like."""
-    tot = model.agg(
-        F.sum("n_pos").alias("tp"),
-        F.sum("n_neg").alias("tn"),
-        F.count("*").alias("v"),
-    ).collect()[0]
-    tp, tn, v = int(tot.tp or 0), int(tot.tn or 0), max(int(tot.v), 1)
-    # add-one smoothing in log space; all floats computed ONCE here on
-    # the driver, shipped as literals — executors only add doubles
-    unseen = math.log(1.0 / (tp + v)) - math.log(1.0 / (tn + v))
-    w = model.select(
-        "feature",
-        (
-            F.log((F.col("n_pos") + 1.0) / float(tp + v))
-            - F.log((F.col("n_neg") + 1.0) / float(tn + v))
-        ).alias("llr"),
-    )
-    prior = float(prior_llr) if prior_llr is not None else 0.0
-    toks = df.select(
-        F.col(id_col),
-        F.explode(_tokens(F.col(text_col))).alias("tok"),
-    ).select(
-        id_col, _feature(F.col("tok"), dim, hashed).alias("feature")
-    )
-    scored = (
-        toks.join(F.broadcast(w), "feature", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").cast("long").alias("n_tokens"),
-            F.sum(F.coalesce(F.col("llr"), F.lit(unseen))).alias("s"),
-        )
-        .select(
-            id_col,
-            "n_tokens",
-            (F.col("s") + F.lit(prior)).alias("score"),
-            ((F.col("s") + F.lit(prior)) > 0).alias("predict_pos"),
-        )
-    )
-    # docs with zero tokens never appear in the explode — re-attach
-    # them with the bare prior so scoring is total over the input.
-    # Detected ROW-locally (size of the token array), not by
-    # anti-joining the scored relation: that shape put the whole
-    # explode/join/aggregate lineage in the plan twice (review r6) —
-    # this is one cheap codegen filter over df instead.
-    empties = df.filter(F.size(_tokens(F.col(text_col))) == 0).select(
+    """Per-doc NB log-likelihood-ratio score over a trained hashed
+    census, one output row per input row: (id, n_tokens, score,
+    predict_pos). The same in-row expression as
+    :func:`attach_quality_scores`; a doc with no tokens scores 0.0.
+    score > 0 → more pos-like than neg-like."""
+    tokens = _tokens_sql(text_col)
+    return df.crossJoin(F.broadcast(nb_weights(model, dim))).selectExpr(
         id_col,
-        F.lit(0).cast("long").alias("n_tokens"),
-        F.lit(prior).alias("score"),
-        F.lit(prior > 0).alias("predict_pos"),
-    )
-    return scored.unionByName(empties)
+        f"CAST(size({tokens}) AS BIGINT) AS n_tokens",
+        f"{_nb_score_sql(tokens, dim)} AS score",
+    ).selectExpr("*", "score > 0 AS predict_pos")

@@ -19,7 +19,7 @@ Two independent spellings check it:
     ``\\b``-bounded regex.
 
 Boundary-semantics caveat: Java regex (the engine) and Python re (the
-test oracle, and ``classifier.weak_label_pure``) both use Unicode word
+test oracles, ``weak_label_pure`` among them) both use Unicode word
 boundaries and match identically. DuckDB's RE2 uses
 ASCII-only ``\\b``, so a lexicon word directly abutting a non-ASCII
 letter (e.g. ``hateé``) counts in the oracle but not in the engine;

@@ -3,7 +3,9 @@
 The product defines each family once, as SQL text
 (``pii_spark.spark.pipeline.quality_sql`` / ``heuristics_pass_sql``,
 ``pii_spark.quality.toxicity.toxicity_sql``, ``c4_rules.c4_sql`` and
-``gopher.gopher_line_sql`` plus the relational n-gram census). The
+``gopher.gopher_line_sql`` plus the relational n-gram census) and the
+classifier's weak labeler and training census
+(``pii_spark.quality.classifier.weak_labels`` / ``train_quality_nb``). The
 functions here recompute the same statistics in plain Python so the
 parity tests can check the engine against an independent spelling.
 Every threshold, lexicon and constant is imported from the product, so
@@ -17,6 +19,7 @@ class only.
 
 from __future__ import annotations
 
+import hashlib
 import re
 from collections import Counter
 
@@ -26,6 +29,12 @@ from pii_spark.quality.c4_rules import (
     _MIN_LINE_WORDS,
     _MIN_LINES,
     _TERMINAL,
+)
+from pii_spark.quality.classifier import (
+    _EN_STOPWORDS_RE,
+    _MIN_STOPWORD_HITS,
+    _TOKEN_SPLIT,
+    _stopword_re,
 )
 from pii_spark.quality.gopher import THRESHOLDS
 from pii_spark.quality.textnorm import ASCII_WS, ASCII_WS_RE
@@ -203,3 +212,48 @@ def gopher_flags(stats: dict, thresholds: dict | None = None) -> dict:
     """Metric dict → per-rule boolean flags (True = rule violated)."""
     t = thresholds or THRESHOLDS
     return {k: stats[k] > v for k, v in t.items()}
+
+
+def weak_label_pure(text: str | None, stopwords: list | None = None) -> int:
+    """The ``weak_labels`` expression (fuzzed equal by
+    tests/test_property_quality_twins.py). Default Unicode ``\\b`` on
+    purpose: measured, Spark's Java regex treats a lexicon word abutting
+    a non-ASCII letter ('éhate') as UNbounded — identical to Python's
+    default and to ``toxicity_stats`` above — while ``re.ASCII`` (and
+    DuckDB's RE2) would count it. An earlier revision pinned re.ASCII
+    here on the opposite assumption; the fixed-case pin in
+    tests/test_classifier.py keeps the Python and Spark spellings
+    honest. The RE2 divergence remains an oracle-side caveat,
+    documented in toxicity.py (driver testdata is ASCII, where all
+    engines agree)."""
+    t = text or ""
+    low = t.lower()
+    sw_re = (
+        _stopword_re(stopwords) if stopwords is not None
+        else _EN_STOPWORDS_RE
+    )
+    stop = len(re.findall(sw_re, low))
+    junk = ("lorem ipsum" in low) or ("{" in t)
+    tox = (
+        len(re.findall(TOX_RE_W1, low))
+        + 2 * len(re.findall(TOX_RE_W2, low))
+    )
+    return int(stop >= _MIN_STOPWORD_HITS and not junk and tox == 0)
+
+
+def train_census_pure(
+    docs: list[tuple[int, str | None]],
+) -> dict[str, tuple[int, int]]:
+    """``train_quality_nb(hashed=False)``: feature (md5[:8] of the
+    token) → (n_pos, n_neg) occurrence counts (fuzzed equal by
+    tests/test_property_quality_twins.py)."""
+    counts: dict[str, tuple[int, int]] = {}
+    for y, text in docs:
+        toks = [
+            w for w in re.split(_TOKEN_SPLIT, (text or "").lower()) if w
+        ]
+        for w in toks:
+            f = hashlib.md5(w.encode("utf-8")).hexdigest()[:8]
+            p, n = counts.get(f, (0, 0))
+            counts[f] = (p + y, n + (1 - y))
+    return counts

@@ -2,14 +2,19 @@
 pii_spark/quality/classifier.py): weak labeling, one-pass training
 census, scoring separation, both feature-hash paths, and plan gates."""
 
+import random
+import re
+
 import pytest
 from pyspark.sql import Row, functions as F
 
 from pii_spark.quality.classifier import (
     score_quality_nb,
+    score_quality_nb_int,
     train_quality_nb,
     weak_labels,
 )
+from tests import nb_relational
 
 _CLEAN = ("the quick brown fox and the lazy dog are friends from the "
           "old farm, and this story was told with care for all readers "
@@ -59,11 +64,17 @@ def test_train_and_score_separates(spark, hashed):
             Row(doc_id=901, text=_JUNK * 2 + "qqzz wwxx"),
         ]
     )
-    got = {r.doc_id: r for r in
-           score_quality_nb(held, model, hashed=hashed).collect()}
-    assert got[900].score > got[901].score
-    assert got[900].predict_pos and not got[901].predict_pos
-    assert got[900].n_tokens > 0
+    if hashed:
+        got = {r.doc_id: (r.score, r.predict_pos, r.n_tokens)
+               for r in score_quality_nb(held, model).collect()}
+    else:
+        # the md5 path is scored by the fixed-point oracle twin only
+        got = {r.doc_id: (r.score_int, r.score_int > 0, r.n_tokens)
+               for r in score_quality_nb_int(
+                   held, model, hashed=False).collect()}
+    assert got[900][0] > got[901][0]
+    assert got[900][1] and not got[901][1]
+    assert got[900][2] > 0
 
 
 def test_training_census_deterministic(spark):
@@ -81,7 +92,7 @@ def test_empty_and_null_text_scored_total(spark):
          Row(doc_id=3, text=_CLEAN)]
     )
     rows = {r.doc_id: r for r in
-            score_quality_nb(df, model, hashed=True).collect()}
+            score_quality_nb(df, model).collect()}
     assert set(rows) == {1, 2, 3}, "scoring is total over the input"
     assert rows[1].n_tokens == 0 and rows[2].n_tokens == 0
     assert rows[1].score == 0.0 and not rows[1].predict_pos
@@ -97,7 +108,7 @@ def test_composes_with_ccnet_buckets(spark):
 
     c = _corpus(spark).withColumn("lang", F.lit("en"))
     model = train_quality_nb(weak_labels(c), hashed=True)
-    scored = score_quality_nb(c, model, hashed=True).join(
+    scored = score_quality_nb(c, model).join(
         c.select("doc_id", "lang"), "doc_id"
     ).withColumn("neg_score", -F.col("score"))
     routed = {r.doc_id: r.ccnet_bucket
@@ -110,9 +121,10 @@ def test_composes_with_ccnet_buckets(spark):
 
 
 def test_plan_gates(spark):
-    """Scale gates: no Python UDF anywhere (pure codegen + joins), the
+    """Scale gates: no Python UDF anywhere (pure codegen), the
     training census partial-aggregates (map-side combine kills hot
-    tokens), and the scoring join broadcasts the model."""
+    tokens), and scoring broadcasts the model onto each row in-row:
+    no shuffle, no aggregate, no cartesian product."""
     c = weak_labels(_corpus(spark))
     model = train_quality_nb(c, hashed=True)
     tplan = model._jdf.queryExecution().executedPlan().toString()
@@ -122,11 +134,13 @@ def test_plan_gates(spark):
 
     scored = score_quality_nb(
         spark.createDataFrame([Row(doc_id=1, text=_CLEAN)]), model,
-        hashed=True,
     )
     splan = scored._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in splan, splan
-    assert "BroadcastHashJoin" in splan, "model side must broadcast"
+    assert "BroadcastNestedLoopJoin" in splan, "model side must broadcast"
+    assert "BroadcastExchange" in splan and "LocalTableScan" in splan
+    assert not re.search(r"\bExchange|Aggregate|CartesianProduct",
+                         splan), splan
 
 
 def test_word_boundary_semantics_pinned_nonascii(spark):
@@ -138,9 +152,8 @@ def test_word_boundary_semantics_pinned_nonascii(spark):
     DuckDB's RE2 \\b is ASCII-only and WOULD count it — that stays an
     oracle-side caveat (toxicity.py docstring), irrelevant on the
     ASCII driver testdata."""
-    from pii_spark.quality.classifier import weak_label_pure
     from pii_spark.quality.toxicity import toxicity_sql
-    from tests.quality_twins import toxicity_stats
+    from tests.quality_twins import toxicity_stats, weak_label_pure
 
     # _CLEAN supplies the >= 3 stopword hits; the suffix plants a
     # lexicon/stopword token abutting a non-ASCII letter
@@ -180,17 +193,10 @@ def test_int_scorer_twins_float_scorer(spark):
     path) must agree with the production float scorer to quantization
     accuracy — |score_int/1e6 - score| <= n_tokens * 1e-6 (each token
     contributes at most one floor-step of error)."""
-    from pii_spark.quality.classifier import (
-        score_quality_nb,
-        score_quality_nb_int,
-        train_quality_nb,
-        weak_labels,
-    )
-
     d = weak_labels(_corpus(spark))
     model = train_quality_nb(d, hashed=True)
     f = {r.doc_id: (r.score, r.n_tokens)
-         for r in score_quality_nb(d, model, hashed=True).collect()}
+         for r in score_quality_nb(d, model).collect()}
     i = {r.doc_id: r.score_int
          for r in score_quality_nb_int(d, model, hashed=True).collect()}
     assert set(f) == set(i) and f
@@ -201,3 +207,75 @@ def test_int_scorer_twins_float_scorer(spark):
           for r in score_quality_nb_int(
               d.repartition(7), model, hashed=True).collect()}
     assert i == i2
+
+
+def _fuzz_texts(n: int, seed: int = 7) -> list:
+    """Texts over seen words, synthetic census words (``w<k>``), words
+    no census holds, non-ASCII letters, digits, case and punctuation,
+    plus the edge rows: empty, NULL, separators only, all-unseen."""
+    rng = random.Random(seed)
+    seen = (_CLEAN + _JUNK).split()
+    odd = ["éhate", "théé", "naïve", "Ünïcode", "日本語", "🙂", "x9",
+           "ZZQ", "--", "...", "'", "\t", "\n"]
+    texts = [None, "", "   ", "!!! ... ---", "日本語 🙂",
+             "zzunseen1 zzunseen2 qqunseen3", "ÉÉÉ ÜÜÜ"]
+    while len(texts) < n:
+        k = rng.randrange(0, 60)
+        words = []
+        for _ in range(k):
+            r = rng.random()
+            if r < 0.4:
+                words.append(rng.choice(seen))
+            elif r < 0.6:
+                words.append(f"w{rng.randrange(0, 600_000)}")
+            elif r < 0.8:
+                words.append(f"zz{rng.randrange(0, 10**6)}q")
+            else:
+                words.append(rng.choice(odd))
+        texts.append(rng.choice([" ", ", ", "\n", "-"]).join(words))
+    return texts
+
+
+@pytest.mark.parametrize("census", ["small", "200k"])
+def test_inrow_scorer_equals_relational_twin(spark, census):
+    """The in-row scorer equals the relational explode → join → sum
+    scorer (tests/nb_relational.py) exactly — ``==`` on n_tokens, score
+    and predict_pos — on ~2k unique-id docs, against a small census and
+    one of more than 200k features."""
+    if census == "small":
+        model = train_quality_nb(weak_labels(_corpus(spark)))
+    else:
+        # 600k distinct synthetic tokens fill most of the 2^18 slots
+        model = train_quality_nb(spark.range(6000).selectExpr(
+            "CAST(id % 2 AS INT) AS label",
+            "concat_ws(' ', transform(sequence(0, 99), "
+            "i -> concat('w', CAST(id * 100 + i AS STRING)))) AS text",
+        ).unionByName(weak_labels(_corpus(spark)).select("label", "text")))
+        assert model.count() > 200_000
+    df = spark.createDataFrame(
+        list(enumerate(_fuzz_texts(2000))), "doc_id long, text string",
+    )
+    got = {r.doc_id: (r.n_tokens, r.score, r.predict_pos)
+           for r in score_quality_nb(df, model).collect()}
+    want = {r.doc_id: (r.n_tokens, r.score, r.predict_pos)
+            for r in nb_relational.score_quality_nb(df, model).collect()}
+    assert len(got) == 2000 and got == want
+    assert {got[i][0] for i in range(4)} == {0}  # NULL / empty / seps
+    assert any(p for _, _, p in got.values())
+    assert any(not p and n for n, _, p in got.values())
+
+
+def test_md5_model_refused_at_load(spark, tmp_path):
+    """Only the fixed-point oracle twin scores md5 features, so a model
+    dir whose meta.json says ``hashed: false`` is refused at load."""
+    import json
+
+    from pii_spark.quality.classifier import load_quality_model
+
+    model = tmp_path / "model"
+    train_quality_nb(weak_labels(_corpus(spark)), hashed=False) \
+        .write.parquet(str(model / "census.parquet"))
+    (model / "meta.json").write_text(json.dumps(
+        {"dim": 2 ** 18, "hashed": False}))
+    with pytest.raises(ValueError, match="hashed: false"):
+        load_quality_model(spark, str(model))

@@ -105,36 +105,37 @@ def test_quality_job_with_classifier_model(spark, tmp_path):
     assert all(r.clf_predict_pos for r in rows), "clean text scores pos"
 
     # byte-stable scores across partitionings (exact float equality)
-    census, meta = load_quality_model(spark, str(model))
+    weights, meta = load_quality_model(spark, str(model))
     d = spark.createDataFrame(
         [Row(url=f"https://s/{i}",
              scrubbed_text=(_CLEAN if i % 2 else _JUNK) * (1 + i % 3))
          for i in range(40)]
     )
     a = {r.url: r.clf_score for r in
-         attach_quality_scores(d, census, meta).collect()}
+         attach_quality_scores(d, weights, meta).collect()}
     b = {r.url: r.clf_score for r in
-         attach_quality_scores(d.repartition(7), census, meta).collect()}
+         attach_quality_scores(d.repartition(7), weights, meta).collect()}
     assert a == b  # exact equality, not approx
 
-    # duplicate urls (crawl revisits — review r7b): the join-back must
-    # preserve df's cardinality exactly (the zero-token arm used to
-    # emit one score row per input row → row multiplication), and the
-    # per-id pick is deterministic across layouts
+    # duplicate urls (crawl revisits): scoring is in-row, so the
+    # output keeps df's cardinality and each row is scored on its own
+    # text, whatever the layout
     dup = spark.createDataFrame(
         [Row(url="https://dup/1", scrubbed_text=""),
          Row(url="https://dup/1", scrubbed_text=""),
          Row(url="https://dup/1", scrubbed_text=_CLEAN),
          Row(url="https://solo/2", scrubbed_text=_CLEAN)]
     )
-    got = attach_quality_scores(dup, census, meta).collect()
-    assert len(got) == 4, "join-back preserves input cardinality"
-    dup_scores = {r.clf_score for r in got if r.url == "https://dup/1"}
-    assert len(dup_scores) == 1, "one deterministic score per id"
-    got2 = attach_quality_scores(dup.repartition(5), census, meta) \
+    got = attach_quality_scores(dup, weights, meta).collect()
+    assert len(got) == 4, "scoring preserves input cardinality"
+    own = {r.scrubbed_text: r.clf_score for r in attach_quality_scores(
+        dup.dropDuplicates(["scrubbed_text"]), weights, meta).collect()}
+    assert own[""] == 0.0 and own[_CLEAN] > 0
+    assert all(r.clf_score == own[r.scrubbed_text] for r in got)
+    got2 = attach_quality_scores(dup.repartition(5), weights, meta) \
         .collect()
-    assert sorted((r.url, r.clf_score) for r in got) == \
-        sorted((r.url, r.clf_score) for r in got2)
+    assert sorted((r.url, r.scrubbed_text, r.clf_score) for r in got) \
+        == sorted((r.url, r.scrubbed_text, r.clf_score) for r in got2)
 
     # resume under NO model refuses; so does a DIFFERENT model
     with pytest.raises(RuntimeError, match="classifier model"):

@@ -3,6 +3,8 @@ that matter at 100 TB — column pruning to the scan, predicate pushdown,
 skew-flattening repartition — so a regression shows up as a test
 failure, not as a 10× cluster bill."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -304,7 +306,7 @@ def test_global_sort_uses_range_partitioning(spark, tmp_path):
 
 
 def test_classifier_scoring_plans_are_scale_safe(spark):
-    """r7 scoring paths: the model join must be BROADCAST (the census
+    """r7 scoring paths: the model side must be BROADCAST (the census
     is <= dim rows; a shuffle of the exploded token relation against
     it would be the 100x mistake), no Python in either scorer, and
     the fixed-point scorer must carry BIGINT sums (no float agg)."""
@@ -312,6 +314,7 @@ def test_classifier_scoring_plans_are_scale_safe(spark):
 
     from pii_spark.quality.classifier import (
         attach_quality_scores,
+        nb_weights,
         score_quality_nb_int,
         train_quality_nb,
         weak_labels,
@@ -330,11 +333,52 @@ def test_classifier_scoring_plans_are_scale_safe(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
 
+    # the float scorer is in-row: the 1-row weight vector is broadcast
+    # onto each row, so nothing is exploded, shuffled or joined back
     scored = attach_quality_scores(
         d.withColumnRenamed("text", "scrubbed_text"),
-        model, {"dim": 2 ** 18, "hashed": True},
+        nb_weights(model, 2 ** 18), {"dim": 2 ** 18},
     )
     plan = _plan(scored)
-    assert "BroadcastHashJoin" in plan, plan  # the model join
+    assert "BroadcastNestedLoopJoin" in plan, plan  # the model side
+    assert "LocalTableScan" in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
+    assert not re.search(r"\bExchange|Aggregate|CartesianProduct",
+                         plan), plan
+
+
+def test_classifier_stage_serves_each_doc_once(spark, corpus_path, tmp_path):
+    """A classifier-enabled quality group (run_pipeline, then
+    attach_quality_scores with a model loaded the way the jobs load
+    it) keeps the pipeline's plan shape: one scan, one serve UDF and
+    one shuffle, the salted repartition, with the model broadcast onto
+    each row. The output keeps the pinned partition count, so a
+    group's file layout does not depend on run-time coalescing."""
+    import json
+
+    from pii_spark.quality.classifier import (
+        attach_quality_scores,
+        load_quality_model,
+        train_quality_nb,
+        weak_labels,
+    )
+
+    df = spark.read.parquet(corpus_path)
+    model = tmp_path / "model"
+    train_quality_nb(weak_labels(df)).write.parquet(
+        str(model / "census.parquet"))
+    (model / "meta.json").write_text(json.dumps(
+        {"dim": 2 ** 18, "hashed": True}))
+    out = attach_quality_scores(
+        run_pipeline(df, partitions=4),
+        *load_quality_model(spark, str(model)),
+    )
+    plan = _plan(out)
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("FileScan") == 1, plan
+    assert len(re.findall(r"\bExchange", plan)) == 1, plan
+    assert "REPARTITION" in plan, plan
+    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    pids = out.select(F.spark_partition_id().alias("p")).distinct()
+    assert pids.count() == 4

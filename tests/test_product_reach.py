@@ -25,8 +25,6 @@ UNREACHED = {
     ("detect/features.py", "_ctx_feats"),
     ("multimodal.py", "video_frame_features"),
     ("quality/bpe.py", "train_bpe_pure"),
-    ("quality/classifier.py", "weak_label_pure"),
-    ("quality/classifier.py", "train_census_pure"),
     ("quality/train_lm.py", "train_char_lm"),
     ("quality/train_lm.py", "perplexity_with"),
     ("quality/urlscore.py", "url_score_stats"),

@@ -138,12 +138,8 @@ def test_classifier_twins_agree_on_arbitrary_text(spark, texts):
     and the DuckDB-shaped md5 path must equal the pure twins on
     whitespace/quote/unicode soup — the same twin standard as every
     other quality module."""
-    from pii_spark.quality.classifier import (
-        train_census_pure,
-        train_quality_nb,
-        weak_label_pure,
-        weak_labels,
-    )
+    from pii_spark.quality.classifier import train_quality_nb, weak_labels
+    from tests.quality_twins import train_census_pure, weak_label_pure
 
     # salt in stopword/lexicon tokens (the raw alphabet cannot spell
     # them — ADVICE r6), including non-ASCII-adjacent forms that

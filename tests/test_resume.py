@@ -69,6 +69,17 @@ def test_audit_lineage_rows(spark, tmp_path):
         assert r.snapshot_id is not None and r.wall_ms >= 0
 
 
+def _path_mode_audit_rows(spark, tmp_path, name, **opts):
+    run_quality_job(spark, str(tmp_path / "corpus"), str(tmp_path / name),
+                    str(tmp_path / f"{name}_audit"), groups=2, **opts)
+    return sorted(
+        (r.partition_id, r.input_files, r.docs_in, r.docs_kept,
+         r.docs_dropped, r.spans_scrubbed)
+        for r in IceliteTable(str(tmp_path / f"{name}_audit"))
+        .read(spark).collect()
+    )
+
+
 def test_audit_rows_reproducible_in_path_mode(spark, tmp_path):
     """Two identical path-mode runs give equal audit rows apart from
     run_id, snapshot_id, committed_at and wall_ms: each row is counted
@@ -76,19 +87,36 @@ def test_audit_rows_reproducible_in_path_mode(spark, tmp_path):
     corpus_dir = str(tmp_path / "corpus")
     generate_corpus(spark, 80).repartition(4).write.parquet(corpus_dir)
 
-    def audit_rows(name):
-        run_quality_job(spark, corpus_dir, str(tmp_path / name),
-                        str(tmp_path / f"{name}_audit"), groups=2)
-        return sorted(
-            (r.partition_id, r.input_files, r.docs_in, r.docs_kept,
-             r.docs_dropped, r.spans_scrubbed)
-            for r in IceliteTable(str(tmp_path / f"{name}_audit"))
-            .read(spark).collect()
-        )
-
-    first = audit_rows("one")
+    first = _path_mode_audit_rows(spark, tmp_path, "one")
     assert sum(r[2] for r in first) == 80
-    assert audit_rows("two") == first
+    assert _path_mode_audit_rows(spark, tmp_path, "two") == first
+
+
+def test_audit_rows_reproducible_with_classifier(spark, tmp_path):
+    """The same with a classifier model: scoring is in-row after the
+    salted repartition, so each group writes one file per pinned
+    partition in every run — the layout of the unscored job — and the
+    audit rows, partition_id included, are equal. (A join back after
+    the repartition let AQE choose the file count at run time.)"""
+    import json
+
+    from pii_spark.quality.classifier import train_quality_nb, weak_labels
+
+    corpus_dir = str(tmp_path / "corpus")
+    corpus = generate_corpus(spark, 80)
+    corpus.repartition(4).write.parquet(corpus_dir)
+    model = tmp_path / "model"
+    train_quality_nb(weak_labels(corpus)).write.parquet(
+        str(model / "census.parquet"))
+    (model / "meta.json").write_text(json.dumps(
+        {"dim": 2 ** 18, "hashed": True}))
+
+    first = _path_mode_audit_rows(spark, tmp_path, "one",
+                                  classifier_model=str(model))
+    assert sum(r[2] for r in first) == 80
+    assert _path_mode_audit_rows(spark, tmp_path, "two",
+                                 classifier_model=str(model)) == first
+    assert _path_mode_audit_rows(spark, tmp_path, "plain") == first
 
 
 def test_time_travel(spark, tmp_path):

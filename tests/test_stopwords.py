@@ -83,7 +83,6 @@ def test_derived_lists_feed_weak_labels_both_languages(spark, tmp_path):
     from pii_spark.quality.classifier import (
         score_quality_nb,
         train_quality_nb,
-        weak_label_pure,
         weak_labels,
     )
     from pii_spark.quality.stopwords import (
@@ -91,6 +90,7 @@ def test_derived_lists_feed_weak_labels_both_languages(spark, tmp_path):
         load_stopword_lists,
         stopwords_identity,
     )
+    from tests.quality_twins import weak_label_pure
 
     clean = [Row(lang="en", text=_EN.replace("{i}", str(i)))
              for i in range(12)] + \
