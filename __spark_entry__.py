@@ -1242,7 +1242,7 @@ def q_warc_extract(spark, sf_dir):
     """WARC record parsing (SURVEY R69, pii_spark/spark/warc.py)
     driver-checked: one WARC record string is synthesized per doc
     (every 50th as a warcinfo record to prove the type filter), parsed
-    with the SAME pure-Catalyst exprs read_warc uses, and the load-
+    with the SAME pure-Catalyst exprs the WARC readers use, and the load-
     bearing outputs — url, type filtering, exact HTTP body bytes (as
     md5) — are twinned in DuckDB. File I/O and timestamp parsing are
     pytest-covered (tests/test_warc.py); this row pins the parse."""
@@ -1270,8 +1270,8 @@ def q_warc_extract(spark, sf_dir):
         F.lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
               "<html><body><p>"),
         F.col("text"),
-        # the record terminator a real lineSep chunk carries — its
-        # strip (review r5c) is part of what this row pins
+        # the record terminator a real delimiter-cut chunk carries —
+        # its strip (review r5c) is part of what this row pins
         F.lit("</p></body></html>\r\n\r\n"),
     )
     cols = warc_record_exprs(rec)

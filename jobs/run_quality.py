@@ -12,10 +12,10 @@ Batch mode uses the icelite group-commit ledger (resume on restart);
 (file-granular exactly-once). Both produce byte-identical output.
 
 --input-format warc points the SAME job at a crawl dump instead of a
-curated parquet corpus: batch reads *.warc / per-record-gzip *.warc.gz
-through the binaryFile reader (charset-aware), streaming watches a
-landing dir of uncompressed *.warc — the full ingest→filter→scrub
-chain as one spark-submit.
+curated parquet corpus: *.warc files, plain or gzipped (per record or
+whole file, detected per file), read through one binaryFile reader
+with charset-aware decode — batch over a dump, or --streaming over a
+landing dir — the full ingest→filter→scrub chain as one spark-submit.
 """
 
 from __future__ import annotations
@@ -43,16 +43,12 @@ def main() -> None:
     ap.add_argument("--streaming", action="store_true")
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--input-format",
-                    choices=["parquet", "warc", "warc_gz"],
+                    choices=["parquet", "warc"],
                     default="parquet",
                     help="parquet: curated corpus dir; warc: crawl "
-                         "dump (*.warc / per-record-gzip *.warc.gz in "
-                         "batch mode, uncompressed *.warc landing dir "
-                         "in --streaming mode); warc_gz: a "
-                         "--streaming landing dir of per-record-gzip "
-                         "*.warc.gz (binaryFile source; batch mode "
-                         "treats it as warc — the binary reader "
-                         "detects compression per file)")
+                         "dump or --streaming landing dir of *.warc / "
+                         "*.warc.gz (plain, per-record or whole-file "
+                         "gzip, detected per file)")
     ap.add_argument("--recrawl-keys", default=None,
                     help="jobs/run_base_keys.py output dir: drop docs "
                          "whose content fingerprint already exists in "
@@ -102,15 +98,13 @@ def main() -> None:
 
             # pass the PATH, not a DataFrame: file-granular groups read
             # the corpus exactly once total (no staging write)
-            fmt = ("warc" if args.input_format == "warc_gz"
-                   else args.input_format)
             table = run_quality_job(
                 spark, args.input, args.output, args.audit,
                 groups=args.groups, run_id=args.run_id,
                 partitions=args.partitions,
                 compact_every=args.compact_every,
                 profile=args.profile,
-                input_format=fmt,
+                input_format=args.input_format,
                 recrawl_keys=args.recrawl_keys,
                 recrawl_near=args.recrawl_near,
                 classifier_model=args.classifier_model,

@@ -437,7 +437,8 @@ def run_quality_job(
     ``input_format`` (path mode only): ``"parquet"`` reads a curated
     corpus; ``"warc"`` points the job straight at a crawl dump —
     ``*.warc`` / ``*.warc.gz`` files read through ``read_warc_binary``
-    (per-record gzip members, charset-aware decode), so the
+    (the streaming job's reader; gzip detected per file,
+    charset-aware decode), so the
     north-rule ingest→filter→scrub chain is ONE job with the same
     file-granular resume ledger (a .warc file is a group member
     exactly like a parquet file; the listing fingerprint covers the

@@ -587,7 +587,7 @@ def _ccnet_marked(
         .cast("long")
     )
     # eqNullSafe: docs with a NULL stratum (lang unset — exactly what
-    # read_warc emits) must be bucketed like any stratum, not silently
+    # the WARC readers emit) must be bucketed like any stratum, not silently
     # dropped by an equi-join (review r6)
     binned = (
         df.join(

@@ -45,15 +45,12 @@ def run_streaming_job(
 ) -> IceliteTable:
     """Process all currently-available corpus files exactly once.
     ``input_format="warc"`` watches a crawl landing dir instead:
-    uncompressed ``.warc`` files stream through the lineSep record
-    split + pure-Catalyst parse (one parse definition with the batch
-    readers) — live-crawl ingest with the same ledgered exactly-once
-    tail. ``input_format="warc_gz"`` watches a landing dir of
-    per-record-gzip ``.warc.gz`` files (Common Crawl's actual
-    distribution format, which the text datasource cannot split)
-    through the binaryFile streaming source + the batch reader's
-    member-stream record splitter — mixed dirs are fine, compression
-    is detected per file by magic.
+    ``.warc`` / ``.warc.gz`` files, plain or gzipped per record or as a
+    whole (detected per file), stream through
+    ``warc.read_warc_stream_binary``, the batch job's reader on the
+    binaryFile streaming source — the same rows per file as
+    ``run_quality_job(input_format="warc")``, with the same ledgered
+    exactly-once tail.
 
     ``profile``, ``partitions``, ``recrawl_keys``, ``recrawl_near``,
     ``classifier_model`` and ``domain_blocklist`` configure the
@@ -68,12 +65,11 @@ def run_streaming_job(
         classifier_model, domain_blocklist,
     )
 
-    if input_format in ("warc", "warc_gz"):
-        from .warc import read_warc_stream, read_warc_stream_binary
+    if input_format == "warc":
+        from .warc import read_warc_stream_binary
 
-        read = (read_warc_stream if input_format == "warc"
-                else read_warc_stream_binary)
-        stream = read(spark, corpus_dir, max_files_per_trigger)
+        stream = read_warc_stream_binary(
+            spark, corpus_dir, max_files_per_trigger)
     elif input_format == "parquet":
         reader = (
             spark.readStream.schema(CORPUS)

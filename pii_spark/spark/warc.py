@@ -6,40 +6,42 @@ concatenation of records, each ``WARC/1.0\\r\\n`` + header lines +
 *response* records the payload is an HTTP response whose body (after
 the HTTP header block's own blank line) is the page HTML.
 
-Spark-first distributed record splitting — no warcio, no byte-offset
-bookkeeping: ``spark.read.option("lineSep", "WARC/1.0\\r\\n").text``
-maps to Hadoop's custom record delimiter, which handles file-split
-boundaries correctly (a task that starts mid-record scans forward to
-the next delimiter), so a 1000-executor cluster splits a directory of
-uncompressed WARC in parallel with zero driver-side work. Single-
-stream ``.warc.gz`` also reads (Spark decompresses transparently) but
-is non-splittable per file — the standard trade; Common Crawl's
-per-record-gzip members go through ``read_warc_binary`` (batch) /
-``read_warc_stream_binary`` (landing dir), which stream the member
-bytes through the same delimiter cut at O(record) memory.
-
-Record parsing is pure Catalyst (regexp_extract / locate / substr —
-whole-stage codegen, no UDF), and the text column is derived from the
-HTML body with the same ``html_text_expr`` the corpus pipeline uses.
+One reader, batch (``read_warc_binary``) and streaming
+(``read_warc_stream_binary``): the ``binaryFile`` source hands each
+file's bytes to ``_record_chunks``, which detects compression per file
+by magic bytes — plain ``.warc``, Common Crawl's per-record-gzip
+``.warc.gz`` and a whole-file gzip all read — streams gzip members at
+O(record) memory, cuts on the ``WARC/1.0\\r\\n`` delimiter and decodes
+each record with the charset its HTTP ``Content-Type`` declares. The
+record chunks then take one pure-Catalyst parse (``_parse_records`` →
+``warc_record_exprs``: regexp_extract / locate / substr, no UDF), and
+the text column is derived from the HTML body with the same
+``html_text_expr`` the corpus pipeline uses. The same file therefore
+yields the same rows from either job.
 
 Caveats, stated honestly:
 
-* the text datasource decodes UTF-8 (invalid bytes → U+FFFD), so
-  binary payloads (images in mixed crawls) are not byte-preserved —
-  this source targets the response/HTML subset, which is what the
-  quality-filter pipeline consumes. Binary media extraction goes
-  through the binaryFile path (pii_spark/multimodal.py).
-* lineSep splitting is IN-BAND: a crawled page whose body itself
-  contains the bytes ``WARC/1.0\\r\\n`` (a page ABOUT warc files)
-  splits that record in two — the head is silently truncated and the
-  tail is a headerless fragment (dropped by the warc_type filter).
-  The Content-Length guard below catches the gross form of this: a
-  record whose decoded payload is shorter than ``Content-Length/4``
-  chars (impossible for any UTF-8 decode of that many bytes — 4
-  bytes/char is the UTF-8 maximum) is dropped as corrupt rather than
-  emitted truncated. Exact byte accounting needs the binaryFile
-  reader (``read_warc_binary``), which splits on Content-Length and
-  is immune to in-band delimiters.
+* Parallelism is per file, and binaryFile holds one whole file per
+  task in memory: a file longer than
+  ``spark.sql.sources.binaryFile.maxLength`` (2 GiB − 1 by default)
+  fails the read before any of its bytes are loaded, rather than
+  being read truncated. Common Crawl shards (~1 GiB compressed) fit;
+  the many-files layout of a crawl dump recovers the parallelism.
+* Record splitting is IN-BAND: the cut is on the delimiter bytes, not
+  on Content-Length, so a crawled page whose body itself contains
+  ``WARC/1.0\\r\\n`` (a page ABOUT warc files) splits that record in two
+  — the head is truncated and the tail is a headerless fragment
+  (dropped by the warc_type filter). Common Crawl's member-per-record
+  framing does not change this: the members are decompressed into one
+  stream before the cut. The Content-Length guard in
+  ``_parse_records`` catches the gross form: a record whose decoded
+  payload is shorter than ``Content-Length/4`` chars (impossible for
+  any UTF-8 decode of that many bytes — 4 bytes/char is the UTF-8
+  maximum) is dropped as corrupt rather than emitted truncated; a
+  record that loses less passes, truncated.
+* Record chunks are decoded to text, so binary payloads (images in
+  mixed crawls) are not byte-preserved: this source targets the
+  response/HTML subset the quality-filter pipeline consumes.
 
 Reference analogue: none (the reference reads CSVs); this is the
 north rule's "Common-Crawl-style web pages" input made real. SURVEY
@@ -48,10 +50,16 @@ R69.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_DELIM = "WARC/1.0\r\n"
+_DELIM = b"WARC/1.0\r\n"
+_GZIP_MAGIC = b"\x1f\x8b"
+_CHARSET_RE = re.compile(
+    rb"(?i)Content-Type:[^\r\n]*charset=\"?([A-Za-z0-9_.:\-]+)"
+)
 
 
 def warc_record_exprs(rec: Column) -> dict[str, Column]:
@@ -95,11 +103,11 @@ def warc_record_exprs(rec: Column) -> dict[str, Column]:
     ])
     pay = F.when(hdr_end > 0, F.substring(rec, hdr_end + 4, 2**30))
     # the chunk ends with the record's mandatory \r\n\r\n terminator
-    # (lineSep removes only the NEXT record's leading delimiter) —
-    # strip it or every html column carries 4 spurious trailer bytes
-    # (review r5c). A real body ending in CRLFCRLF loses those bytes;
-    # exact byte recovery would need Content-Length in BYTES, which
-    # the UTF-8 decode path cannot index (documented caveat above).
+    # (the delimiter cut removes only the NEXT record's leading
+    # delimiter) — strip it or every html column carries 4 spurious
+    # trailer bytes (review r5c). A real body ending in CRLFCRLF loses
+    # those bytes; exact byte recovery would need Content-Length in
+    # BYTES, which the decoded chunk string cannot index.
     pay = F.regexp_replace(pay, r"\r\n\r\n$", "")
     # HTTP body: after the HTTP header block's own blank line; records
     # whose payload has no header block (warcinfo etc.) yield NULL
@@ -120,36 +128,18 @@ def warc_record_exprs(rec: Column) -> dict[str, Column]:
     }
 
 
-def read_warc(
-    spark: SparkSession, path: str, with_diagnostics: bool = False
-) -> DataFrame:
-    """Directory (or glob) of .warc files → corpus-schema DataFrame
-    ``(url, warc_ts, html binary, text, lang)``: response records
-    only, html = raw HTTP body bytes, text extracted with the
+def _parse_records(bf: DataFrame) -> DataFrame:
+    """Shared batch/streaming tail: binaryFile rows → record chunks
+    (``_chunks_gen``) → corpus schema ``(url, warc_ts, html binary,
+    text, lang)``: response records only, html = the decoded HTTP body
+    as UTF-8 (the raw bytes for a UTF-8 page), text extracted with the
     pipeline's regex-tier extractor, lang left NULL for the langid
-    stage to fill."""
-    # the chunk BEFORE the first delimiter is file preamble (usually
-    # empty); real records contain a WARC-Type header and are kept by
-    # the response filter inside _parse_records
-    raw = spark.read.option("lineSep", _DELIM).text(path)
-    return _parse_records(raw, with_diagnostics=with_diagnostics)
-
-
-def _parse_records(
-    raw: DataFrame, with_diagnostics: bool = False
-) -> DataFrame:
-    """Shared batch/streaming tail: delimiter chunks → corpus schema.
-
-    ``with_diagnostics=True`` appends ``content_length`` (record
-    header, bytes) and ``payload_chars`` (decoded chars) columns so a
-    downstream audit can census NEAR-threshold records (ADVICE r6):
-    the 4× guard below only drops records that lost >75% of their
-    payload; a record truncated near its end passes it and is emitted
-    silently truncated — the ratio column makes that residue
-    measurable instead of invisible. Off by default: the corpus
-    schema is the pipeline contract."""
+    stage to fill. The chunk before a file's first
+    delimiter is its preamble (usually empty); it has no WARC-Type
+    header and the response filter drops it."""
     from .html import html_text_expr
 
+    raw = bf.select("content").mapInPandas(_chunks_gen, "value string")
     cols = warc_record_exprs(F.col("value"))
     out = (
         raw.select(
@@ -172,50 +162,13 @@ def _parse_records(
         )
     )
     html = F.encode(F.col("body"), "utf-8")
-    diag = (
-        [
-            F.col("_cl").alias("content_length"),
-            F.col("_pc").alias("payload_chars"),
-        ]
-        if with_diagnostics
-        else []
-    )
     return out.select(
         "url",
         "warc_ts",
         html.alias("html"),
         html_text_expr(html).alias("text"),
         F.lit(None).cast("string").alias("lang"),
-        *diag,
     )
-
-
-def read_warc_stream(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming twin of ``read_warc``: watch a directory for newly
-    landed .warc files (the shape of a live crawl ingest) and emit the
-    same corpus schema. A built-in sink + checkpoint gives file-
-    granular exactly-once; a ``foreachBatch`` composition is
-    AT-LEAST-once (a crash between the sink write and the offset
-    commit replays the batch) and needs an idempotence ledger on top —
-    exactly what streaming.run_streaming_job's snapshot-summary dedup
-    provides; pair with it rather than a bare foreachBatch. Same
-    record-delimiter splitting and pure-Catalyst parse as the batch
-    path (one definition)."""
-    raw = (
-        spark.readStream.option("lineSep", _DELIM)
-        .option("maxFilesPerTrigger", max_files_per_trigger or 8)
-        .text(path)
-    )
-    return _parse_records(raw)
-
-
-_GZIP_MAGIC = b"\x1f\x8b"
-_DELIM_B = _DELIM.encode()
-_CHARSET_RE = None  # compiled lazily in the executor
 
 
 def _gunzip_stream(blob: bytes):
@@ -275,15 +228,9 @@ def _decode_record(chunk: bytes) -> str:
     ...charset=`` names the body encoding (WARC+HTTP headers are
     ASCII, a subset of every charset handled here, so decoding the
     whole chunk with the body charset is byte-safe). Unknown/absent
-    charset → the UTF-8 path, byte-identical to the lineSep reader."""
+    charset → UTF-8, invalid bytes → U+FFFD."""
     import codecs
-    import re as _re
 
-    global _CHARSET_RE
-    if _CHARSET_RE is None:
-        _CHARSET_RE = _re.compile(
-            rb"(?i)Content-Type:[^\r\n]*charset=\"?([A-Za-z0-9_.:\-]+)"
-        )
     enc = "utf-8"
     pay_off = chunk.find(b"\r\n\r\n")
     # search ONLY the HTTP header block — a body mentioning charset=
@@ -298,7 +245,7 @@ def _decode_record(chunk: bytes) -> str:
                 # only charsets that are ASCII supersets are safe to
                 # apply to the whole chunk (utf-16 etc. would garble
                 # the headers); probe with the delimiter itself
-                if info.decode(b"WARC/1.0\r\n")[0] == "WARC/1.0\r\n":
+                if info.decode(_DELIM)[0] == _DELIM.decode():
                     enc = info.name
             except (LookupError, UnicodeDecodeError):
                 pass
@@ -308,29 +255,29 @@ def _decode_record(chunk: bytes) -> str:
 def _record_chunks(blob: bytes):
     """Raw .warc or gzipped (per-record members OR a single
     whole-file member — cut on the delimiter either way, at O(record)
-    memory) .warc.gz file bytes → the SAME delimiter-stripped record
-    chunk strings the lineSep reader produces (first chunk = file
-    preamble, usually empty), with charset-aware decode."""
+    memory) .warc.gz file bytes → delimiter-stripped record chunk
+    strings (first chunk = file preamble, usually empty), with
+    charset-aware decode."""
     if blob[:2] == _GZIP_MAGIC:
         buf = bytearray()
         for piece in _gunzip_stream(blob):
             buf.extend(piece)
             # emit complete records; keep the (possibly partial) tail
-            parts = bytes(buf).split(_DELIM_B)
+            parts = bytes(buf).split(_DELIM)
             for p in parts[:-1]:
                 yield _decode_record(p)
             buf = bytearray(parts[-1])
         if buf:
             yield _decode_record(bytes(buf))
     else:
-        for p in blob.split(_DELIM_B):
+        for p in blob.split(_DELIM):
             yield _decode_record(p)
 
 
 def _chunks_gen(batches):
-    """mapInPandas body shared by the batch and streaming binaryFile
-    readers: file content blobs → bounded pandas batches of
-    delimiter-stripped record chunk strings."""
+    """mapInPandas body of ``_parse_records``: file content blobs →
+    bounded pandas batches of delimiter-stripped record chunk
+    strings."""
     import pandas as pd
 
     for pdf in batches:
@@ -348,33 +295,12 @@ def _chunks_gen(batches):
 def read_warc_binary(
     spark: SparkSession, path: str | list[str]
 ) -> DataFrame:
-    """binaryFile-based WARC reader: per-record-gzip ``.warc.gz``
-    (Common Crawl's ACTUAL distribution format — one gzip member per
-    record, detected by magic per file) and charset-aware decode of
-    non-UTF-8 bodies (VERDICT r5 #3/#5). Emits the same record chunks
-    as the lineSep reader into the same ``_parse_records`` tail — one
-    parse definition, third entry path; UTF-8 corpora come out
-    byte-identical to ``read_warc``.
-
-    Scale notes: binaryFile holds one COMPRESSED file per task in
-    memory (CC shards are ~1 GiB); decompression is streamed per gzip
+    """Directory, glob or list of ``.warc`` / ``.warc.gz`` files →
+    corpus-schema DataFrame (see ``_parse_records``). Compression is
+    detected per file by magic; decompression is streamed per gzip
     member and records are emitted in bounded pandas batches, so the
-    decompressed file is never materialized at once. Parallelism is
-    per-file (a .warc.gz member stream is not splittable mid-file) —
-    the standard Common Crawl trade, recovered by the many-files
-    layout of a crawl dump. Immune to the in-band-delimiter caveat?
-    No — record boundaries here are still the delimiter within a
-    member stream, but CC's member-per-record framing means a member
-    boundary always coincides with a record boundary, so embedded
-    delimiter bytes only truncate their own record (and the
-    Content-Length guard drops the gross cases). A misframed
-    WHOLE-FILE gzip (single giant member) also reads correctly — the
-    member stream is cut on the delimiter at O(record) memory — it
-    just loses the member-per-record immunity above, like any
-    single-stream archive."""
-    bf = spark.read.format("binaryFile").load(path)
-    raw = bf.select("content").mapInPandas(_chunks_gen, "value string")
-    return _parse_records(raw)
+    decompressed file is never materialized at once."""
+    return _parse_records(spark.read.format("binaryFile").load(path))
 
 
 def read_warc_stream_binary(
@@ -382,90 +308,22 @@ def read_warc_stream_binary(
     path: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Streaming twin of ``read_warc_binary`` (VERDICT r6 missing #3):
-    watch a crawl landing directory for newly landed ``.warc.gz``
-    files — Common Crawl's per-record-gzip distribution format, which
-    the lineSep-based ``read_warc_stream`` cannot split — via the
-    ``binaryFile`` streaming source, into the same
-    ``_record_chunks``/``_parse_records`` tail (one parse definition).
-    Mixed landing dirs are fine: compression is detected per file by
-    magic, so plain ``.warc`` files read too. Parallelism is per-file,
-    like the batch path."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    # binaryFile's schema is fixed, but file streaming sources require
-    # it stated explicitly
-    schema = StructType([
-        StructField("path", StringType()),
-        StructField("modificationTime", TimestampType()),
-        StructField("length", LongType()),
-        StructField("content", BinaryType()),
-    ])
+    """Streaming twin of ``read_warc_binary``: watch a crawl landing
+    directory for newly landed ``.warc`` / ``.warc.gz`` files via the
+    ``binaryFile`` streaming source, into the same ``_parse_records``
+    tail — the same rows for the same files. A built-in sink +
+    checkpoint gives file-granular exactly-once; a ``foreachBatch``
+    composition is AT-LEAST-once (a crash between the sink write and
+    the offset commit replays the batch) and needs an idempotence
+    ledger on top — what ``streaming.run_streaming_job``'s
+    snapshot-summary dedup provides."""
     bf = (
         spark.readStream.format("binaryFile")
-        .schema(schema)
+        # binaryFile's schema is fixed, but file streaming sources
+        # require it stated explicitly
+        .schema("path string, modificationTime timestamp, "
+                "length long, content binary")
         .option("maxFilesPerTrigger", max_files_per_trigger or 8)
         .load(path)
     )
-    raw = bf.select("content").mapInPandas(_chunks_gen, "value string")
-    return _parse_records(raw)
-
-
-def make_warc_bytes(
-    pages: list[tuple[str, str, str]], charset: str | None = None
-) -> bytes:
-    """Build a well-formed WARC/1.0 file (warcinfo + one response per
-    page) from (url, iso_ts, html) triples — the test/dev fixture
-    writer (no warcio offline). Content-Length is computed over the
-    exact payload bytes, as the spec requires. ``charset`` encodes
-    bodies in a non-UTF-8 charset and declares it in the HTTP
-    Content-Type (the read_warc_binary decode fixture)."""
-    return b"".join(make_warc_records(pages, charset))
-
-
-def make_warc_records(
-    pages: list[tuple[str, str, str]], charset: str | None = None
-) -> list[bytes]:
-    """The per-record byte blocks of ``make_warc_bytes`` (each
-    including its leading ``WARC/1.0\\r\\n`` and trailing blank
-    line) — gzip each separately for a Common-Crawl-style
-    member-per-record ``.warc.gz`` fixture."""
-    recs: list[bytes] = []
-
-    def record(headers: list[tuple[str, str]], payload: bytes):
-        out = bytearray(b"WARC/1.0\r\n")
-        for k, v in headers + [("Content-Length", str(len(payload)))]:
-            out.extend(f"{k}: {v}\r\n".encode())
-        out.extend(b"\r\n")
-        out.extend(payload)
-        out.extend(b"\r\n\r\n")
-        recs.append(bytes(out))
-
-    record(
-        [("WARC-Type", "warcinfo"), ("WARC-Date", "2017-01-01T00:00:00Z")],
-        b"software: pii-spark-fixture\r\n",
-    )
-    ctype = "text/html" + (f"; charset={charset}" if charset else "")
-    for url, ts, html in pages:
-        body = html.encode(charset or "utf-8")
-        http = (
-            b"HTTP/1.1 200 OK\r\nContent-Type: " + ctype.encode() +
-            b"\r\nContent-Length: " + str(len(body)).encode() + b"\r\n\r\n"
-            + body
-        )
-        record(
-            [
-                ("WARC-Type", "response"),
-                ("WARC-Target-URI", url),
-                ("WARC-Date", ts),
-            ],
-            http,
-        )
-    return recs
+    return _parse_records(bf)

@@ -69,7 +69,7 @@ def test_quality_job_with_classifier_model(spark, tmp_path):
         load_quality_model,
     )
     from pii_spark.spark.jobs import run_quality_job
-    from pii_spark.spark.warc import make_warc_records
+    from tests.warc_fixture import make_warc_records
 
     # train a tiny model via the CLI (the real artifact format)
     train_dir = str(tmp_path / "train")

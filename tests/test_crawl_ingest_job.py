@@ -2,17 +2,14 @@
 pointed straight at a WARC dump — batch over mixed .warc / per-record
 .warc.gz (with a Latin-1 page and re-cased headers in the mix),
 file-granular resume ledger semantics, and the streaming landing-dir
-twin — the north rule's ingest→filter→scrub chain end to end."""
+twin, which gives the batch job's rows for the same files — the north
+rule's ingest→filter→scrub chain end to end."""
 
 import gzip
 
 import pytest
 
-from pii_spark.spark.warc import (
-    make_warc_bytes,
-    make_warc_records,
-    read_warc,
-)
+from tests.warc_fixture import make_warc_bytes, make_warc_records
 
 BODY = ("<html><body><p>The quick brown fox jumps over the lazy dog "
         "near the wide river today, with plenty of additional plain "
@@ -119,8 +116,34 @@ def test_streaming_warc_landing_dir(spark, tmp_path):
         spark, str(src), out_dir, ck, input_format="warc"
     )
     got = {r.url: r.scrubbed_text for r in out.read(spark).collect()}
-    assert len(got) == 4
+    assert out.read(spark).count() == len(got) == 4
     assert all("@gmail.com" not in t for t in got.values())
-    # parity with the batch reader's parse on the same files
-    batch_urls = {r.url for r in read_warc(spark, str(src)).collect()}
-    assert set(got) == batch_urls
+
+
+def _job_rows(spark, table):
+    return {
+        (r.url, r.keep, r.drop_reason, r.scrubbed_text)
+        for r in table.read(spark).collect()
+    }
+
+
+def test_batch_and_streaming_warc_jobs_agree(spark, tmp_path):
+    """Both quality jobs read input_format="warc" through one reader:
+    over the same dir — plain, per-record gzip with re-cased headers,
+    and a Latin-1 page — they give the same rows, decoded text
+    included."""
+    from pii_spark.spark.jobs import run_quality_job
+    from pii_spark.spark.streaming import run_streaming_job
+
+    src = _write_dump(tmp_path)
+    batch = run_quality_job(
+        spark, src, str(tmp_path / "bout"), str(tmp_path / "baudit"),
+        groups=2, input_format="warc",
+    )
+    stream = run_streaming_job(
+        spark, src, str(tmp_path / "sout"), str(tmp_path / "ck"),
+        input_format="warc",
+    )
+    rows = _job_rows(spark, batch)
+    assert len(rows) == 5
+    assert _job_rows(spark, stream) == rows

@@ -38,7 +38,7 @@ def _page(url, body):
 
 
 def _gz_dump(path, pages):
-    from pii_spark.spark.warc import make_warc_records
+    from tests.warc_fixture import make_warc_records
 
     path.mkdir(parents=True, exist_ok=True)
     (path / "d.warc.gz").write_bytes(

@@ -42,8 +42,6 @@ UNREACHED = {
     ("spark/streaming.py", "run_stream_dedup_builtin"),
     ("spark/streaming.py", "run_events_stream"),
     ("spark/substr_dedup.py", "substring_dedup_pure"),
-    ("spark/warc.py", "read_warc"),
-    ("spark/warc.py", "make_warc_bytes"),
     ("textgrammar/fields.py", "luhn_valid"),
 }
 

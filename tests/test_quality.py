@@ -1,6 +1,8 @@
 """Quality stages: langid, perplexity, heuristics — including the
 native-Catalyst == pure-Python parity pin."""
 
+import pytest
+
 from pii_spark.config import QUALITY
 from pii_spark.quality.langid import classify
 from pii_spark.quality.perplexity import perplexity
@@ -102,6 +104,23 @@ def test_toxic_doc_dropped_by_pipeline(spark):
     assert out["1"].quality.tox_score > 0.08
     assert out["2"].keep and out["2"].drop_reason is None
     assert out["2"].quality.tox_score == 0.0
+
+
+@pytest.mark.parametrize("profile", ["default", "strict"])
+def test_perplexity_drop_reason_reachable(spark, profile):
+    """An 'en' doc over max_ppl is dropped with drop_reason
+    'perplexity': the rule sits after langid in the keep chain, so it
+    needs a doc langid still calls English."""
+    from pii_spark.spark.pipeline import run_pipeline
+
+    text = "20944 phoosrSeP veeEs. 66857-9m 5 t guneTonReRamNe"
+    assert classify(text)[0] == "en"
+    assert perplexity(text) > QUALITY["max_ppl"]
+    df = spark.createDataFrame([("https://p.example.com/1", text)],
+                               "url string, text string")
+    (row,) = run_pipeline(df, profile=profile).collect()
+    assert row.lang_pred == "en" and row.ppl > QUALITY["max_ppl"]
+    assert not row.keep and row.drop_reason == "perplexity"
 
 
 def test_url_score_native_matches_pure_twin(spark):

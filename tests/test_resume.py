@@ -69,9 +69,15 @@ def test_audit_lineage_rows(spark, tmp_path):
         assert r.snapshot_id is not None and r.wall_ms >= 0
 
 
-def _path_mode_audit_rows(spark, tmp_path, name, **opts):
-    run_quality_job(spark, str(tmp_path / "corpus"), str(tmp_path / name),
-                    str(tmp_path / f"{name}_audit"), groups=2, **opts)
+def _path_mode_audit_rows(spark, tmp_path, name, crash=False, **opts):
+    """Audit rows of a path-mode job over ``tmp_path/corpus``; with
+    ``crash`` the job first dies after group 0 and is then resumed."""
+    args = (spark, str(tmp_path / "corpus"), str(tmp_path / name),
+            str(tmp_path / f"{name}_audit"))
+    if crash:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_quality_job(*args, groups=2, fail_after_groups=1, **opts)
+    run_quality_job(*args, groups=2, **opts)
     return sorted(
         (r.partition_id, r.input_files, r.docs_in, r.docs_kept,
          r.docs_dropped, r.spans_scrubbed)
@@ -117,6 +123,49 @@ def test_audit_rows_reproducible_with_classifier(spark, tmp_path):
     assert _path_mode_audit_rows(spark, tmp_path, "two",
                                  classifier_model=str(model)) == first
     assert _path_mode_audit_rows(spark, tmp_path, "plain") == first
+
+
+def test_audit_rows_reproducible_with_ingest_drops(spark, tmp_path):
+    """The same with the ingest options that drop docs before the
+    pipeline — a domain blocklist and exact plus near recrawl keys —
+    and against a run that crashed after group 0 and resumed: every
+    group writes the same files, so the audit rows, partition_id
+    included, are equal."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from pii_spark.spark.incr_dedup import base_keys
+
+    corpus_dir = str(tmp_path / "corpus")
+    corpus = generate_corpus(spark, 80)
+    corpus.repartition(4).write.parquet(corpus_dir)
+    urls = sorted(r.url for r in corpus.select("url").collect())
+    # base: 10 docs verbatim (exact recrawls) and 10 with an edited
+    # tail (near recrawls only)
+    base = corpus.filter(F.col("url").isin(urls[:20])).withColumn(
+        "text", F.when(F.col("url").isin(urls[10:20]),
+                       F.concat("text", F.lit(" Edited."))
+                       ).otherwise(F.col("text")))
+    keys = tmp_path / "keys"
+    fp, sig = base_keys(base, id_col="url", hashed=True)
+    fp.write.parquet(str(keys / "fp.parquet"))
+    sig.write.parquet(str(keys / "sig.parquet"))
+    (keys / "keys_meta.json").write_text(json.dumps(
+        {"shingle_len": 12, "stride": 5, "bands": 4, "text_col": "text",
+         "hashed": True}))
+    blocklist = str(tmp_path / "blocklist")
+    spark.createDataFrame([("blog.example.net",)], "domain string"
+                          ).write.parquet(blocklist)
+    opts = dict(domain_blocklist=blocklist, recrawl_keys=str(keys),
+                recrawl_near=True)
+
+    first = _path_mode_audit_rows(spark, tmp_path, "one", **opts)
+    dropped = set(urls[:20]) | {u for u in urls if "blog.example.net" in u}
+    assert sum(r[2] for r in first) == 80 - len(dropped)
+    assert _path_mode_audit_rows(spark, tmp_path, "two", **opts) == first
+    assert _path_mode_audit_rows(spark, tmp_path, "resumed", crash=True,
+                                 **opts) == first
 
 
 def test_time_travel(spark, tmp_path):
